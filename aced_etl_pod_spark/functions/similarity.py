@@ -949,9 +949,10 @@ def _packed_dots_norms(X4, qvec):
     ``X64 @ q`` / ``(X64*X64).sum(axis=1)`` on the full copy: each row's
     dot/norm is computed by the same BLAS/pairwise kernel on the same
     widened doubles, and row-block splitting cannot change a row-local
-    reduction (asserted per batch by tools/q8_widen_ab.py's verify
-    kernel on the real corpus; the einsum alternative was measured
-    faster still but NOT bit-identical — recorded negative)."""
+    reduction (asserted per batch by the x800 widen A/B's verify
+    kernel on the real corpus, OPTIMIZATION_r13.md item 4; the einsum
+    alternative was measured faster still but NOT bit-identical —
+    recorded negative)."""
     n = X4.shape[0]
     dots = np.empty(n)
     norms = np.empty(n)

@@ -310,7 +310,8 @@ def agg_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     KERNEL-DISPATCHED since round 11: past ~1 M events the op answers
     via the decomposable bitmask plan (agg_distinct_count_bitmask — ONE
     exchange of (user, mask) longs with map-side bit_or; A/B in
-    tools/q10_ab.py: 2.0x at x200, 2.1x at x800, ratio vs DuckDB
+    PLANS.md "Round-11: q10 multi-distinct": 2.0x at x200, 2.1x at x800,
+    ratio vs DuckDB
     3.16x -> 1.49x). Below the knee the pair plan wins (the bitmask
     path's one-time type-dictionary job doesn't amortize at the job
     floor). Same oracle either way; dispatch count from parquet
@@ -356,7 +357,8 @@ def _event_type_dictionary(sf_dir: str, fingerprint: str) -> tuple[str, ...]:
     like tables.table_row_count: at 100 TB this is ingest-maintained
     catalog metadata (the shredded-JSON posture — pay at write time),
     not per-query work; the A/B reports its one-time cost alongside the
-    per-query win (tools/q10_ab.py). The active session is resolved
+    per-query win (PLANS.md "Round-11: q10 multi-distinct"). The active
+    session is resolved
     internally so the cache key stays (sf_dir, fingerprint)."""
     from pyspark.sql import SparkSession
 
@@ -404,7 +406,7 @@ def agg_distinct_count_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vs the pair-dedup plan (agg_distinct_count): the exchange carries
     (long, long) masks instead of (long, string) pairs and the second
-    distinct stage disappears. Interleaved A/B (tools/q10_ab.py):
+    distinct stage disappears. Interleaved A/B (PLANS.md round-11 q10):
     x200 0.91 vs 1.84 s (2.0x), x800 2.89 vs 6.15 s (2.1x) — ratio vs
     DuckDB 3.16x -> 1.49x at x800. The in-plan dictionary variant
     (distinct+broadcast join, no cache) measured SLOWER than the pair

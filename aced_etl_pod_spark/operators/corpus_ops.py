@@ -2446,7 +2446,7 @@ SCAN_FIXED_WIDTH_ORACLE = """
 # write+parse round-trip must recover exactly this projection — the same
 # recompute-from-source pattern as the sink round-trips. The FACTORY
 # oracle above (re-parsing the physical file in DuckDB) stays as the
-# stronger file-level check in tests/test_queue7.py + tools/queue_parity.
+# stronger file-level check in tests/test_queue7.py.
 SCAN_FIXED_WIDTH_STATIC_ORACLE = """
     SELECT o_orderkey, o_custkey, o_orderstatus,
            -- width-12 layout field: a rendered price that doesn't fit is

@@ -263,7 +263,7 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: RFC 8259 number grammar (leading-zero rejecting), shared by the JSON
-#: fast path and its A/B tool (tools/q6_ab.py).
+#: fast path (PLANS.md "Round-11 (post-verdict session): q6 kernel").
 _JSON_NUM_RX = r"-?(?:0|[1-9]\d*)(?:\.\d+)?(?:[eE][+-]?\d+)?"
 
 
@@ -299,7 +299,8 @@ def json_key_double_fastpath(props_col, key: str):
     2. REGEX NUMBER GRAMMAR: the anchored extract above, for
        fractional/exponent literals tier 1 can't certify.
 
-    Measured (tools/q6_ab.py, honest interleaved protocol): x200
+    Measured (PLANS.md round-11 q6 kernel + x800 ladder, honest
+    interleaved protocol): x200
     from_json 8.67 s → regex tier 2.70 s (3.2x); x800 pure from_json
     12.9 s → regex tier 3.9-4.2 s → **integer tier 1.90 s (6.8x
     total, 2.75x vs DuckDB)**. Parquet scan floor 0.42 s. The
@@ -571,7 +572,8 @@ def _schema_shredded_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     Both the raw envelopes (``raw/``) and the shredded columns
     (``shred/``) persist under one fingerprint so the payoff is
     measurable: query-over-shred vs query-over-raw-parse on identical
-    data (tools/shred_ab.py). Atomic publish + age-gated eviction, the
+    data (PLANS.md "Round-11: schema-driven shred-at-ingest"). Atomic
+    publish + age-gated eviction, the
     ivfserve2/shred idiom. Empty corpus publishes an empty shred with
     the stable 5-column schema (the inference sample is empty, so the
     schema comes from the contract, not the data)."""

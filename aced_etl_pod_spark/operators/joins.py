@@ -245,7 +245,7 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAYOUT-DISPATCHED since round 11 (the q7-kernel idiom): past ~1 M
     orders the op answers from the bucketed-colocated custkey layout
     (join_left_semi_bucketed — SMJ with zero exchanges; interleaved A/B
-    in tools/q4_bucketed_ab.py: 3.2x at x200, 4.0x at x800, ratio vs
+    in PLANS.md "Round-11: q4 semi join": 3.2x at x200, 4.0x at x800, ratio vs
     DuckDB 6.8x -> 1.71x, one-time layout write 16 s at x200,
     fingerprint-cached). Below the knee the plain Catalyst plan wins —
     at the sf0.1 job floor the 32-bucket scan + catalog round-trip cost

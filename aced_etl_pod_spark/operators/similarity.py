@@ -125,7 +125,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query side broadcast; scan side never shuffles — at 100 TB this is one
     pass + a TakeOrdered.
 
-    KERNEL-DISPATCHED since round 12 (tools/q8_exact_ab.py): past ~50 k
+    KERNEL-DISPATCHED since round 12 (PLANS.md "Round-12: q8-exact"):
+    past ~50 k
     vectors the op answers via the mapInArrow gemm kernel
     (sim_cosine_topk_arrow's plan) — x10 0.20 vs 0.33 s, x200 0.49 vs
     1.51 s, x800 1.17 vs 2.90 s (ratio vs DuckDB 7.1x → 2.9x); below
@@ -138,7 +139,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     saves when every cell is probed anyway (PLANS.md round-12).
 
     PACKED-LAYOUT since the round-12 optimization session
-    (tools/q8_packed_ab.py): the arrow kernel was decomposed as 100 %
+    (OPTIMIZATION_r12.md q8_cosine_topk): the arrow kernel was decomposed
+    as 100 %
     Arrow-transfer-bound (a mapInArrow pass-through costs the full
     kernel's wall at x800; the gemm adds ~nothing), so past the same
     knee the dispatch now reads the ingest-time packed float32-binary
@@ -162,7 +164,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: x1 (8 k vectors): arrow 1.4x slower (worker roundtrip); x10 (80 k):
-#: 1.6x faster — 50 k splits the bracket (tools/q8_exact_ab.py).
+#: 1.6x faster — 50 k splits the bracket (PLANS.md "Round-12: q8-exact").
 _ARROW_COSINE_MIN_VECS = 50_000
 
 
@@ -1769,9 +1771,14 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rows.append((path, phash64(img), None))
                 except Exception as exc:  # noqa: BLE001 - quarantine
                     rows.append((path, None, str(exc)[:80]))
-            yield pd.DataFrame(
-                rows, columns=["path", "phash", "decode_error"]
+            # object columns, then nullable Int64: a quarantined blob's
+            # None would otherwise make the batch's hashes float64 and
+            # drop their low bits (53-bit mantissa)
+            out = pd.DataFrame(
+                rows, columns=["path", "phash", "decode_error"], dtype=object
             )
+            out["phash"] = out["phash"].astype("Int64")
+            yield out
 
     hashed = blobs.mapInPandas(
         hash_batch, "path string, phash long, decode_error string"

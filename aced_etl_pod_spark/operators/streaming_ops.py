@@ -435,13 +435,9 @@ def stream_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(kept_keys, "t_curation", "append")
 
 
-# Round-6 registration queue: the r05 driver window is full (26 round-4
-# ops + 22 round-5 ops + the int8/pagerank re-checks the round-4 VERDICT
-# explicitly requires). This op is finished and locally oracle-verified
-# (tests/test_parity.py::test_round6_queue_parity); round 6 moves it into
-# the rotated window via @op. Deferring REGISTRATION (not code) keeps the
-# census-freshness gate honest: every registered op stays externally
-# checkable.
+# Finished in round 5 and registered in round 6 (PLANS.md "Consolidated
+# queue verification (round-5c close)"); its parity runs in
+# tests/test_parity.py::test_oracle_parity_slow with the other stream_ ops.
 STREAM_SLIDING_TOPK_ORACLE = f"""
     WITH shifted AS (
       SELECT time_bucket(INTERVAL '15 minutes', ts) - (k * INTERVAL '15 minutes')

@@ -65,7 +65,8 @@ def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       round-10). Since round 11 the kernel is
       :func:`_tokenize_partial_arrow`: same count, plus per-batch
       partial aggregation so the return transfer is rows-per-lang, not
-      rows-per-doc (x800 1.56 -> 1.38 s; tools/q7_ab.py). Identical
+      rows-per-doc (x800 1.56 -> 1.38 s; PLANS.md round-11 q7 residue).
+      Identical
       counts by construction, same oracle, hash-verified both ways.
 
     The r9 A/B already rejected the JVM allocation-free rewrite
@@ -81,7 +82,8 @@ def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-12: past ~1 M docs the op answers from the tokenize-at-
         # ingest layout (text_tokenize_stats_ingest) — 72% of the Arrow
         # kernel's wall was transfer of the text bytes INTO Python
-        # (tools/q7_ab.py decomposition), so stop shipping the bytes at
+        # (PLANS.md round-11 q7 residue decomposition), so stop shipping
+        # the bytes at
         # query time entirely, the q1/q6 storage-layer move.
         return text_tokenize_stats_ingest(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
@@ -125,7 +127,8 @@ def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ARROW_TOKENIZE_MIN_DOCS = 100_000
 
 #: Past this corpus size the one-time tokenize-at-ingest pass amortizes
-#: in ~1 query (x200 A/B, tools/q7_ab.py) — below it the job floor
+#: in ~1 query (x200 A/B, PLANS.md "Round-12: q7 falls the same way") —
+#: below it the job floor
 #: dominates and the Arrow kernel is already at that floor.
 _TOKENIZE_INGEST_MIN_DOCS = 1_000_000
 
@@ -250,7 +253,8 @@ def _tokenize_partial_arrow(batches):
     lang (count_all / integer sum / count / max partials) instead of one
     row per document, so the Python->JVM return transfer and the
     downstream group-agg shrink by ~batch_size/n_langs. The decomposition
-    (tools/q7_ab.py) showed 72% of the kernel op's wall is Arrow transfer
+    (PLANS.md "Round-11: q7 residue") showed 72% of the kernel op's wall
+    is Arrow transfer
     of the text bytes INTO Python (irreducible: the strings are the
     input); this claws back the return leg: x800 1.56 -> 1.38 s (ratio
     6.8x -> 6.0x), neutral at x200. Integer sums make the final
@@ -1453,7 +1457,8 @@ def text_line_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is preserved for the downstream mixture accounting.
     Dedup-ladder A/B at x40 (200 k docs): 9.24 -> 5.13 s (r12 s1 digest
     window) -> 3.34 s (r12 s3: regex spans + binary key; closing
-    tools/linededup_ab.py row = 1.08x vs DuckDB 3.10 s). Sorted-rows
+    A/B row = 1.08x vs DuckDB 3.10 s; PLANS.md round-12 optimization
+    session 3, line-dedup). Sorted-rows
     equal to the oracle at every step."""
     # null-text docs have no lines to dedup — excluded on both sides
     # (the oracle's spans CTE never yields a row for them)

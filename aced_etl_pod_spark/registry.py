@@ -35,236 +35,18 @@ class Op:
 _REGISTRY: dict[str, Op] = {}
 
 # Driver-visibility rotation. The external correctness harness verifies the
-# FIRST 50 registry entries in iteration order. Round 1 verified the
-# relational core; rounds 2-5 rotated through UDF/text/dedup/similarity/
-# scale/streaming/txnlog/PQ families (CORRECTNESS_r02-r05; r05 was a perfect
-# 46-pass/4-rows-only run). Round-6 window (VERDICT r5 items 1/2/5/7 + SURVEY
-# §11 rotation TODO) = the 4 re-checks/upgrades (win_gap_islands made
-# non-vacuous; multimodal_feature_embed_topk upgraded to a partial oracle;
-# the two txnlog read ops rebuilt from a real sf-dir lineitem slice) + the 22
-# round-5b queue ops registered this round (incremental view maintenance,
-# cascading rollups, EWMA, SemDeDup, TWAP, covariance/PCA-whiten partials,
-# histogram quantiles, importance sampling, txnlog write path: z-order /
-# equality deletes / bloom index / MERGE batch+streaming, label propagation,
-# ngram containment, SCD2 point-in-time join, hostile-CSV round-trip) + 24 of
-# the 29 stale-r01 relational-core ops in SURVEY §11 item-2 order.
+# FIRST 50 registry entries in iteration order. ``driver_window()`` below
+# picks them from the CORRECTNESS_r*.json files committed at the repo root:
+# the pending changed ops first, then the registered ops whose external rows
+# are oldest. The window therefore rotates itself each round, and the gate
+# tests in tests/test_parity.py verify the rule rather than a manual list.
 #
-# Rotation plan for the remaining EXTERNAL verification (kept current; the
-# freshness gate in tests/test_parity.py enforces it). As of round 6 every
-# finished queue op is ALREADY REGISTERED (tools/register_queue.py — the
-# whole census is in the registry, local-parity-gated at sf0.001/0.01);
-# what rotates now is only which 50 get their external CORRECTNESS row:
-#   r07 window: remaining stale-r01 core (agg_grouping_sets agg_rollup
-#     agg_cube agg_having agg_collect_list_sorted win_row_number_topk
-#     win_rank_dense win_lag_lead win_running_sum win_sliding_avg
-#     win_ntile_pct sort_multi_key limit_topk_global set_union = 14 slots) +
-#     queue tranches 8-17 in tranche order = 36 slots (_ROTATION_PLAN[7]).
-#   r08 window: tranches 18-35 (multiprobe LSH, txnlog branches/result
-#     cache/overwrite, HLL portable family, stat suite start)
-#     (_ROTATION_PLAN[8]).
-#   r09 window: tranches 36-60 (stats/TS/LLM-prep/Spark-4 surfaces/graph/
-#     governance, _ROTATION_PLAN[9]) + oldest-external-row backfill to 50;
-#     any ops still short land r10.
-# The LAST manually-rotated window (round 6). From round 7 on the window
-# rotates ITSELF: ``driver_window()`` below reads the CORRECTNESS_r*.json
-# files committed at the repo root, finds the next external round, and
-# emits that round's _ROTATION_PLAN slice (backfilled to 50 with the
-# registered ops whose external rows are OLDEST). Rotation is therefore
-# no longer a per-session chore the next builder could forget — the gate
-# tests now verify the automation instead of the manual swap.
-_R06_WINDOW = (
-    # -- re-checks / upgrades (VERDICT r5 items 2, 5, 7) --
-    "win_gap_islands",
-    "multimodal_feature_embed_topk",
-    "scan_txnlog_snapshot",
-    "txnlog_change_feed",
-    # -- round-5b queue, registered this round (SURVEY §11 item 1) --
-    "mv_incremental_refresh",
-    "agg_cascading_rollup",
-    "win_ewma",
-    "dedup_semantic_cluster",
-    "win_time_weighted_avg",
-    "embedding_covariance_topk",
-    "sample_importance_weighted",
-    "mv_incremental_join_view",
-    "agg_histogram_quantile_merge",
-    "embedding_pca_whiten",
-    "win_anomaly_zscore",
-    "stream_sliding_topk",
-    "join_asof_nearest",
-    "sink_csv_roundtrip",
-    "txnlog_zorder_cluster",
-    "txnlog_equality_deletes",
-    "txnlog_bloom_index_lookup",
-    "txnlog_merge_upsert",
-    "stream_txnlog_merge_upsert",
-    "graph_label_propagation",
-    "dedup_ngram_containment",
-    "join_scd2_temporal",
-    # -- stale-r01 relational core refresh (SURVEY §11 item 2) --
-    "flatten_struct",
-    "fn_string",
-    "fn_date",
-    "fn_math",
-    "fn_conditional",
-    "fn_array",
-    "fn_map",
-    "fn_json",
-    "fn_cast",
-    "join_inner_hash",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_broadcast",
-    "join_theta_range",
-    "join_cross",
-    "join_multiway_star",
-    "join_asof_event",
-    "agg_count_filtered",
-    "agg_group_sums",
-    "agg_distinct_count",
-    "agg_min_max_first",
-)
-
-# Machine-enforced rotation plan for the remaining verification queue
-# (VERDICT r5 item 6). Keys are external CORRECTNESS round numbers; values
-# are the op IDs whose external row is DUE that round. The freshness gate
-# (tests/test_parity.py::test_rotation_plan_enforced) fails if:
-#   * a plan round has arrived (latest CORRECTNESS_r{N} == round-1) and the
-#     session's driver_window() doesn't contain every planned op, or
-#   * a plan round has passed and any planned op still has no external row.
-# Round 7 = the 14 remaining r01-core windows/sorts/sets + queue tranches
-# 8-17 in tranche order. All planned ops are already registered (round-6
-# early registration). After the round-6 oracle-upgrade sweeps
-# (recursive-CTE replays, sha256-based minhash/simhash,
-# fixture-regeneration multimodal, BPE whole-table recursion, the
-# pinned-fold k-means that made the whole PQ/IVF ANN family replayable,
-# and the pinned-matmul DCT that did the same for image phash) the last
-# rows-only op — embedding_pca_whiten — went FULL-oracle in round 8:
-# LAPACK eigh was replaced by a fixed-K Newton-Schulz inverse square
-# root whose k-ordered-fold matmuls replay bit-exactly in a DuckDB
-# recursive CTE. EVERY census op now carries a full hash-checked
-# oracle. Rounds 8-9 drain tranches
-# 18-60; the r09 window backfills
-# its remaining ~20 slots with whatever registered ops then have the
-# OLDEST external rows (r02-era extras first) — backfill is chosen at
-# rotation time, so only the queue ops are pinned here.
-_ROTATION_PLAN = {
-    7: (
-        # stale-r01 relational core, final slice
-        "agg_grouping_sets", "agg_rollup", "agg_cube", "agg_having",
-        "agg_collect_list_sorted", "win_row_number_topk", "win_rank_dense",
-        "win_lag_lead", "win_running_sum", "win_sliding_avg", "win_ntile_pct",
-        "sort_multi_key", "limit_topk_global", "set_union",
-        # queue tranches 8-17
-        "join_geo_gridded_radius", "agg_geo_grid_density", "dq_k_anonymity",
-        "fn_pseudonymize_consistent", "fn_ip_cidr_classify", "graph_bfs_khop",
-        "win_event_sequence_regex", "ts_interpolate_linear",
-        "text_readability_score", "seq_pack_bins_ffd", "text_bpe_train_merges",
-        "sample_reservoir_per_group", "join_geo_point_in_polygon",
-        "join_interval_overlap", "text_search_boolean", "hierarchy_unroll_paths",
-        "agg_sample_estimate_ci", "dedup_exact_substring_spans",
-        "agg_weighted_percentile", "win_drawdown_runmax",
-        "join_geo_nearest_broadcast", "tokenizer_apply_bpe",
-        "stat_chi_square_independence", "agg_frequent_pairs_market_basket",
-        "feature_one_hot_encode", "feature_standard_scale",
-        "multimodal_audio_features", "stream_anomaly_window_zscore",
-        "dq_freshness_slo", "dq_schema_contract", "sim_mmr_diversified_topk",
-        "win_period_over_period", "pipeline_rag_context_pack",
-        "sim_ann_lsh_multiprobe_topk", "win_percent_rank_cume",
-        # (embedding_pca_whiten sat here through its r07 external row; the
-        # r8 verdict re-pinned it to round 10 — see the plan[10] comment —
-        # so its r8 full-oracle Newton-Schulz upgrade gets a fresh external
-        # hash row. Plan rounds must stay disjoint, hence the move.)
-    ),
-    8: (
-        # r6 verdict item 4: the 11 ops whose oracles were upgraded from
-        # rows-only to full DuckDB replays in round 6 (sha256 minhash/simhash,
-        # recursive-CTE closure, replayed LSH/IVF/PQ training, fixture-
-        # regeneration multimodal) — their latest external rows are stale
-        # r03-r05 `no_oracle`; pin them here so the upgrades get external
-        # hash confirmation (12 prior tail entries displaced to r09)
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_cluster_cc",
-        "sim_ann_lsh_topk", "sim_ann_ivf_topk", "multimodal_binary_meta",
-        "multimodal_frame_sample", "multimodal_resize", "embedding_pq_codes",
-        "sim_ann_pq_adc_topk", "sim_ann_ivf_pq_topk",
-        "scan_date_dim_generate",
-        "fn_surrogate_key_md5", "txnlog_overwrite_partition",
-        "win_streak_longest_current", "agg_attribution_last_touch",
-        "txnlog_branch_merge", "plan_result_cache", "scan_fixed_width",
-        "ts_seasonal_decompose", "win_outlier_mad", "scan_multiline_json",
-        "scan_file_provenance", "udtf_table_argument", "agg_hll_portable",
-        "graph_shortest_path_weighted", "agg_kmv_set_intersection",
-        "agg_conversion_lag_percentiles", "win_rolling_regression_slope",
-        "agg_hll_sliding_distinct", "dedup_incremental_minhash",
-        "dq_k_anonymity_generalize", "txnlog_cdc_replay_reconstruct",
-        "txnlog_check_constraints", "stream_checked_ingest_dlq",
-        "agg_gini_coefficient", "agg_entropy_categorical",
-        "text_vocab_growth_heaps", "agg_markov_transition_matrix",
-        "fn_ab_test_proportions", "text_zipf_rank_frequency",
-        "agg_benford_digit_test", "win_cusum_changepoint",
-        "win_survival_kaplan_meier", "text_ngram_lm_score",
-        "stat_ks_two_sample", "ts_autocorrelation", "stat_mann_whitney_u",
-        "graph_jaccard_link_prediction", "dp_noisy_count_laplace",
-    ),
-    9: (
-        # displaced from the r08 tail by the 12 upgraded-oracle pins above
-        "join_fuzzy_phonetic_blocked", "agg_event_path_topk",
-        "stat_t_test_welch", "ts_forecast_snaive_backtest", "ts_holt_winters",
-        "ts_seasonal_residual_anomaly", "sql_recursive_cte_native",
-        "scan_json_variant", "stat_bootstrap_poisson_ci",
-        "ts_cross_correlation", "udf_scalar_arrow", "scan_python_datasource",
-        "stream_python_datasource", "seq_sft_chat_render",
-        "join_point_in_time_features", "graph_cc_large_star_small_star",
-        "text_line_dedup_c4", "fn_unicode_normalize_nfc",
-        "pipeline_mixture_rebalance", "agg_moments_mergeable_chan",
-        "stream_checkpoint_restart", "seq_dpo_preference_pairs",
-        "dedup_ppjoin_prefix_filter", "dedup_image_phash",
-        "sql_parameterized_query", "pipeline_pretrain_corpus_e2e",
-        "agg_ohlc_bars", "dq_cross_table_reconciliation",
-        "graph_modularity_score", "agg_rfm_segmentation",
-        "agg_abc_pareto_analysis", "stat_power_sample_size",
-        "feature_target_encoding_loo", "feature_woe_information_value",
-        "dedup_winnowing_fingerprints", "graph_assortativity",
-        "stat_fdr_benjamini_hochberg", "win_vwap_bars",
-        "agg_causal_diff_in_diff", "agg_cuped_variance_reduction",
-        "graph_kcore_membership", "ts_kalman_filter_1d",
-        # round-6 session-5 additions (Spark API surfaces)
-        "dq_observe_metrics", "stream_dedup_within_watermark",
-        # round-6 session-7 additions (Spark API surfaces)
-        "stream_state_store_reader", "fn_xml_roundtrip",
-        "fn_aes_deterministic", "dq_join_cardinality_audit",
-        "dq_table_content_digest",
-        # round-7 addition: the mapInArrow exact-cosine kernel (50th slot)
-        "sim_cosine_topk_arrow",
-    ),
-    # round-8 addition, pinned PAST the r09 drain so the pre-verified r09
-    # window stays byte-identical: the incremental-IVF op takes an r10
-    # slot. r8 verdict item 2 pins embedding_pca_whiten beside it — its
-    # only external history is a r06 canonicalizer crash + a r07
-    # rows-only row, while the r8 Newton-Schulz rewrite is full-oracle
-    # locally; r10 is the first window after the r09 drain that can carry
-    # it. (Moved here from plan[7], where its r07 row already satisfied
-    # the past-round gate; plan rounds must stay disjoint.) r10's other
-    # 48 slots stay oldest-row backfill as planned.
-    # (+ the round-9 closing addition sim_ann_ivf_serve_batch — the
-    # persisted-index batch-serving path, registered after the r09
-    # window was frozen, so it takes the third r10 pin; the remaining
-    # 47 slots stay oldest-row backfill.)
-    10: (
-        "sim_ann_ivf_append_probe",
-        "embedding_pca_whiten",
-        "sim_ann_ivf_serve_batch",
-    ),
-}
-
-# Ops whose semantics-sensitive code changed in an optimization round and
-# therefore need a FRESH external CORRECTNESS row ahead of the oldest-first
-# rotation (round-13 verdict item 2). Entry = (op_id, round the change needs
-# a row in); the entry is inert once a row from that round (or later) lands,
-# so the steady-state rotation resumes untouched.
+# Pending changed ops: ops whose semantics-sensitive code changed in an
+# optimization round and therefore need a FRESH external CORRECTNESS row
+# ahead of the oldest-first rotation (round-13 verdict item 2). Entry =
+# (op_id, round the change needs a row in); the entry is inert once a row
+# from that round (or later) lands, so the steady-state rotation resumes
+# untouched.
 #   * text_line_dedup_c4 / fn_json: r12 rewrites (regexp_extract_all spans,
 #     try_cast hardening) were verified by driver-run pytest only.
 #   * the three r13 quadratic-block hardenings (degenerate-block caps /
@@ -335,13 +117,9 @@ def _external_rows() -> dict[str, int]:
 
 def driver_window() -> tuple[str, ...]:
     """The ACTIVE 50-slot external-verification window, self-rotating:
-
-    * next external round ≤ 6 → the static round-6 window (_R06_WINDOW);
-    * next round in _ROTATION_PLAN → that round's planned ops, backfilled
-      to 50 with the registered ops whose external rows are oldest
-      (never-checked first, then by ascending last-checked round, op id
-      as the total-order tie-break);
-    * past the plan (round ≥ 10) → pure oldest-row backfill, forever.
+    the pending changed ops (below), then the registered ops whose
+    external rows are oldest (never-checked first, then by ascending
+    last-checked round, op id as the total-order tie-break).
 
     Changed-ops-first rule (round-13 verdict item 2): an op whose
     SEMANTICS-SENSITIVE code changed in an optimization round sorts
@@ -355,22 +133,13 @@ def driver_window() -> tuple[str, ...]:
     Reads only repo-committed CORRECTNESS files, so the window the driver
     sees at round end is exactly the window the gate tests verified."""
     rows = _external_rows()
-    # every round checks a non-empty window, so the max per-op round equals
-    # the newest CORRECTNESS file present
-    nxt = max(rows.values(), default=0) + 1
-    if nxt <= 6:
-        return _R06_WINDOW
-    planned = _ROTATION_PLAN.get(nxt, ())
     for mod in _MODULES:
         importlib.import_module(mod)
-    changed = tuple(
+    head = tuple(
         o
         for o, changed_round in _CHANGED_OPS_PENDING
-        if o in _REGISTRY
-        and o not in set(planned)
-        and rows.get(o, 0) < changed_round
+        if o in _REGISTRY and rows.get(o, 0) < changed_round
     )
-    head = changed + tuple(planned)
     fill = sorted(
         (o for o in _REGISTRY if o not in set(head)),
         key=lambda o: (rows.get(o, 0), o),

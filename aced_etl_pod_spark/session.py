@@ -84,6 +84,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM, capped at 32g: a fixed 32g heap on a smaller
+    machine lets the local JVM grow until the OS kills it."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(ram_mb // 2, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "aced_etl_pod_spark",
     shuffle_partitions: int | None = None,
@@ -100,7 +107,10 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         # Spark's 10 MB default, NOT raised: the r9 honest-protocol ladder
         # caught the 64 MB setting broadcasting a 6M-key pruned fact column

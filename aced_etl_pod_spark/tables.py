@@ -153,7 +153,7 @@ def load_validated_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     — non-null, every lane finite and |x| < 1e12) is an INPUT contract,
     not query logic, and enforcing it per query costs a measured
     +1.6 µs/row = +17% of the exact cosine kernel at 400 k rows
-    (tools/guard_ab.py; PLANS.md round-8). This helper enforces it ONCE:
+    (PLANS.md "Round-8: finite_vec guard A/B"). This helper enforces it ONCE:
     the first access per source fingerprint writes a validated parquet
     copy to scratch; every later scan reads pre-validated vectors with
     zero per-row guard work.

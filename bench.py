@@ -80,13 +80,13 @@ BENCH_QUERIES = {
     # answers from the bucketed-colocated custkey layout (zero-exchange
     # SMJ, 3.2x at x200 / 4.0x at x800, ratio 6.8x -> 1.71x; one-time
     # layout write fingerprint-cached); at sf0.1 it keeps the plain
-    # Catalyst plan, which wins at the job floor. tools/q4_bucketed_ab.py.
+    # Catalyst plan, which wins at the job floor. PLANS.md round-11 q4.
     "q4_semi_anti": "join_left_semi",
     "q5_tumbling": "agg_time_bucket",
     # q6's op ships the anchored-regex raw-string fast path since round
     # 11 (json_key_double_fastpath: single-key envelopes skip Jackson
     # entirely, everything else falls back to from_json — semantics
-    # identical by construction, 3.2x at x200; tools/q6_ab.py). The
+    # identical by construction, 3.2x at x200; PLANS.md round-11 q6). The
     # shred-at-ingest family remains the architectural answer for owned
     # corpora; this is the query-path kernel for ad-hoc JSON.
     "q6_json_extract": "fn_json",
@@ -101,7 +101,7 @@ BENCH_QUERIES = {
     # q10's op kernel-dispatches since round 11: past ~1 M events it
     # uses the decomposable bitmask plan (one exchange of (user, mask)
     # longs, 2.0x at x200 / 2.1x at x800, ratio 3.16x -> 1.49x); at
-    # sf0.1 it keeps the pair-dedup plan. tools/q10_ab.py.
+    # sf0.1 it keeps the pair-dedup plan. PLANS.md round-11 q10.
     "q10_distinct": "agg_distinct_count",
 }
 EXACT_Q8_OP = "sim_cosine_topk_fast"

@@ -17,6 +17,19 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def assert_gated(*pairs):
+    """Each (fn, oracle) pair is exactly a registered op's: the same
+    function object and the same oracle SQL. tests/test_parity.py then
+    runs its DuckDB differential check at SF_SMALL, once per op, so a
+    queue test need not run it a second time."""
+    from aced_etl_pod_spark.registry import registry
+
+    ops = {o.fn: o for o in registry().values()}
+    for fn, oracle in pairs:
+        assert fn in ops, f"{fn.__name__} is not registered"
+        assert ops[fn].oracle == oracle, f"{fn.__name__}: oracle differs"
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=8)

@@ -71,35 +71,56 @@ def test_driver_window_order():
 
 def test_driver_window_self_rotation():
     """driver_window() rotates itself from the committed CORRECTNESS
-    files: for every future plan round, simulate that round being next
-    and check the emitted window is the plan slice backfilled to exactly
-    50 registered ops with the oldest external rows first."""
+    files: after the pending changed ops, the window is backfilled to
+    exactly 50 registered ops, oldest external row first with op id as
+    the tie-break, and no op left out is older than one let in. Checked
+    on the committed rows and with the next round landed."""
     from unittest import mock
 
     from aced_etl_pod_spark import registry as regmod
 
     rows = regmod._external_rows()
-    latest = max(rows.values(), default=0)
-    for r, planned in regmod._ROTATION_PLAN.items():
-        if r <= latest:
-            continue
-        fake = dict(rows)
-        fake["__probe__"] = r - 1  # pretend round r-1 already ran
+    landed = max(rows.values(), default=0) + 1
+    nxt = dict(rows)
+    nxt.update({o: landed for o in regmod.driver_window()})
+    for fake in (rows, nxt):
         with mock.patch.object(regmod, "_external_rows", return_value=fake):
             win = regmod.driver_window()
         assert len(win) == 50 and len(set(win)) == 50
-        assert list(win[: len(planned)]) == list(planned)
-        fill = win[len(planned):]
-        assert all(o in REG for o in fill)
-        # backfill is oldest-external-row first, op id as tie-break
-        keys = [(rows.get(o, 0), o) for o in fill]
+        assert all(o in REG for o in win)
+        pending = [
+            o for o, r in regmod._CHANGED_OPS_PENDING if fake.get(o, 0) < r
+        ]
+        assert list(win[: len(pending)]) == pending
+        keys = [(fake.get(o, 0), o) for o in win[len(pending):]]
         assert keys == sorted(keys)
-    # beyond the plan: pure backfill, still a full valid window
-    fake = dict(rows)
-    fake["__probe__"] = max(regmod._ROTATION_PLAN) # next = max+1, unplanned
-    with mock.patch.object(regmod, "_external_rows", return_value=fake):
+        left_out = [(fake.get(o, 0), o) for o in REG if o not in win]
+        assert not keys or min(left_out) > keys[-1]
+
+
+def test_changed_ops_lead_until_their_round_lands():
+    """Changed-ops-first rule: a pending op sorts ahead of the
+    oldest-first backfill, even when its external row is the newest,
+    and drops back into the backfill once a row from its round lands."""
+    from unittest import mock
+
+    from aced_etl_pod_spark import registry as regmod
+
+    ops = sorted(REG)
+    rows = {o: 10 for o in ops}
+    newest = ops[0]
+    rows[newest] = 12
+    with (
+        mock.patch.object(regmod, "_external_rows", return_value=dict(rows)),
+        mock.patch.object(regmod, "_CHANGED_OPS_PENDING", ((newest, 13),)),
+    ):
         win = regmod.driver_window()
-    assert len(win) == 50 and all(o in REG for o in win)
+        assert win[0] == newest and len(win) == 50
+        rows[newest] = 13
+        regmod._external_rows.return_value = dict(rows)
+        win = regmod.driver_window()
+        assert newest not in win and len(win) == 50
+        assert list(win) == ops[1:51]
 
 
 def test_operators_md_fresh():
@@ -142,119 +163,25 @@ def test_operators_md_window_invariant():
 
 def test_census_fully_externally_verified_or_queued():
     """Freshness guard (VERDICT r4 item 9): every registered operator must
-    either already have an external CORRECTNESS_r*.json row, sit in the
-    current driver window (driver_window() — the slice the next
-    external run will check), or be pinned to a specific FUTURE round in
-    _ROTATION_PLAN (whose execution test_rotation_plan_enforced enforces:
-    the plan's window must be rotated to when its round arrives, and its
-    ops must have external rows once it passes). New ops therefore cannot
-    accumulate unverified: adding one without windowing or pinning it
-    fails this test."""
+    either already have an external CORRECTNESS_r*.json row or sit in the
+    current driver window (driver_window() — the slice the next external
+    run will check). New ops therefore cannot accumulate unverified:
+    adding more than the window can take fails this test."""
     import glob
     import json
-    import os
 
-    from aced_etl_pod_spark.registry import _ROTATION_PLAN, driver_window
+    from aced_etl_pod_spark.registry import driver_window
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     seen: set[str] = set()
     for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
         with open(f) as fh:
             seen |= set(json.load(fh))
-    queued = set(driver_window())
-    planned = {o for ids in _ROTATION_PLAN.values() for o in ids}
-    missing = sorted(set(registry()) - seen - queued - planned)
+    missing = sorted(set(registry()) - seen - set(driver_window()))
     assert not missing, (
-        f"{len(missing)} ops have no external correctness row and are in "
-        f"neither the driver window nor _ROTATION_PLAN — queue them: {missing}"
+        f"{len(missing)} ops have no external correctness row and are not "
+        f"in the driver window — queue them: {missing}"
     )
-
-
-def test_rotation_plan_enforced():
-    """VERDICT r5 item 6: the r07-r09 verification-queue rotation is
-    machine-enforced, not aspirational. For each planned round R:
-      * R in the future  → every planned ID must exist as a def in some
-        operator module (typo guard — most are not yet registered);
-      * R == next round  → every planned op must sit in driver_window()
-        (self-rotation must emit the plan);
-      * R in the past    → every planned op must have an external
-        CORRECTNESS row (the plan was actually executed).
-    Rounds are disjoint and ≤50 (the driver window size)."""
-    import glob
-    import importlib
-    import json
-    import os
-    import re
-
-    from aced_etl_pod_spark.registry import _MODULES, _ROTATION_PLAN, driver_window
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds_seen = [
-        int(re.search(r"_r(\d+)", os.path.basename(f)).group(1))
-        for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-    ]
-    latest = max(rounds_seen) if rounds_seen else 0
-    verified: set[str] = set()
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            verified |= set(json.load(fh))
-
-    all_ids: set[str] = set()
-    for r, ids in _ROTATION_PLAN.items():
-        assert len(ids) <= 50, f"plan round {r} exceeds the 50-slot window"
-        overlap = all_ids & set(ids)
-        assert not overlap, f"op(s) planned twice: {sorted(overlap)}"
-        all_ids |= set(ids)
-
-    # typo guard: every planned ID must be a def in some operator module
-    defs: set[str] = set()
-    mods = set(_MODULES) | {
-        "aced_etl_pod_spark.operators.geo_ops",
-        "aced_etl_pod_spark.operators.governance_ops",
-    }
-    for m in mods:
-        mod = importlib.import_module(m)
-        defs |= {n for n in dir(mod) if callable(getattr(mod, n, None))}
-    unknown = sorted(all_ids - defs)
-    assert not unknown, f"planned ops with no matching def: {unknown}"
-
-    for r, ids in sorted(_ROTATION_PLAN.items()):
-        if r <= latest:
-            missed = sorted(set(ids) - verified)
-            assert not missed, (
-                f"round {r} has passed but these planned ops have no "
-                f"external CORRECTNESS row: {missed}"
-            )
-        elif r == latest + 1:
-            unqueued = sorted(set(ids) - set(driver_window()))
-            assert not unqueued, (
-                f"round {r} is next — driver_window() must emit the plan; "
-                f"missing: {unqueued}"
-            )
-
-
-def test_round6_queue_parity(spark, con):
-    """Ops finished in round 5 but deferred from registration (the r05
-    window is full with VERDICT-mandated re-checks): verify them against
-    their oracles with the same differential gate they'll face when
-    round 6 registers them."""
-    from aced_etl_pod_spark.operators.corpus_ops import (
-        JOIN_ASOF_NEAREST_ORACLE,
-        join_asof_nearest,
-    )
-    from aced_etl_pod_spark.operators.streaming_ops import (
-        STREAM_SLIDING_TOPK_ORACLE,
-        stream_sliding_topk,
-    )
-
-    for fn, oracle in [
-        (join_asof_nearest, JOIN_ASOF_NEAREST_ORACLE),
-        (stream_sliding_topk, STREAM_SLIDING_TOPK_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
 
 
 def test_rotation_drains_entire_census_within_bound():
@@ -262,7 +189,7 @@ def test_rotation_drains_entire_census_within_bound():
     machine guarantee): simulate external rounds forward — each round
     checks exactly driver_window() and lands rows for it — and assert
     EVERY registered op has an external row within 6 simulated rounds.
-    This proves the plan + oldest-first backfill actually drains the
+    This proves the oldest-first backfill actually drains the
     whole census (no op can hide forever), independent of which round
     we're in when the test runs."""
     from unittest import mock

@@ -1,7 +1,8 @@
 """Round-7 registration queue (geo-spatial + governance families, plus
-the later tranches added below as they land): the same differential gate
-these ops will face when the driver window rotates to them, plus the
-property each one's blocking / privacy guarantee promises."""
+the later tranches added below as they land): the property each one's
+blocking / privacy guarantee promises. Their DuckDB parity runs once, in
+tests/test_parity.py; the test_queue7_parity* tests assert (assert_gated)
+that the registered fn and oracle are exactly the ones named here."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from aced_etl_pod_spark.operators import geo_ops as geo
 from aced_etl_pod_spark.operators import governance_ops as gov
 from aced_etl_pod_spark.operators import llm_pipeline as llm
 from aced_etl_pod_spark.operators import text as txt
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_gated
 
 QUEUE = [
     (geo.join_geo_gridded_radius, geo.JOIN_GEO_GRIDDED_RADIUS_ORACLE),
@@ -36,11 +37,8 @@ def con():
 
 
 @pytest.mark.parametrize("fn,oracle", QUEUE, ids=[f.__name__ for f, _ in QUEUE])
-def test_queue7_parity(spark, con, fn, oracle):
-    sdf = fn(spark, SF_SMALL).toPandas()
-    ddf = con.execute(oracle).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, f"{fn.__name__}: {errs[:5]}"
+def test_queue7_parity(fn, oracle):
+    assert_gated((fn, oracle))
 
 
 def test_geo_grid_blocking_cannot_miss():
@@ -205,23 +203,16 @@ def test_ffd_matches_reference_greedy(spark):
     assert got == want
 
 
-QUEUE2 = [
-    (geo.join_geo_point_in_polygon, geo.JOIN_GEO_POINT_IN_POLYGON_ORACLE),
-]
+def test_queue7_parity_polygon():
+    assert_gated((geo.join_geo_point_in_polygon, geo.JOIN_GEO_POINT_IN_POLYGON_ORACLE))
 
 
-def test_queue7_parity_polygon(spark, con):
-    sdf = geo.join_geo_point_in_polygon(spark, SF_SMALL).toPandas()
-    ddf = con.execute(geo.JOIN_GEO_POINT_IN_POLYGON_ORACLE).fetchdf()
-    assert not compare(sdf, ddf)
-
-
-def test_queue7_parity_reservoir(spark, con):
+def test_queue7_parity_reservoir():
     from aced_etl_pod_spark.operators import sampling as smp
 
-    sdf = smp.sample_reservoir_per_group(spark, SF_SMALL).toPandas()
-    ddf = con.execute(smp.SAMPLE_RESERVOIR_PER_GROUP_ORACLE).fetchdf()
-    assert not compare(sdf, ddf)
+    assert_gated(
+        (smp.sample_reservoir_per_group, smp.SAMPLE_RESERVOIR_PER_GROUP_ORACLE),
+    )
 
 
 def test_polygon_containment_matches_shoelace_reference(spark):
@@ -336,14 +327,9 @@ QUEUE3 = [
 
 
 @pytest.mark.parametrize("name,mod", QUEUE3, ids=[n for n, _ in QUEUE3])
-def test_queue7_parity_tranche10(spark, con, name, mod):
+def test_queue7_parity_tranche10(name, mod):
     m = {"ext": ext, "txt": txt, "adv": adv}[mod]
-    fn = getattr(m, name)
-    oracle = getattr(m, name.upper() + "_ORACLE")
-    sdf = fn(spark, SF_SMALL).toPandas()
-    ddf = con.execute(oracle).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, f"{name}: {errs[:5]}"
+    assert_gated((getattr(m, name), getattr(m, name.upper() + "_ORACLE")))
 
 
 def test_hierarchy_paths_match_closed_form(spark):
@@ -396,17 +382,13 @@ def test_interval_blocking_emits_each_pair_once(spark):
     assert not pairs.duplicated().any()
 
 
-def test_queue7_parity_tranche11(spark, con):
+def test_queue7_parity_tranche11():
     from aced_etl_pod_spark.operators import sampling as smp
 
-    for fn, oracle in [
+    assert_gated(
         (smp.agg_sample_estimate_ci, smp.AGG_SAMPLE_ESTIMATE_CI_ORACLE),
         (txt.dedup_exact_substring_spans, txt.DEDUP_EXACT_SUBSTRING_SPANS_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_substring_spans_reference(spark):
@@ -454,16 +436,12 @@ def test_aqp_estimator_is_unbiased_shape(spark):
         assert abs(r.exact_sum - round(g.value.sum(), 2)) < 0.02
 
 
-def test_queue7_parity_tranche12(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche12():
+    assert_gated(
         (ext.agg_weighted_percentile, ext.AGG_WEIGHTED_PERCENTILE_ORACLE),
         (ext.win_drawdown_runmax, ext.WIN_DRAWDOWN_RUNMAX_ORACLE),
         (geo.join_geo_nearest_broadcast, geo.JOIN_GEO_NEAREST_BROADCAST_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_weighted_percentile_definition(spark):
@@ -549,19 +527,15 @@ def test_bpe_apply_matches_reference_tokenizer(spark):
         assert got[doc_id] == (len(words), n_sym), doc_id
 
 
-def test_queue7_parity_tranche13(spark, con):
+def test_queue7_parity_tranche13():
     from aced_etl_pod_spark.operators import corpus_ops as cor
 
-    for fn, oracle in [
+    assert_gated(
         (ext.stat_chi_square_independence, ext.STAT_CHI_SQUARE_ORACLE),
         (ext.agg_frequent_pairs_market_basket, ext.AGG_FREQUENT_PAIRS_ORACLE),
         (cor.feature_one_hot_encode, cor.FEATURE_ONE_HOT_ORACLE),
         (cor.feature_standard_scale, cor.FEATURE_STANDARD_SCALE_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_chi_square_against_scipy_formula(spark):
@@ -667,14 +641,12 @@ def test_wav_chunk_walker_handles_extra_chunks():
         decode_wav(blob[: len(blob) - 3])
 
 
-@pytest.mark.slow
-def test_queue7_parity_stream_anomaly(spark, con):
+def test_queue7_parity_stream_anomaly():
     from aced_etl_pod_spark.operators import streaming_ops as so
 
-    sdf = so.stream_anomaly_window_zscore(spark, SF_SMALL).toPandas()
-    ddf = con.execute(so.STREAM_ANOMALY_WINDOW_ZSCORE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+    assert_gated(
+        (so.stream_anomaly_window_zscore, so.STREAM_ANOMALY_WINDOW_ZSCORE_ORACLE),
+    )
 
 
 def test_wav_roundtrip_hypothesis():
@@ -702,15 +674,11 @@ def test_wav_roundtrip_hypothesis():
     check()
 
 
-def test_queue7_parity_tranche14(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche14():
+    assert_gated(
         (gov.dq_freshness_slo, gov.DQ_FRESHNESS_SLO_ORACLE),
         (gov.dq_schema_contract, gov.DQ_SCHEMA_CONTRACT_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_mmr_matches_reference_greedy(spark):
@@ -755,11 +723,8 @@ def test_mmr_matches_reference_greedy(spark):
     assert got == want
 
 
-def test_queue7_parity_tranche15(spark, con):
-    sdf = ext.win_period_over_period(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.WIN_PERIOD_OVER_PERIOD_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_tranche15():
+    assert_gated((ext.win_period_over_period, ext.WIN_PERIOD_OVER_PERIOD_ORACLE))
 
 
 def test_rag_pipeline_matches_reference(spark):
@@ -850,16 +815,12 @@ def test_multiprobe_lsh_recall_beats_single_probe(spark):
     assert multi >= 0.35, multi
 
 
-def test_queue7_parity_tranche16(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche16():
+    assert_gated(
         (ext.win_percent_rank_cume, ext.WIN_PERCENT_RANK_CUME_ORACLE),
         (ext.scan_date_dim_generate, ext.SCAN_DATE_DIM_GENERATE_ORACLE),
         (ext.fn_surrogate_key_md5, ext.FN_SURROGATE_KEY_MD5_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_surrogate_keys_collision_free_on_true_naturals(spark):
@@ -941,15 +902,11 @@ def test_partition_overwrite_acid(spark, con):
     assert current_version(table) == 3
 
 
-def test_queue7_parity_tranche18(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche18():
+    assert_gated(
         (ext.win_streak_longest_current, ext.WIN_STREAK_LONGEST_CURRENT_ORACLE),
         (ext.agg_attribution_last_touch, ext.AGG_ATTRIBUTION_LAST_TOUCH_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_streaks_reference(spark):
@@ -1169,17 +1126,13 @@ def test_hll_portable_registers_and_estimate(spark, con):
     assert merged == whole
 
 
-def test_queue7_parity_tranche24(spark, con):
+def test_queue7_parity_tranche24():
     from aced_etl_pod_spark.operators import corpus_ops as cor
 
-    for fn, oracle in [
+    assert_gated(
         (adv.graph_shortest_path_weighted, adv.GRAPH_SHORTEST_PATH_WEIGHTED_ORACLE),
         (cor.agg_kmv_set_intersection, cor.AGG_KMV_SET_INTERSECTION_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_weighted_paths_dominated_by_hops(spark):
@@ -1193,24 +1146,17 @@ def test_weighted_paths_dominated_by_hops(spark):
             assert wd[n] >= d, (n, wd[n], d)
 
 
-def test_queue7_parity_tranche25(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche25():
+    assert_gated(
         (ext.agg_conversion_lag_percentiles, ext.AGG_CONVERSION_LAG_ORACLE),
         (ext.win_rolling_regression_slope, ext.WIN_ROLLING_REGRESSION_SLOPE_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
-def test_queue7_parity_sliding_hll(spark, con):
+def test_queue7_parity_sliding_hll():
     from aced_etl_pod_spark.operators import corpus_ops as cor
 
-    sdf = cor.agg_hll_sliding_distinct(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.AGG_HLL_SLIDING_DISTINCT_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+    assert_gated((cor.agg_hll_sliding_distinct, cor.AGG_HLL_SLIDING_DISTINCT_ORACLE))
 
 
 def test_sliding_hll_estimates_track_exact(spark):
@@ -1261,11 +1207,8 @@ def test_incremental_minhash_equals_full_recompute(spark):
     assert a == b and len(a) > 0
 
 
-def test_queue7_parity_generalize(spark, con):
+def test_queue7_parity_generalize(spark):
     sdf = gov.dq_k_anonymity_generalize(spark, SF_SMALL).toPandas()
-    ddf = con.execute(gov.DQ_K_ANONYMITY_GENERALIZE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
     # the chosen level actually satisfies k, and the next-finer one doesn't
     assert sdf.n.min() >= gov._K
     import duckdb
@@ -1306,13 +1249,10 @@ def test_queue7_plan_shapes_late_tranches(spark):
     assert "HashAggregate" not in p and "Exchange" not in p.split("Sort")[0]
 
 
-def test_queue7_parity_cdc_replay(spark, con):
+def test_queue7_parity_cdc_replay():
     from aced_etl_pod_spark.operators import table_format as tf
 
-    sdf = tf.txnlog_cdc_replay_reconstruct(spark, SF_SMALL).toPandas()
-    ddf = con.execute(tf.TXNLOG_CDC_REPLAY_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+    assert_gated((tf.txnlog_cdc_replay_reconstruct, tf.TXNLOG_CDC_REPLAY_ORACLE))
 
 
 def test_cdc_replay_row_level_equivalence(spark):
@@ -1475,13 +1415,10 @@ def test_check_constraints_enforced(spark, con):
 
 
 @pytest.mark.slow
-def test_queue7_parity_dlq(spark, con):
+def test_queue7_parity_dlq(spark):
     from aced_etl_pod_spark.operators import streaming_ops as so
 
     sdf = so.stream_checked_ingest_dlq(spark, SF_SMALL).toPandas()
-    ddf = con.execute(so.STREAM_CHECKED_INGEST_DLQ_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
     # nothing lost: committed + quarantined rows == the filtered stream
     row = sdf.iloc[0]
     import duckdb
@@ -1492,16 +1429,12 @@ def test_queue7_parity_dlq(spark, con):
     assert row.committed_rows + row.quarantined_rows == total
 
 
-def test_queue7_parity_tranche32(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche32():
+    assert_gated(
         (ext.agg_gini_coefficient, ext.AGG_GINI_COEFFICIENT_ORACLE),
         (ext.agg_entropy_categorical, ext.AGG_ENTROPY_CATEGORICAL_ORACLE),
         (txt.text_vocab_growth_heaps, txt.TEXT_VOCAB_GROWTH_HEAPS_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_gini_and_entropy_bounds(spark):
@@ -1516,16 +1449,12 @@ def test_gini_and_entropy_bounds(spark):
     assert (e[e.n_types < 5].entropy_bits < math.log2(5)).all()
 
 
-def test_queue7_parity_tranche33(spark, con):
-    for fn, oracle in [
+def test_queue7_parity_tranche33():
+    assert_gated(
         (ext.agg_markov_transition_matrix, ext.AGG_MARKOV_TRANSITION_ORACLE),
         (ext.fn_ab_test_proportions, ext.FN_AB_TEST_PROPORTIONS_ORACLE),
         (txt.text_zipf_rank_frequency, txt.TEXT_ZIPF_RANK_FREQUENCY_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
 
 
 def test_markov_rows_normalize_and_zipf_monotone(spark):
@@ -1539,11 +1468,8 @@ def test_markov_rows_normalize_and_zipf_monotone(spark):
     assert z.zipf_slope.iloc[0] < 0
 
 
-def test_queue7_parity_tranche34(spark, con):
-    sdf = ext.agg_benford_digit_test(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_BENFORD_DIGIT_TEST_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_tranche34():
+    assert_gated((ext.agg_benford_digit_test, ext.AGG_BENFORD_DIGIT_TEST_ORACLE))
 
 
 def test_cusum_matches_reference_recursion(spark):
@@ -1618,11 +1544,8 @@ def test_cusum_matches_reference_recursion(spark):
     assert flat.n_alarms.iloc[0] == 0
 
 
-def test_queue7_parity_km(spark, con):
-    sdf = ext.win_survival_kaplan_meier(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.WIN_SURVIVAL_KM_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_km():
+    assert_gated((ext.win_survival_kaplan_meier, ext.WIN_SURVIVAL_KM_ORACLE))
 
 
 def test_km_matches_reference_estimator(spark):
@@ -1670,11 +1593,8 @@ def test_km_matches_reference_estimator(spark):
 # -- tranche 36: bigram-LM perplexity + two-sample KS ----------------------
 
 
-def test_queue7_parity_ngram_lm(spark, con):
-    sdf = llm.text_ngram_lm_score(spark, SF_SMALL).toPandas()
-    ddf = con.execute(llm.TEXT_NGRAM_LM_SCORE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_ngram_lm():
+    assert_gated((llm.text_ngram_lm_score, llm.TEXT_NGRAM_LM_SCORE_ORACLE))
 
 
 def test_ngram_lm_matches_reference_model(spark):
@@ -1715,11 +1635,8 @@ def test_ngram_lm_matches_reference_model(spark):
     assert all(p > 1.0 for p in got.values())
 
 
-def test_queue7_parity_ks(spark, con):
-    sdf = ext.stat_ks_two_sample(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_KS_TWO_SAMPLE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_ks():
+    assert_gated((ext.stat_ks_two_sample, ext.STAT_KS_TWO_SAMPLE_ORACLE))
 
 
 def test_ks_detects_shift_and_accepts_identical(spark):
@@ -1748,11 +1665,8 @@ def test_ks_detects_shift_and_accepts_identical(spark):
 # -- tranche 37: autocorrelation + Mann-Whitney U --------------------------
 
 
-def test_queue7_parity_acf(spark, con):
-    sdf = ext.ts_autocorrelation(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.TS_AUTOCORRELATION_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_acf():
+    assert_gated((ext.ts_autocorrelation, ext.TS_AUTOCORRELATION_ORACLE))
 
 
 def test_acf_detects_daily_cycle(spark):
@@ -1784,11 +1698,8 @@ def test_acf_detects_daily_cycle(spark):
     assert flat.acf.isna().all()
 
 
-def test_queue7_parity_mwu(spark, con):
-    sdf = ext.stat_mann_whitney_u(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_MANN_WHITNEY_U_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_mwu():
+    assert_gated((ext.stat_mann_whitney_u, ext.STAT_MANN_WHITNEY_U_ORACLE))
 
 
 def test_mwu_matches_reference_ranksum(spark):
@@ -1834,11 +1745,10 @@ def test_mwu_matches_reference_ranksum(spark):
 # -- tranche 38: link prediction + DP Laplace release ----------------------
 
 
-def test_queue7_parity_linkpred(spark, con):
-    sdf = adv.graph_jaccard_link_prediction(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.GRAPH_JACCARD_LINK_PREDICTION_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_linkpred():
+    assert_gated(
+        (adv.graph_jaccard_link_prediction, adv.GRAPH_JACCARD_LINK_PREDICTION_ORACLE),
+    )
 
 
 def test_linkpred_matches_bruteforce_sets(spark):
@@ -1881,11 +1791,8 @@ def test_linkpred_matches_bruteforce_sets(spark):
     assert got == want
 
 
-def test_queue7_parity_dp_laplace(spark, con):
-    sdf = gov.dp_noisy_count_laplace(spark, SF_SMALL).toPandas()
-    ddf = con.execute(gov.DP_NOISY_COUNT_LAPLACE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_dp_laplace():
+    assert_gated((gov.dp_noisy_count_laplace, gov.DP_NOISY_COUNT_LAPLACE_ORACLE))
 
 
 def test_dp_laplace_noise_properties(spark):
@@ -1941,11 +1848,10 @@ def test_dp_laplace_noise_properties(spark):
 # -- tranche 39: phonetic-blocked fuzzy join + event paths -----------------
 
 
-def test_queue7_parity_fuzzy_join(spark, con):
-    sdf = ext.join_fuzzy_phonetic_blocked(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.JOIN_FUZZY_PHONETIC_BLOCKED_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_fuzzy_join():
+    assert_gated(
+        (ext.join_fuzzy_phonetic_blocked, ext.JOIN_FUZZY_PHONETIC_BLOCKED_ORACLE),
+    )
 
 
 def test_fuzzy_join_blocking_recall_quantified(spark):
@@ -1976,11 +1882,8 @@ def test_fuzzy_join_blocking_recall_quantified(spark):
     assert (clean.mention == clean.entity).all()
 
 
-def test_queue7_parity_event_paths(spark, con):
-    sdf = ext.agg_event_path_topk(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_EVENT_PATH_TOPK_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_event_paths():
+    assert_gated((ext.agg_event_path_topk, ext.AGG_EVENT_PATH_TOPK_ORACLE))
 
 
 def test_event_paths_match_reference_counter(spark):
@@ -2011,11 +1914,8 @@ def test_event_paths_match_reference_counter(spark):
 # -- tranche 40: Welch t-test + seasonal-naive backtest --------------------
 
 
-def test_queue7_parity_welch(spark, con):
-    sdf = ext.stat_t_test_welch(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_T_TEST_WELCH_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_welch():
+    assert_gated((ext.stat_t_test_welch, ext.STAT_T_TEST_WELCH_ORACLE))
 
 
 def test_welch_matches_reference_formula(spark):
@@ -2050,11 +1950,8 @@ def test_welch_matches_reference_formula(spark):
     assert abs(out.df.iloc[0] - round(df, 2)) < 2e-2
 
 
-def test_queue7_parity_snaive(spark, con):
-    sdf = ext.ts_forecast_snaive_backtest(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.TS_FORECAST_SNAIVE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_snaive():
+    assert_gated((ext.ts_forecast_snaive_backtest, ext.TS_FORECAST_SNAIVE_ORACLE))
 
 
 def test_snaive_backtest_is_exact_on_synthetic(spark):
@@ -2172,11 +2069,10 @@ def test_holt_winters_nails_periodic_series(spark):
         assert abs(out[k].iloc[0] - 3.0) < 1.0
 
 
-def test_queue7_parity_seasonal_anomaly(spark, con):
-    sdf = ext.ts_seasonal_residual_anomaly(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.TS_SEASONAL_RESIDUAL_ANOMALY_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_seasonal_anomaly():
+    assert_gated(
+        (ext.ts_seasonal_residual_anomaly, ext.TS_SEASONAL_RESIDUAL_ANOMALY_ORACLE),
+    )
 
 
 def test_seasonal_anomaly_finds_injected_spike(spark):
@@ -2210,11 +2106,8 @@ def test_seasonal_anomaly_finds_injected_spike(spark):
 # -- tranche 42: native recursive CTE + VARIANT ----------------------------
 
 
-def test_queue7_parity_recursive_native(spark, con):
-    sdf = adv.sql_recursive_cte_native(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.SQL_RECURSIVE_CTE_NATIVE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_recursive_native():
+    assert_gated((adv.sql_recursive_cte_native, adv.SQL_RECURSIVE_CTE_NATIVE_ORACLE))
 
 
 def test_recursive_native_equals_unrolled(spark):
@@ -2238,11 +2131,8 @@ def test_recursive_native_equals_unrolled(spark):
     )
 
 
-def test_queue7_parity_variant(spark, con):
-    sdf = adv.scan_json_variant(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.SCAN_JSON_VARIANT_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_variant():
+    assert_gated((adv.scan_json_variant, adv.SCAN_JSON_VARIANT_ORACLE))
 
 
 def test_variant_typed_access_semantics(spark):
@@ -2261,11 +2151,8 @@ def test_variant_typed_access_semantics(spark):
 # -- tranche 43: Poisson bootstrap CI + cross-correlation ------------------
 
 
-def test_queue7_parity_bootstrap(spark, con):
-    sdf = ext.stat_bootstrap_poisson_ci(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_BOOTSTRAP_POISSON_CI_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_bootstrap():
+    assert_gated((ext.stat_bootstrap_poisson_ci, ext.STAT_BOOTSTRAP_POISSON_CI_ORACLE))
 
 
 def test_bootstrap_ci_properties(spark):
@@ -2331,11 +2218,8 @@ def test_bootstrap_ci_properties(spark):
     assert abs(got_mean0 - want_mean0) < 1e-9
 
 
-def test_queue7_parity_ccf(spark, con):
-    sdf = ext.ts_cross_correlation(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.TS_CROSS_CORRELATION_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_ccf():
+    assert_gated((ext.ts_cross_correlation, ext.TS_CROSS_CORRELATION_ORACLE))
 
 
 def test_ccf_detects_lead_lag(spark):
@@ -2369,22 +2253,16 @@ def test_ccf_detects_lead_lag(spark):
 # -- tranche 44: Arrow UDF + Python DataSource API -------------------------
 
 
-def test_queue7_parity_arrow_udf(spark, con):
+def test_queue7_parity_arrow_udf():
     from aced_etl_pod_spark.operators import udfs
 
-    sdf = udfs.udf_scalar_arrow(spark, SF_SMALL).toPandas()
-    ddf = con.execute(udfs.UDF_SCALAR_ARROW_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+    assert_gated((udfs.udf_scalar_arrow, udfs.UDF_SCALAR_ARROW_ORACLE))
 
 
-def test_queue7_parity_python_datasource(spark, con):
+def test_queue7_parity_python_datasource():
     from aced_etl_pod_spark.operators import udfs
 
-    sdf = udfs.scan_python_datasource(spark, SF_SMALL).toPandas()
-    ddf = con.execute(udfs.SCAN_PYTHON_DATASOURCE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+    assert_gated((udfs.scan_python_datasource, udfs.SCAN_PYTHON_DATASOURCE_ORACLE))
 
 
 def test_python_datasource_partition_planning(spark):
@@ -2412,22 +2290,16 @@ def test_python_datasource_partition_planning(spark):
 # -- tranche 45: streaming Python DataSource + SFT chat render -------------
 
 
-def test_queue7_parity_stream_pyds(spark, con):
+def test_queue7_parity_stream_pyds(spark):
     from aced_etl_pod_spark.operators import streaming_ops as so
 
     sdf = so.stream_python_datasource(spark, SF_SMALL).toPandas()
-    ddf = con.execute(so.STREAM_PYTHON_DATASOURCE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
     # exactly-once accounting: every generated row in exactly one group
     assert sdf.n.sum() == 5000
 
 
-def test_queue7_parity_sft_render(spark, con):
-    sdf = llm.seq_sft_chat_render(spark, SF_SMALL).toPandas()
-    ddf = con.execute(llm.SEQ_SFT_CHAT_RENDER_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_sft_render():
+    assert_gated((llm.seq_sft_chat_render, llm.SEQ_SFT_CHAT_RENDER_ORACLE))
 
 
 def test_sft_mask_spans_index_assistant_content(spark):
@@ -2455,11 +2327,10 @@ def test_sft_mask_spans_index_assistant_content(spark):
 # -- tranche 46: point-in-time features + star-contraction CC --------------
 
 
-def test_queue7_parity_pit_features(spark, con):
-    sdf = ext.join_point_in_time_features(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.JOIN_POINT_IN_TIME_FEATURES_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
+def test_queue7_parity_pit_features():
+    assert_gated(
+        (ext.join_point_in_time_features, ext.JOIN_POINT_IN_TIME_FEATURES_ORACLE),
+    )
 
 
 def test_pit_features_no_leakage_bruteforce(spark):
@@ -2500,13 +2371,6 @@ def test_pit_features_no_leakage_bruteforce(spark):
     assert list(out.last_view_value) == list(brute.last_view_value)
 
 
-def test_queue7_parity_cc_star(spark, con):
-    sdf = adv.graph_cc_large_star_small_star(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.GRAPH_CC_STAR_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_cc_star_contracts_long_chain(spark):
     """The log-round claim on the worst case for flooding: a 64-node
     path graph. Min-label flooding needs ~63 rounds; star contraction
@@ -2526,13 +2390,6 @@ def test_cc_star_contracts_long_chain(spark):
 
 
 # -- tranche 47: C4 line dedup + NFC normalization -------------------------
-
-
-def test_queue7_parity_line_dedup(spark, con):
-    sdf = txt.text_line_dedup_c4(spark, SF_SMALL).toPandas()
-    ddf = con.execute(txt.TEXT_LINE_DEDUP_C4_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_line_dedup_keep_first_semantics(spark):
@@ -2605,13 +2462,6 @@ def test_line_dedup_edge_corpus_matches_oracle(spark, tmp_path):
     assert len(rows) == len(texts) - 1
 
 
-def test_queue7_parity_nfc(spark, con):
-    sdf = txt.fn_unicode_normalize_nfc(spark, SF_SMALL).toPandas()
-    ddf = con.execute(txt.FN_UNICODE_NFC_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_nfc_actually_composes(spark):
     """Every derived row containing an 'e' must compose (raw_cp >
     nfc_cp), and the composed prefix round-trips through Python's
@@ -2629,13 +2479,6 @@ def test_nfc_actually_composes(spark):
 # -- tranche 48: mixture rebalance + mergeable moments ---------------------
 
 
-def test_queue7_parity_mixture(spark, con):
-    sdf = cor.pipeline_mixture_rebalance(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.PIPELINE_MIXTURE_REBALANCE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_mixture_solver_properties(spark):
     """The solver's contract: the binding language keeps 100% (keep_bp =
     10000), nobody is upsampled (keep_bp <= 10000), and the realized
@@ -2650,13 +2493,6 @@ def test_mixture_solver_properties(spark):
     for r in out.itertuples():
         assert abs(r.realized_share - float(r.target_share)) < 0.06, r
     assert abs(out.realized_share.sum() - 1.0) < 1e-6
-
-
-def test_queue7_parity_chan_moments(spark, con):
-    sdf = cor.agg_moments_mergeable_chan(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.AGG_MOMENTS_MERGEABLE_CHAN_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_chan_merge_equals_recompute_and_beats_naive(spark):
@@ -2720,13 +2556,6 @@ def test_queue7_parity_ckpt_restart(spark, con):
 # -- tranche 50: DPO preference pairs --------------------------------------
 
 
-def test_queue7_parity_dpo_pairs(spark, con):
-    sdf = llm.seq_dpo_preference_pairs(spark, SF_SMALL).toPandas()
-    ddf = con.execute(llm.SEQ_DPO_PREFERENCE_PAIRS_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_dpo_pairs_contract(spark):
     """Pair-construction invariants: chosen strictly outscores rejected
     (margin > 0 and equals the rounded score gap), chosen != rejected,
@@ -2753,13 +2582,6 @@ def test_dpo_pairs_contract(spark):
 
 
 # -- tranche 51: PPJoin exact similarity join + image pHash dedup ----------
-
-
-def test_queue7_parity_ppjoin(spark, con):
-    sdf = txt.dedup_ppjoin_prefix_filter(spark, SF_SMALL).toPandas()
-    ddf = con.execute(txt.DEDUP_PPJOIN_PREFIX_FILTER_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_ppjoin_prefix_filter_is_lossless(spark):
@@ -2835,14 +2657,41 @@ def test_phash_matches_reference_and_is_stable(spark):
         assert h == want[bid]
 
 
+def test_phash_exact_beside_a_quarantined_blob(spark):
+    """A corrupt blob and good blobs in ONE Arrow batch: the quarantined
+    blob's null hash must not coerce the batch's 64-bit hashes to float64
+    (53-bit mantissa, low bits lost). Packing every fixture file into a
+    single scan partition makes the mix independent of the core count."""
+    import glob
+    import os
+
+    from aced_etl_pod_spark.functions.imagecodec import decode_ppm, phash64
+    from aced_etl_pod_spark.operators import similarity as sim
+    from aced_etl_pod_spark.sources.binary import generate_phash_fixture, read_binary
+
+    packed = {
+        "spark.sql.files.minPartitionNum": "1",
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    saved = {k: spark.conf.get(k, None) for k in packed}
+    try:
+        for k, v in packed.items():
+            spark.conf.set(k, v)
+        src = generate_phash_fixture()
+        assert read_binary(spark, src, glob="*.ppm").rdd.getNumPartitions() == 1
+        out = sim.dedup_image_phash(spark, SF_SMALL).toPandas()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert out.decode_error.notnull().sum() == 1
+    for f in glob.glob(os.path.join(src, "*.ppm")):
+        bid = int(os.path.basename(f).split("_")[1])
+        row = out[out.blob_id == bid].iloc[0]
+        if row.decode_error is None:
+            assert row.phash_hex == f"{phash64(decode_ppm(open(f, 'rb').read())):016x}"
+
+
 # -- tranche 52: parameterized SQL + fused pretrain pipeline ---------------
-
-
-def test_queue7_parity_sql_param(spark, con):
-    sdf = cor.sql_parameterized_query(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.SQL_PARAMETERIZED_QUERY_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_sql_param_binding_is_injection_safe(spark):
@@ -2860,13 +2709,6 @@ def test_sql_param_binding_is_injection_safe(spark):
         args={"lang": "en' OR '1'='1"},
     ).collect()
     assert out[0].n == 0
-
-
-def test_queue7_parity_pretrain_e2e(spark, con):
-    sdf = cor.pipeline_pretrain_corpus_e2e(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.PIPELINE_PRETRAIN_E2E_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_pretrain_e2e_is_one_fused_plan(spark):
@@ -2892,13 +2734,6 @@ def test_pretrain_e2e_is_one_fused_plan(spark):
 
 
 # -- tranche 53: OHLC bars + cross-table reconciliation --------------------
-
-
-def test_queue7_parity_ohlc(spark, con):
-    sdf = ext.agg_ohlc_bars(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_OHLC_BARS_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_ohlc_matches_reference_and_invariants(spark):
@@ -2932,13 +2767,6 @@ def test_ohlc_matches_reference_and_invariants(spark):
         assert r.low <= r.close <= r.high
 
 
-def test_queue7_parity_reconciliation(spark, con):
-    sdf = ext.dq_cross_table_reconciliation(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.DQ_CROSS_TABLE_RECONCILIATION_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_reconciliation_classes_are_exhaustive(spark):
     """Every order key lands in exactly one class: class counts sum to
     the full-outer key universe (orders ∪ lineitem order keys)."""
@@ -2955,13 +2783,6 @@ def test_reconciliation_classes_are_exhaustive(spark):
 
 
 # -- tranche 54: modularity score + RFM segmentation -----------------------
-
-
-def test_queue7_parity_modularity(spark, con):
-    sdf = adv.graph_modularity_score(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.GRAPH_MODULARITY_SCORE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_modularity_matches_reference_and_bounds(spark):
@@ -2998,13 +2819,6 @@ def test_modularity_matches_reference_and_bounds(spark):
     assert got["hash_blocks"] == q_of(lambda n: n // 125)
     assert got["parity"] == q_of(lambda n: n % 2)
     assert all(-1.0 <= v <= 1.0 for v in got.values())
-
-
-def test_queue7_parity_rfm(spark, con):
-    sdf = ext.agg_rfm_segmentation(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_RFM_SEGMENTATION_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_rfm_quintiles_are_balanced_and_consistent(spark):
@@ -3089,13 +2903,6 @@ def test_round5d_ops_tolerate_empty_tables(spark, empty_sf):
 # -- tranche 55: ABC/Pareto + experiment sizing ----------------------------
 
 
-def test_queue7_parity_abc(spark, con):
-    sdf = ext.agg_abc_pareto_analysis(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_ABC_PARETO_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_abc_pareto_invariants(spark):
     """Classification contract: cumulative share is monotone to 1.0,
     classes partition the catalog in A->B->C order down the revenue
@@ -3110,13 +2917,6 @@ def test_abc_pareto_invariants(spark):
     ) + "C" * classes.count("C")
     a_share = out[out.abc_class == "A"].cum_share.max()
     assert a_share <= 0.8 + 1e-9
-
-
-def test_queue7_parity_power(spark, con):
-    sdf = ext.stat_power_sample_size(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_POWER_SAMPLE_SIZE_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_power_formula_matches_reference(spark):
@@ -3143,13 +2943,6 @@ def test_power_formula_matches_reference(spark):
 
 
 # -- tranche 56: supervised categorical feature prep -----------------------
-
-
-def test_queue7_parity_target_encoding(spark, con):
-    sdf = cor.feature_target_encoding_loo(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.FEATURE_TARGET_ENCODING_LOO_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_target_encoding_excludes_own_label(spark):
@@ -3181,13 +2974,6 @@ def test_target_encoding_excludes_own_label(spark):
     assert got == want
 
 
-def test_queue7_parity_woe_iv(spark, con):
-    sdf = cor.feature_woe_information_value(spark, SF_SMALL).toPandas()
-    ddf = con.execute(cor.FEATURE_WOE_IV_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_woe_iv_reference_properties(spark):
     """WoE sign tracks good-vs-bad share dominance per category, and
     total IV is non-negative (each contribution (g%-b%)*ln(g%~/b%~) has
@@ -3206,13 +2992,6 @@ def test_woe_iv_reference_properties(spark):
 
 
 # -- tranche 57: winnowing fingerprints + assortativity --------------------
-
-
-def test_queue7_parity_winnowing(spark, con):
-    sdf = txt.dedup_winnowing_fingerprints(spark, SF_SMALL).toPandas()
-    ddf = con.execute(txt.DEDUP_WINNOWING_FINGERPRINTS_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_winnowing_detects_planted_copy(spark):
@@ -3264,13 +3043,6 @@ def test_winnowing_density_is_sparse(spark):
         assert (pdf.n_fp_a <= n_grams).all()
 
 
-def test_queue7_parity_assortativity(spark, con):
-    sdf = adv.graph_assortativity(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.GRAPH_ASSORTATIVITY_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_assortativity_matches_reference_and_extremes(spark):
     """From-scratch Newman r over the same edges agrees exactly; a star
     graph is perfectly disassortative (r = -1) and a regular ring has
@@ -3320,13 +3092,6 @@ def test_assortativity_matches_reference_and_extremes(spark):
 # -- tranche 58: FDR correction + VWAP bars --------------------------------
 
 
-def test_queue7_parity_fdr(spark, con):
-    sdf = ext.stat_fdr_benjamini_hochberg(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.STAT_FDR_BH_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_fdr_matches_reference_procedure(spark):
     """scipy-free reference BH: recompute p-values with Python's exact
     normal survival (erfc) and run the textbook step-up procedure — the
@@ -3361,13 +3126,6 @@ def test_fdr_matches_reference_procedure(spark):
     assert got_rejected == want_rejected
 
 
-def test_queue7_parity_vwap(spark, con):
-    sdf = ext.win_vwap_bars(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.WIN_VWAP_BARS_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_vwap_weighting_semantics(spark):
     """VWAP is the volume-weighted mean: recomputed from raw trades it
     matches exactly, sits within [low, high] of the bar, and a
@@ -3399,13 +3157,6 @@ def test_vwap_weighting_semantics(spark):
 
 
 # -- tranche 59: DiD + CUPED (causal/experimentation closers) --------------
-
-
-def test_queue7_parity_did(spark, con):
-    sdf = ext.agg_causal_diff_in_diff(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_CAUSAL_DIFF_IN_DIFF_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_did_recovers_injected_effect(spark):
@@ -3443,13 +3194,6 @@ def test_did_recovers_injected_effect(spark):
     assert abs(naive - 8.0) < 1e-6
 
 
-def test_queue7_parity_cuped(spark, con):
-    sdf = ext.agg_cuped_variance_reduction(spark, SF_SMALL).toPandas()
-    ddf = con.execute(ext.AGG_CUPED_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
-
-
 def test_cuped_matches_numpy_and_reduction_law(spark):
     """theta and the adjusted variance recomputed with numpy agree, and
     the realized reduction equals the squared pre/post correlation —
@@ -3480,13 +3224,6 @@ def test_cuped_matches_numpy_and_reduction_law(spark):
 
 
 # -- tranche 60: k-core + Kalman filter ------------------------------------
-
-
-def test_queue7_parity_kcore(spark, con):
-    sdf = adv.graph_kcore_membership(spark, SF_SMALL).toPandas()
-    ddf = con.execute(adv.GRAPH_KCORE_MEMBERSHIP_ORACLE).fetchdf()
-    errs = compare(sdf, ddf)
-    assert not errs, errs[:5]
 
 
 def test_kcore_cascade_semantics(spark):

@@ -1,0 +1,55 @@
+"""Parse-only guard: every import in tools/*.py, bench.py and tests/*.py
+that names a repo file (``tools.X``, ``tests.X`` or a sibling module the
+script finds on its own sys.path) must resolve to a file that still
+exists, so deleting a tool cannot leave a kept one importing it. Nothing
+is executed; third-party and stdlib names are checked with find_spec."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib.util
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(ROOT, "tools")
+SOURCES = sorted(
+    glob.glob(os.path.join(TOOLS, "*.py"))
+    + glob.glob(os.path.join(ROOT, "tests", "*.py"))
+    + [os.path.join(ROOT, "bench.py")]
+)
+
+
+def _imported(tree: ast.AST):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                yield node.lineno, a.name
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            yield node.lineno, node.module
+
+
+def _resolves(name: str, here: str) -> bool:
+    top = name.split(".")[0]
+    path = os.path.join(ROOT, *name.split("."))
+    if os.path.isdir(os.path.join(ROOT, top)):  # repo package: tools.X, tests.X
+        return os.path.isfile(path + ".py") or os.path.isdir(path)
+    # a sibling script on the importer's own sys.path; tests also put
+    # tools/ there to import the doc generator
+    if any(os.path.isfile(os.path.join(d, top + ".py")) for d in (here, TOOLS)):
+        return True
+    return importlib.util.find_spec(top) is not None
+
+
+def test_repo_imports_resolve():
+    dangling = []
+    for path in SOURCES:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        here = os.path.dirname(path)
+        dangling += [
+            f"{os.path.relpath(path, ROOT)}:{ln} {name}"
+            for ln, name in _imported(tree)
+            if not _resolves(name, here)
+        ]
+    assert not dangling, f"imports of files that no longer exist: {dangling}"

@@ -1,5 +1,5 @@
 """Generate docs/OPERATORS.md — the full operator inventory from the live
-registry (id, tags, correctness mode, source location, first doc line).
+registry (id, tags, correctness mode, source file, first doc line).
 
     python tools/gen_operators_md.py
 
@@ -44,7 +44,8 @@ def render() -> str:
     ]
     for i, (op_id, o) in enumerate(reg.items(), 1):
         fn = inspect.unwrap(o.fn)
-        src = f"{os.path.relpath(fn.__code__.co_filename, REPO)}:{fn.__code__.co_firstlineno}"
+        # file only: a line number would stale the doc on any unrelated edit
+        src = os.path.relpath(fn.__code__.co_filename, REPO)
         mode = "oracle" if o.oracle else "rows+tests"
         doc = (o.doc or "").strip().splitlines()[0] if o.doc else ""
         doc = doc.replace("|", "\\|")

@@ -76,6 +76,8 @@ def main() -> int:
         for t in TABLES:
             dst = os.path.join(p, f"{t}.parquet")
             if not os.path.exists(dst):
+                if os.path.lexists(dst):  # dangling link: relink it
+                    os.unlink(dst)
                 os.symlink(os.path.join(sf, f"{t}.parquet"), dst)
         return p
 
