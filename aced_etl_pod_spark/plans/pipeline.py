@@ -9,11 +9,21 @@ Reference flow (etl-job/fhir_import_export.py:416-433 dispatch):
   delete (:362-390): graph + flat ×3 + raw + discovery teardown by project
 
 Spark re-expression (SURVEY §3.1): stages 3–8 are ONE DataFrame DAG per
-resource type; the three sinks are the only barriers; the discovery count
-reuses the patient DataFrame (no re-query-after-write); the visibility
-barrier (:331-332) disappears because batch writes are atomic-on-commit;
-delete is a partition drop per store — O(metadata), which is exactly why
-``project_id`` is the physical partition key on every table (SURVEY §1.3).
+resource type over one cached scan of the commit.
+
+  put    one wave of concurrent Spark jobs — the six store writes and the
+         ResearchStudy lookup, all in the caller's job group — then one
+         barrier, then the one-row discovery record. Row counts are
+         observed on the flat writes themselves (``df.observe``): nothing
+         is re-queried after a write.
+  get    one scan: the project's raw rows in one write partitioned by
+         resource type, whose part files become the {Type}.ndjson files.
+  delete a partition drop per store — O(metadata), which is exactly why
+         ``project_id`` is the physical partition key on every table
+         (SURVEY §1.3).
+
+The visibility barrier (:331-332) disappears because batch writes are
+atomic-on-commit.
 
 Stores (all parquet, partitioned by project_id):
   graph/vertices, graph/edges   — D2 envelopes: node payloads + exploded relations
@@ -26,10 +36,12 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from aced_etl_pod_spark.plans.authz import can_create, can_read
 from aced_etl_pod_spark.plans.storage import drop_partition, upsert_partitions
@@ -91,11 +103,15 @@ class EtlPodPipeline:
         return os.path.join(self.warehouse, store)
 
     def _read(self, store: str) -> DataFrame | None:
+        """The store's table, or None when it holds no partition: never
+        written (the empty-input branch, R9 :235-238) or every project
+        dropped. Any error reading a present store propagates."""
         p = self.path(store)
-        try:
-            return self.spark.read.parquet(p)
-        except Exception:
-            return None  # store not created yet (empty-input branch, R9 :235-238)
+        if not os.path.isdir(p) or not any(
+            name.startswith("project_id=") for name in os.listdir(p)
+        ):
+            return None
+        return self.spark.read.parquet(p)
 
     # ---- put (import) ----------------------------------------------------
     def put(self, project_id: str, source: str, user: dict | None = None) -> dict:
@@ -131,8 +147,7 @@ class EtlPodPipeline:
             F.col("rel.label").alias("label"),
             "project_id",
         ).filter(F.col("dst_id").isNotNull())
-        upsert_partitions(self.spark, vertices, self.path("graph/vertices"), "project_id")
-        upsert_partitions(self.spark, edges, self.path("graph/edges"), "project_id")
+        writes = {"graph/vertices": vertices, "graph/edges": edges}
 
         # Simplify (R6): envelope → flat record per resource type. The
         # object struct carries its own project_id; keep the outer
@@ -166,26 +181,62 @@ class EtlPodPipeline:
         )
 
         # Flat loads ×3 (R9) — a type with no input still writes its schema
-        # (the reference's /dev/null load, :235-238).
-        counts: dict[str, int] = {}
+        # (the reference's /dev/null load, :235-238). Each write counts its
+        # own rows, so no recount job follows it; the observations are
+        # unnamed, so two puts in one session never share a name.
+        observed: dict[str, Observation] = {}
         for rtype, index in FLAT_INDICES.items():
             df = patient_denorm if rtype == "Patient" else flat.filter(
                 F.col("resourceType") == rtype
             )
-            upsert_partitions(self.spark, df, self.path(f"flat/{index}"), "project_id")
-            counts[index] = df.count()
+            observed[index] = Observation()
+            writes[f"flat/{index}"] = df.observe(
+                observed[index], F.count(F.lit(1)).alias("rows")
+            )
 
-        # Discovery aggregate (R10+R12): count reuses the cached DataFrame —
-        # no re-query-after-write.
+        # Raw store (R13): original resources, JSON + parsed struct.
+        writes["raw/resources"] = envelopes.select(
+            F.col("object.id").alias("id"),
+            F.col("object.resourceType").alias("resource_type"),
+            F.to_json("object").alias("resource_json"),
+            "project_id",
+        )
+
         # orderBy(id) before limit(1): deterministic pick when a project
         # carries more than one ResearchStudy row (the reference reads the
         # first NDJSON line; file order is its implicit total order).
-        study = (
-            flat.filter(F.col("resourceType") == "ResearchStudy")
-            .orderBy("id")
-            .limit(1)
-            .collect()
-        )
+        first_study = flat.filter(F.col("resourceType") == "ResearchStudy").orderBy("id").limit(1)
+
+        # One wave: the six writes and the study lookup are independent
+        # Spark jobs, submitted together so the default FIFO scheduler fills
+        # one job's idle cores with the next and overlaps their driver-side
+        # planning and commits. Every job runs in the caller's job group and
+        # tags. Each target is wrapped on its own: one wrapper shares one
+        # copy of the caller's local properties, in which concurrent queries
+        # would overwrite each other's SQL execution id.
+        tasks = [
+            (upsert_partitions, self.spark, df, self.path(store), "project_id")
+            for store, df in writes.items()
+        ]
+        tasks.append((first_study.collect,))
+        try:
+            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+                    for fn, *args in tasks
+                ]
+                results = [f.result() for f in futures]  # re-raises the first failure
+        finally:
+            # a failed put must not leave them cached for the session's life
+            envelopes.unpersist()
+            flat.unpersist()
+        # Only after the barrier: a failed write's observation never
+        # completes, and ``.get`` would block forever.
+        counts = {index: o.get["rows"] for index, o in observed.items()}
+        study = results[-1]
+
+        # Discovery aggregate (R10+R12): after the barrier, from the
+        # observed patient count — no re-query-after-write.
         discovery = self.spark.createDataFrame(
             [
                 {
@@ -201,17 +252,6 @@ class EtlPodPipeline:
             "identifier_coding array<string>",
         )
         upsert_partitions(self.spark, discovery, self.path("discovery/studies"), "project_id")
-
-        # Raw store (R13): original resources, JSON + parsed struct.
-        raw = envelopes.select(
-            F.col("object.id").alias("id"),
-            F.col("object.resourceType").alias("resource_type"),
-            F.to_json("object").alias("resource_json"),
-            "project_id",
-        )
-        upsert_partitions(self.spark, raw, self.path("raw/resources"), "project_id")
-        envelopes.unpersist()
-        flat.unpersist()  # without this, per-commit put() loops accumulate cached DFs
         return {"project_id": project_id, **counts}
 
     # ---- get (export) ----------------------------------------------------
@@ -229,27 +269,25 @@ class EtlPodPipeline:
             raise FileNotFoundError("raw store is empty")
         export_dir = os.path.join(out_dir, f"{project_id}_export")
         shutil.rmtree(export_dir, ignore_errors=True)
+        # One scan, one job: the project's rows split by type on write.
+        parts = os.path.join(export_dir, "_parts")
+        (
+            raw.filter(F.col("project_id") == project_id)
+            .select("resource_type", "resource_json")
+            .write.partitionBy("resource_type")
+            .text(parts)
+        )
+        # Concatenate each type's part files into {Type}.ndjson; a type the
+        # project has no rows of gets an empty file.
         for rtype in RESOURCE_TYPES:
-            (
-                raw.filter(
-                    (F.col("project_id") == project_id)
-                    & (F.col("resource_type") == rtype)
-                )
-                .select("resource_json")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .text(os.path.join(export_dir, f"{rtype}.ndjson.dir"))
-            )
-        # flatten the single-part text dirs into {Type}.ndjson files
-        for rtype in RESOURCE_TYPES:
-            d = os.path.join(export_dir, f"{rtype}.ndjson.dir")
-            parts = [f for f in os.listdir(d) if f.startswith("part-")]
-            target = os.path.join(export_dir, f"{rtype}.ndjson")
-            with open(target, "wb") as out:
-                for p in sorted(parts):
-                    with open(os.path.join(d, p), "rb") as src:
-                        shutil.copyfileobj(src, out)
-            shutil.rmtree(d)
+            d = os.path.join(parts, f"resource_type={rtype}")
+            names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+            with open(os.path.join(export_dir, f"{rtype}.ndjson"), "wb") as out:
+                for name in names:
+                    if name.startswith("part-"):
+                        with open(os.path.join(d, name), "rb") as src:
+                            shutil.copyfileobj(src, out)
+        shutil.rmtree(parts)
         zip_path = os.path.join(out_dir, f"{project_id}_{ts}_SNAPSHOT.zip")
         return zip_dir(export_dir, zip_path)
 

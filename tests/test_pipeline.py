@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import zipfile
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from aced_etl_pod_spark.plans.authz import can_create, can_read
@@ -198,3 +200,101 @@ def test_job_protocol_dispatch(spark, fhir_fixture, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         run_job(spark, {"project_id": "prog-alpha", "method": "bogus"}, wh)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return the ids of the jobs in
+    that group and of the jobs it started with no group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "pipeline test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return tracker.getJobIdsForGroup(group), set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+def test_put_jobs_run_in_the_callers_job_group(pipeline, fhir_fixture):
+    """The put's concurrent writes inherit the caller's job group, so
+    ``cancelJobGroup`` and per-group metrics cover the whole put."""
+    in_group, ungrouped = _jobs_in_group(
+        pipeline.spark, "g", lambda: pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    )
+    assert in_group
+    assert not ungrouped
+
+
+def test_put_and_get_job_counts(pipeline, fhir_fixture, tmp_path):
+    """Pinned at the fixture: a recount after a write, or a scan per
+    exported type, adds jobs and fails here."""
+    spark = pipeline.spark
+    put_jobs, _ = _jobs_in_group(
+        spark, "put-jobs", lambda: pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    )
+    get_jobs, _ = _jobs_in_group(
+        spark, "get-jobs", lambda: pipeline.get("prog-alpha", str(tmp_path / "out"))
+    )
+    assert (len(put_jobs), len(get_jobs)) == (15, 2)
+
+
+def test_export_of_a_missing_type_is_an_empty_file(pipeline, fhir_fixture, tmp_path):
+    os.remove(os.path.join(fhir_fixture["prog-beta"], "DocumentReference.ndjson"))
+    pipeline.put("prog-beta", fhir_fixture["prog-beta"])
+    zip_path = pipeline.get("prog-beta", str(tmp_path / "out"))
+    with zipfile.ZipFile(zip_path) as zf:
+        assert sorted(zf.namelist()) == sorted(
+            f"{t}.ndjson"
+            for t in ("ResearchStudy", "Patient", "Observation", "DocumentReference")
+        )
+        assert zf.read("DocumentReference.ndjson") == b""
+        assert zf.read("Patient.ndjson").count(b"\n") == 3
+
+
+def test_get_surfaces_a_read_error(pipeline, fhir_fixture, tmp_path):
+    """A present but unreadable raw store raises its read error; only an
+    absent store reads as empty."""
+    with pytest.raises(FileNotFoundError, match="raw store is empty"):
+        pipeline.get("prog-alpha", str(tmp_path / "out"))
+    pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    part_dir = pipeline.path("raw/resources/project_id=prog-alpha")
+    for name in os.listdir(part_dir):
+        with open(os.path.join(part_dir, name), "wb") as f:
+            f.write(b"not parquet")
+    with pytest.raises(Py4JJavaError):
+        pipeline.get("prog-alpha", str(tmp_path / "out"))
+
+
+def test_store_with_every_project_dropped_reads_as_empty(pipeline, fhir_fixture, tmp_path):
+    pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    pipeline.delete("prog-alpha")
+    assert pipeline.patient_count("prog-alpha") == 0
+    with pytest.raises(FileNotFoundError, match="raw store is empty"):
+        pipeline.get("prog-alpha", str(tmp_path / "out"))
+
+
+def test_failed_put_reraises_and_releases_its_cache(pipeline, fhir_fixture):
+    """One write of the concurrent wave fails (a file sits where the
+    flat/file store goes): the put re-raises it, returns, and leaves
+    nothing cached."""
+    spark = pipeline.spark
+    spark.catalog.clearCache()
+    os.makedirs(pipeline.path("flat"))
+    with open(pipeline.path("flat/file"), "w") as f:
+        f.write("in the way\n")
+    raised = []
+
+    def put():
+        try:
+            pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+        except Exception as e:
+            raised.append(e)
+
+    t = threading.Thread(target=put, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "put did not return"
+    assert len(raised) == 1 and isinstance(raised[0], Py4JJavaError)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

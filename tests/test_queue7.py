@@ -1005,14 +1005,11 @@ def test_queue7_parity_tranche20(spark, con):
     from aced_etl_pod_spark.operators import corpus_ops as cor
     from aced_etl_pod_spark.operators import table_format as tf
 
-    for fn, oracle in [
-        (tf.plan_result_cache, tf.PLAN_RESULT_CACHE_ORACLE),
-        (cor.scan_fixed_width, cor.scan_fixed_width_oracle(SF_SMALL)),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    assert_gated((tf.plan_result_cache, tf.PLAN_RESULT_CACHE_ORACLE))
+    sdf = cor.scan_fixed_width(spark, SF_SMALL).toPandas()
+    ddf = con.execute(cor.scan_fixed_width_oracle(SF_SMALL)).fetchdf()
+    errs = compare(sdf, ddf)
+    assert not errs, f"scan_fixed_width: {errs[:5]}"
 
 
 def test_result_cache_hit_and_invalidation(spark, tmp_path):
@@ -1048,15 +1045,14 @@ def test_result_cache_hit_and_invalidation(spark, tmp_path):
 def test_queue7_parity_tranche21(spark, con):
     from aced_etl_pod_spark.operators import corpus_ops as cor
 
-    for fn, oracle in [
+    assert_gated(
         (ext.ts_seasonal_decompose, ext.TS_SEASONAL_DECOMPOSE_ORACLE),
         (ext.win_outlier_mad, ext.WIN_OUTLIER_MAD_ORACLE),
-        (cor.scan_multiline_json, cor.scan_multiline_json_oracle(SF_SMALL)),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    )
+    sdf = cor.scan_multiline_json(spark, SF_SMALL).toPandas()
+    ddf = con.execute(cor.scan_multiline_json_oracle(SF_SMALL)).fetchdf()
+    errs = compare(sdf, ddf)
+    assert not errs, f"scan_multiline_json: {errs[:5]}"
 
 
 def test_seasonal_decomposition_additivity(spark):
@@ -1075,14 +1071,11 @@ def test_queue7_parity_tranche22(spark, con):
     from aced_etl_pod_spark.operators import corpus_ops as cor
     from aced_etl_pod_spark.operators import udfs
 
-    for fn, oracle in [
-        (cor.scan_file_provenance, cor.scan_file_provenance_oracle(spark, SF_SMALL)),
-        (udfs.udtf_table_argument, udfs.UDTF_TABLE_ARGUMENT_ORACLE),
-    ]:
-        sdf = fn(spark, SF_SMALL).toPandas()
-        ddf = con.execute(oracle).fetchdf()
-        errs = compare(sdf, ddf)
-        assert not errs, f"{fn.__name__}: {errs[:5]}"
+    assert_gated((udfs.udtf_table_argument, udfs.UDTF_TABLE_ARGUMENT_ORACLE))
+    sdf = cor.scan_file_provenance(spark, SF_SMALL).toPandas()
+    ddf = con.execute(cor.scan_file_provenance_oracle(spark, SF_SMALL)).fetchdf()
+    errs = compare(sdf, ddf)
+    assert not errs, f"scan_file_provenance: {errs[:5]}"
 
 
 def test_hll_portable_registers_and_estimate(spark, con):

@@ -1,8 +1,12 @@
-"""Parse-only guard: every import in tools/*.py, bench.py and tests/*.py
-that names a repo file (``tools.X``, ``tests.X`` or a sibling module the
-script finds on its own sys.path) must resolve to a file that still
-exists, so deleting a tool cannot leave a kept one importing it. Nothing
-is executed; third-party and stdlib names are checked with find_spec."""
+"""Parse-only guards over tools/*.py, bench.py and tests/*.py.
+
+Every import that names a repo file (``tools.X``, ``tests.X`` or a
+sibling module the script finds on its own sys.path) must resolve to a
+file that still exists, so deleting a tool cannot leave a kept one
+importing it. And no script puts a literal absolute path on sys.path: a
+script run from one checkout must import that checkout's package, so the
+path is derived from ``__file__``. Nothing is executed; third-party and
+stdlib names are checked with find_spec."""
 
 from __future__ import annotations
 
@@ -53,3 +57,21 @@ def test_repo_imports_resolve():
             if not _resolves(name, here)
         ]
     assert not dangling, f"imports of files that no longer exist: {dangling}"
+
+
+def test_sys_path_is_derived_not_literal():
+    literal = []
+    for path in SOURCES:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        literal += [
+            f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and ast.unparse(node.func) == "sys.path.insert"
+            and len(node.args) == 2
+            and isinstance(node.args[1], ast.Constant)
+            and isinstance(node.args[1].value, str)
+            and os.path.isabs(node.args[1].value)
+        ]
+    assert not literal, f"literal absolute paths put on sys.path: {literal}"

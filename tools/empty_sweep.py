@@ -22,12 +22,13 @@ op returns.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import tempfile
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402

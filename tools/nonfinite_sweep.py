@@ -32,7 +32,7 @@ import time
 import traceback
 import zlib
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402

@@ -10,11 +10,12 @@ values. Exit code 0 iff every checked op matches.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.oracle import compare, duck_con  # noqa: E402
 from aced_etl_pod_spark.registry import registry  # noqa: E402

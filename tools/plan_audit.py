@@ -18,9 +18,10 @@ cheap op; re-running a transform chain triples an expensive one.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402

@@ -42,7 +42,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHILD_FLAG = "SPARK_GRAFT_SPILL_CHILD"
 
@@ -228,7 +228,8 @@ def main() -> int:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__),
              "--sf", sf, "--reps", str(args.reps)],
-            env=env, capture_output=True, text=True, cwd="/root/repo",
+            env=env, capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         wall = time.perf_counter() - t0
         line = next(

@@ -30,10 +30,11 @@ from __future__ import annotations
 import argparse
 import json
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 OPS = (
     "stream_json_shred_ingest",
