@@ -1668,20 +1668,10 @@ def _ivf_serve_fixture(spark: SparkSession, sf_dir: str) -> str:
     contract, functions/similarity.py) while the non-empty _ivf_train
     branch yields array<float>; every reader tolerates both
     (cosine_expr casts, probe returns empty on 0 centroids).
-    Fingerprint-keyed so regenerated testdata invalidates it.
-
-    Publication is ATOMIC (round-10 advice, mirroring
-    tables.load_validated_embeddings): data + _DONE marker are built in
-    a private temp dir and ``os.rename``d into the fingerprinted path,
-    so concurrent sessions can't interleave writes into the live dir
-    and a reader that saw the marker can never scan a half-overwritten
-    cells dir. A losing racer's rename fails (non-empty target) and its
-    temp dir is discarded; superseded fingerprints for the same sf_tag
-    are pruned best-effort after publish."""
-    import os
-    import shutil
-    import tempfile
-
+    Fingerprint-keyed and published through :func:`tables.fixture`, so
+    regenerated testdata invalidates it and a reader that saw the marker
+    never scans a half-written cells dir. 'ivfserve2' names the
+    bucketed-cells layout generation."""
     from aced_etl_pod_spark.functions.similarity import (
         _assign_nearest_centroid,
         _ivf_train,
@@ -1690,26 +1680,14 @@ def _ivf_serve_fixture(spark: SparkSession, sf_dir: str) -> str:
         ivf_rowgroup_bytes,
     )
     from aced_etl_pod_spark.operators.util import finite_vec
-    from aced_etl_pod_spark.tables import scratch_dir
+    from aced_etl_pod_spark.tables import fixture
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    base = scratch_dir()
-    # 'ivfserve2' = bucketed-cells layout generation; the name bump
-    # orphans round-9 per-cell-layout fixtures (evicted below) so a
-    # published old-layout index is never read by a bucket-aware probe
-    name = f"ivfserve2_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .filter(finite_vec(F.col("embedding")))
-        .select("vec_id", "embedding")
-    )
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
+        emb = (
+            load(spark, sf_dir, "embeddings")
+            .filter(finite_vec(F.col("embedding")))
+            .select("vec_id", "embedding")
+        )
         n_rows = emb.count()
         if n_rows == 0:
             # empty-index contract (round-8 ADVICE fix, mirrored):
@@ -1751,33 +1729,8 @@ def _ivf_serve_fixture(spark: SparkSession, sf_dir: str) -> str:
             ).coalesce(1).write.mode("overwrite").parquet(
                 f"{tmp}/centroids"
             )
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)  # atomic publish on the same fs
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    # a concurrent session published first — theirs is
-                    # complete (marker only exists post-rename)
-                    break
-                # marker-less target = partial dir from a pre-atomic
-                # writer or a crash; clear it and rename once more
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish IVF serve index at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    # evict superseded fingerprints of this sf_tag AND any round-9
-    # per-cell-layout fixture ('ivfserve_' prefix, pre-bucketing) —
-    # AGE-GATED so a concurrent reader that resolved the old fingerprint
-    # isn't pulled out from under mid-query (round-11 advice)
-    from aced_etl_pod_spark.tables import evict_stale_fixtures
 
-    evict_stale_fixtures(
-        base, (f"ivfserve2_{sf_tag}_", f"ivfserve_{sf_tag}_"), keep=name
-    )
-    return path
+    return fixture("ivfserve2", sf_dir, ("embeddings.parquet",), build)
 
 
 @op(

@@ -136,54 +136,12 @@ def _q1_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     Degenerate guard: if the group count is more than half the base row
     count (near-unique timestamps — the regime where a summary is just
     a copy), a _DEGENERATE marker is published and the dispatcher keeps
-    the plain scan. Atomic temp-dir + _DONE + rename publish, age-gated
-    eviction — the shred/bucketed-layout idiom."""
-    import os
-    import shutil
-    import tempfile
+    the plain scan. Published through :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture, table_row_count
 
-    from aced_etl_pod_spark.operators.util import finite
-    from aced_etl_pod_spark.tables import (
-        evict_stale_fixtures,
-        scratch_dir,
-        table_row_count,
-    )
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    base = scratch_dir()
-    name = f"q1sum_lineitem_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
-        li = load(spark, sf_dir, "lineitem")
-        qty = finite(F.col("l_quantity"))
-        price = finite(F.col("l_extendedprice"))
-        disc = finite(F.col("l_discount"))
-        disc_price = finite(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        )
-        charge = finite(
-            F.col("l_extendedprice")
-            * (1 - F.col("l_discount"))
-            * (1 + F.col("l_tax"))
-        )
+    def build(tmp):
         summary = (
-            li.groupBy("l_returnflag", "l_linestatus", "l_shipdate")
-            .agg(
-                F.sum(qty).alias("s_qty"),
-                F.count(qty).alias("c_qty"),
-                F.sum(price).alias("s_price"),
-                F.count(price).alias("c_price"),
-                F.sum(disc_price).alias("s_disc_price"),
-                F.sum(charge).alias("s_charge"),
-                F.sum(disc).alias("s_disc"),
-                F.count(disc).alias("c_disc"),
-                F.count("*").alias("n"),
-            )
+            _q1_partials(load(spark, sf_dir, "lineitem"))
             # one small file, sorted on the hot predicate column so the
             # footer min/max enable row-group pruning on date filters
             .coalesce(1)
@@ -192,22 +150,36 @@ def _q1_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
         summary.write.mode("overwrite").parquet(f"{tmp}/summary")
         n_groups = spark.read.parquet(f"{tmp}/summary").count()
         if n_groups * 2 >= max(table_row_count(sf_dir, "lineitem"), 1):
-            open(os.path.join(tmp, "_DEGENERATE"), "w").close()
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish q1 summary at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"q1sum_lineitem_{sf_tag}_",), keep=name)
-    return path
+            open(f"{tmp}/_DEGENERATE", "w").close()
+
+    return fixture("q1sum_lineitem", sf_dir, ("lineitem.parquet",), build)
+
+
+def _q1_partials(li: DataFrame) -> DataFrame:
+    """The q1 summary's decomposable partials per exact dimension key:
+    per-measure (sum, non-null count) under the well-scaled finite()
+    contract, plus count(*) — shared by the full build and the delta
+    merge, so a merged summary re-sums the same nine columns."""
+    qty = finite(F.col("l_quantity"))
+    price = finite(F.col("l_extendedprice"))
+    disc = finite(F.col("l_discount"))
+    disc_price = finite(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    charge = finite(
+        F.col("l_extendedprice")
+        * (1 - F.col("l_discount"))
+        * (1 + F.col("l_tax"))
+    )
+    return li.groupBy("l_returnflag", "l_linestatus", "l_shipdate").agg(
+        F.sum(qty).alias("s_qty"),
+        F.count(qty).alias("c_qty"),
+        F.sum(price).alias("s_price"),
+        F.count(price).alias("c_price"),
+        F.sum(disc_price).alias("s_disc_price"),
+        F.sum(charge).alias("s_charge"),
+        F.sum(disc).alias("s_disc"),
+        F.count(disc).alias("c_disc"),
+        F.count("*").alias("n"),
+    )
 
 
 @op(
@@ -413,11 +385,10 @@ def agg_distinct_count_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan both scales — the dictionary must be metadata, not a per-query
     subquery. Falls back to agg_distinct_count when the type domain
     exceeds 62 (bitmask width)."""
-    import os
+    from aced_etl_pod_spark.tables import fixture_name
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
     types = _event_type_dictionary(
-        sf_dir, f"{st.st_mtime_ns:x}_{st.st_size:x}"
+        sf_dir, fixture_name("types", sf_dir, "events.parquet")
     )
     if len(types) > 62:
         return agg_distinct_count(spark, sf_dir)
@@ -464,28 +435,17 @@ def _user_mask_fixture(spark: SparkSession, sf_dir: str) -> str | None:
     The bit->type mapping rides the fixture (``types`` parquet) so a
     reader never depends on dictionary recomputation order. Returns
     None when the type domain exceeds 62 (mask width) — callers fall
-    back to the exact pair plan. Atomic publish + eviction, q1sum
-    idiom."""
-    import os
-    import shutil
-    import tempfile
+    back to the exact pair plan. Published through
+    :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture, fixture_name
 
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fingerprint = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    types = _event_type_dictionary(sf_dir, fingerprint)
+    types = _event_type_dictionary(
+        sf_dir, fixture_name("types", sf_dir, "events.parquet")
+    )
     if len(types) > 62:
         return None
-    base = scratch_dir()
-    name = f"q10mask_events_{sf_tag}_{fingerprint}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+
+    def build(tmp):
         e = load(spark, sf_dir, "events")
         mapping = (
             F.create_map(
@@ -513,21 +473,8 @@ def _user_mask_fixture(spark: SparkSession, sf_dir: str) -> str | None:
         spark.createDataFrame(
             [(i, t) for i, t in enumerate(types)], "bit int, event_type string"
         ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/types")
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish user masks at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"q10mask_events_{sf_tag}_",), keep=name)
-    return path
+
+    return fixture("q10mask_events", sf_dir, ("events.parquet",), build)
 
 
 @op(
@@ -599,7 +546,7 @@ def merge_user_mask_delta(
     assignment-invariant). Returns None when the merged type domain
     exceeds the 62-bit mask width — the caller falls back to a full
     path, exactly like the builder. Publishes atomically at ``out``
-    (tmp + _DONE + rename, the fixture idiom)."""
+    (tmp + _DONE + rename, as :func:`tables.fixture` does)."""
     import os
     import shutil
     import tempfile
@@ -675,43 +622,12 @@ def merge_q1_summary_delta(
     import shutil
     import tempfile
 
-    from aced_etl_pod_spark.operators.util import finite
-
-    qty = finite(F.col("l_quantity"))
-    price = finite(F.col("l_extendedprice"))
-    disc = finite(F.col("l_discount"))
-    disc_price = finite(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    charge = finite(
-        F.col("l_extendedprice")
-        * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
-    )
-    delta_summary = delta.groupBy(
-        "l_returnflag", "l_linestatus", "l_shipdate"
-    ).agg(
-        F.sum(qty).alias("s_qty"),
-        F.count(qty).alias("c_qty"),
-        F.sum(price).alias("s_price"),
-        F.count(price).alias("c_price"),
-        F.sum(disc_price).alias("s_disc_price"),
-        F.sum(charge).alias("s_charge"),
-        F.sum(disc).alias("s_disc"),
-        F.count(disc).alias("c_disc"),
-        F.count("*").alias("n"),
-    )
+    delta_summary = _q1_partials(delta)
     base = spark.read.parquet(f"{base_fixture}/summary")
     merged = (
         base.unionByName(delta_summary)
         .groupBy("l_returnflag", "l_linestatus", "l_shipdate")
-        .agg(
-            *[
-                F.sum(c).alias(c)
-                for c in (
-                    "s_qty", "c_qty", "s_price", "c_price",
-                    "s_disc_price", "s_charge", "s_disc", "c_disc", "n",
-                )
-            ]
-        )
+        .agg(*[F.sum(c).alias(c) for c in delta_summary.columns[3:]])
         .coalesce(1)
         .sortWithinPartitions("l_shipdate")
     )
@@ -946,27 +862,14 @@ def _rollup_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     o_orderdate) and persists (count, sum(finite(o_totalprice)))
     partials. Exact-value date keying keeps every date-range predicate
     answerable from the summary (the q1 principle); ~dates x 15 flag
-    combos rows (~36 k) at any corpus size. Atomic publish + age-gated
-    eviction, the q1sum idiom."""
-    import os
-    import shutil
-    import tempfile
+    combos rows (~36 k) at any corpus size. Published through
+    :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture
 
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    base_dir = scratch_dir()
-    name = f"q9sum_orders_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base_dir, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base_dir)
-    try:
-        o = load(spark, sf_dir, "orders")
+    def build(tmp):
         (
-            o.groupBy("o_orderpriority", "o_orderstatus", "o_orderdate")
+            load(spark, sf_dir, "orders")
+            .groupBy("o_orderpriority", "o_orderstatus", "o_orderdate")
             .agg(
                 F.count("*").alias("_n"),
                 F.sum(finite(F.col("o_totalprice"))).alias("_s"),
@@ -976,21 +879,8 @@ def _rollup_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(f"{tmp}/summary")
         )
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish rollup summary at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base_dir, (f"q9sum_orders_{sf_tag}_",), keep=name)
-    return path
+
+    return fixture("q9sum_orders", sf_dir, ("orders.parquet",), build)
 
 
 @op(

@@ -45,7 +45,7 @@ from aced_etl_pod_spark.operators.util import (
     money_sql,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load, scratch_dir, session_scratch_dir
+from aced_etl_pod_spark.tables import fixture, load, session_scratch_dir
 
 # Sliding-window chunking: CHUNK_TOKENS-token windows every CHUNK_STRIDE
 # tokens, last window right-aligned so no tail token is dropped.
@@ -1410,21 +1410,16 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     The fixture is a real partitioned write of orders to scratch — the
     pruning needs actual partition directories to skip."""
     o = load(spark, sf_dir, "orders")
-    import os
-
-    # Scratch path keyed by the source file's content fingerprint
-    # (mtime+size), not just the sf_dir basename: regenerated testdata at
-    # the same path must invalidate the cached partitioned fixture, or the
-    # op would silently join stale facts against a fresh oracle.
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    out = scratch_dir(
-        f"dpp_orders_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
+    # keyed by the source's fingerprint: regenerated testdata at the same
+    # path must never join stale facts against a fresh oracle
+    out = fixture(
+        "dpp_orders",
+        sf_dir,
+        ("orders.parquet",),
+        lambda tmp: o.write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(tmp),
     )
-
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     fact = spark.read.schema(o.schema).parquet(out)
     dim = (
         o.select(F.col("o_orderstatus").alias("status"))
@@ -2392,22 +2387,16 @@ def _fixed_width_fixture(sf_dir: str) -> str:
     """Deterministic mainframe-style fixed-width export of the orders
     subset (o_orderkey % 11 == 0), one right-padded field per layout
     column, written once per source fingerprint."""
-    import os
-
     import duckdb
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = scratch_dir(f"fixedwidth_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
-    path = os.path.join(out, "orders.fw")
-    if not os.path.exists(path + ".done"):
+    def build(tmp):
         rows = duckdb.connect().execute(
             f"""SELECT o_orderkey, o_custkey, o_orderstatus,
                        printf('%.2f', o_totalprice) AS price
                 FROM '{sf_dir}/orders.parquet'
                 WHERE o_orderkey % 11 = 0 ORDER BY o_orderkey"""
         ).fetchall()
-        with open(path, "w") as f:
+        with open(f"{tmp}/orders.fw", "w") as f:
             # mainframe convention: a NULL field is BLANKS at its offsets;
             # a value that does NOT FIT its field is unrepresentable in
             # the layout and writes as blanks too (Python's width spec is
@@ -2422,8 +2411,9 @@ def _fixed_width_fixture(sf_dir: str) -> str:
                 f.write(
                     fw(ok, 10) + fw(ck, 8) + fw(stt, 1) + fw(price, 12) + "\n"
                 )
-        open(path + ".done", "w").close()
-    return path
+
+    out = fixture("fixedwidth", sf_dir, ("orders.parquet",), build)
+    return f"{out}/orders.fw"
 
 
 SCAN_FIXED_WIDTH_ORACLE = """
@@ -2500,15 +2490,10 @@ def _multiline_json_fixture(sf_dir: str) -> str:
     many lines — the API-export format, vs NDJSON's record-per-line),
     built deterministically from the orders subset."""
     import json
-    import os
 
     import duckdb
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = scratch_dir(f"mljson_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
-    path = os.path.join(out, "orders.json")
-    if not os.path.exists(path + ".done"):
+    def build(tmp):
         rows = duckdb.connect().execute(
             f"""SELECT o_orderkey, o_orderstatus,
                        round(o_totalprice, 2) AS o_totalprice
@@ -2519,10 +2504,11 @@ def _multiline_json_fixture(sf_dir: str) -> str:
             {"o_orderkey": k, "o_orderstatus": s, "o_totalprice": p}
             for k, s, p in rows
         ]
-        with open(path, "w") as f:
+        with open(f"{tmp}/orders.json", "w") as f:
             json.dump(docs, f, indent=2)
-        open(path + ".done", "w").close()
-    return path
+
+    out = fixture("mljson", sf_dir, ("orders.parquet",), build)
+    return f"{out}/orders.json"
 
 
 SCAN_MULTILINE_JSON_ORACLE = """
@@ -2580,22 +2566,17 @@ def scan_multiline_json_oracle(sf_dir: str) -> str:
 def _provenance_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Status-partitioned parquet copy of orders (3 files) so provenance
     has several sources to attribute."""
-    import os
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = scratch_dir(f"prov_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
-    marker = os.path.join(out, "_SUCCESS_FIX")
-    if not os.path.exists(marker):
-        o = load(spark, sf_dir, "orders")
+    def build(tmp):
         (
-            o.repartition("o_orderstatus")
+            load(spark, sf_dir, "orders")
+            .repartition("o_orderstatus")
             .write.mode("overwrite")
             .partitionBy("o_orderstatus")
-            .parquet(out)
+            .parquet(tmp)
         )
-        open(marker, "w").close()
-    return out
+
+    return fixture("prov", sf_dir, ("orders.parquet",), build)
 
 
 SCAN_FILE_PROVENANCE_ORACLE = """

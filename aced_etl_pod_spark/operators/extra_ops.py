@@ -400,24 +400,11 @@ def _minute_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     summary's key columns. ~minutes x types rows (194 k at the x800
     ladder) regardless of event count. The minute grain — not hour —
     is what makes this a generic silver artifact rather than a cached
-    answer. Atomic publish + age-gated eviction, the q1sum idiom."""
-    import os
-    import shutil
-    import tempfile
-
+    answer. Published through :func:`tables.fixture`."""
     from aced_etl_pod_spark.operators.util import finite
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
+    from aced_etl_pod_spark.tables import fixture
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    base = scratch_dir()
-    name = f"minsum_events_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
         e = load(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
         m = F.expr(
             "(unix_micros(ts) - pmod(unix_micros(ts), 60000000))"
@@ -434,21 +421,8 @@ def _minute_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(f"{tmp}/minute")
         )
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish minute summary at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"minsum_events_{sf_tag}_",), keep=name)
-    return path
+
+    return fixture("minsum_events", sf_dir, ("events.parquet",), build)
 
 
 @op(

@@ -455,47 +455,18 @@ def _shredded_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     Spark parse engines are ~20x DuckDB's yyjson — so the 100 TB answer
     is ARCHITECTURAL: shred the document into typed columns once at
     ingest, the load_validated_embeddings posture). First access per
-    source fingerprint writes (event_type, k DOUBLE) parquet to scratch;
-    publication is atomic (temp dir + _DONE marker + os.rename, losing
-    racer discarded) and superseded fingerprints are evicted."""
-    import os
-    import shutil
-    import tempfile
+    source fingerprint writes (event_type, k DOUBLE) parquet to scratch
+    through :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture
 
-    from aced_etl_pod_spark.tables import scratch_dir
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    base = scratch_dir()
-    name = f"shred_events_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
         e = load(spark, sf_dir, "events")
         k = json_key_double_fastpath(F.col("props"), "k")
         e.select("event_type", k.alias("k")).write.mode(
             "overwrite"
         ).parquet(f"{tmp}/events_k")
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish shredded events at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    from aced_etl_pod_spark.tables import evict_stale_fixtures
 
-    evict_stale_fixtures(base, (f"shred_events_{sf_tag}_",), keep=name)
-    return path
+    return fixture("shred_events", sf_dir, ("events.parquet",), build)
 
 
 @op(
@@ -572,27 +543,13 @@ def _schema_shredded_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     Both the raw envelopes (``raw/``) and the shredded columns
     (``shred/``) persist under one fingerprint so the payoff is
     measurable: query-over-shred vs query-over-raw-parse on identical
-    data (PLANS.md "Round-11: schema-driven shred-at-ingest"). Atomic
-    publish + age-gated eviction, the
-    ivfserve2/shred idiom. Empty corpus publishes an empty shred with
-    the stable 5-column schema (the inference sample is empty, so the
-    schema comes from the contract, not the data)."""
-    import os
-    import shutil
-    import tempfile
+    data (PLANS.md "Round-11: schema-driven shred-at-ingest"). Published
+    through :func:`tables.fixture`. Empty corpus publishes an empty
+    shred with the stable 5-column schema (the inference sample is
+    empty, so the schema comes from the contract, not the data)."""
+    from aced_etl_pod_spark.tables import fixture
 
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    base = scratch_dir()
-    name = f"shredsch_events_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
         e = load(spark, sf_dir, "events")
         envelope = e.select(
             F.to_json(
@@ -640,21 +597,8 @@ def _schema_shredded_events_fixture(spark: SparkSession, sf_dir: str) -> str:
                 " value double, k double",
             )
         shred.write.mode("overwrite").parquet(f"{tmp}/shred")
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish schema shred at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"shredsch_events_{sf_tag}_",), keep=name)
-    return path
+
+    return fixture("shredsch_events", sf_dir, ("events.parquet",), build)
 
 
 FN_JSON_SHRED_SCHEMA_ORACLE = """

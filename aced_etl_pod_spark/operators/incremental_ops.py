@@ -68,7 +68,7 @@ from aced_etl_pod_spark.operators.util import (
     money_sql,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load, scratch_dir
+from aced_etl_pod_spark.tables import fixture_name, load, scratch_dir
 
 # ---------------------------------------------------------------------------
 # mv_incremental_refresh
@@ -104,11 +104,9 @@ def _mv_partials(df: DataFrame) -> DataFrame:
 
 
 def mv_snapshot_path(sf_dir: str) -> str:
-    """Snapshot location, fingerprint-keyed like the DPP fixture so
+    """Snapshot location, named by :func:`tables.fixture_name` so
     regenerated testdata invalidates it (ADVICE r5 discipline)."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    return scratch_dir(f"mv_sales_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    return scratch_dir(fixture_name("mv_sales", sf_dir, "orders.parquet"))
 
 
 @op(
@@ -802,9 +800,7 @@ def _mv_join_partials(orders: DataFrame, customer: DataFrame) -> DataFrame:
 
 
 def mv_join_snapshot_path(sf_dir: str) -> str:
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    return scratch_dir(f"mv_joinseg_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    return scratch_dir(fixture_name("mv_joinseg", sf_dir, "orders.parquet"))
 
 
 @op(

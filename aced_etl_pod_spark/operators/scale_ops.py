@@ -107,81 +107,54 @@ def bucketed_layout(
       bucket and writes exactly ONE file — the single-file-per-bucket
       condition under which Spark trusts ``sortBy`` and drops the
       per-partition sort from SMJ plans.
-    * files live under a fingerprint-keyed scratch dir with the atomic
-      temp-dir + _DONE + rename publish (the ivfserve2/shred idiom), so
-      concurrent builders can't interleave and a fresh session
-      re-REGISTERS the existing files (CREATE TABLE ... CLUSTERED BY ...
-      LOCATION) instead of rewriting them — the catalog entry is
-      session-local, the bytes are shared.
-    * eviction of superseded fingerprints is age-gated
-      (tables.evict_stale_fixtures).
+    * files live under a :func:`tables.fixture` dir (fingerprint-keyed,
+      atomic publish, age-gated eviction), so concurrent builders can't
+      interleave and a fresh session re-REGISTERS the existing files
+      (CREATE TABLE ... CLUSTERED BY ... LOCATION) instead of rewriting
+      them — the catalog entry is session-local, the bytes are shared.
 
     Returns {table_name: DataFrame} reading the bucketed tables."""
     import os
     import re
-    import shutil
-    import tempfile
 
     from aced_etl_pod_spark.session import tune
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
+    from aced_etl_pod_spark.tables import fixture, fixture_name
 
     tune(spark)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    stats = [
-        os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in sorted(table_keys)
-    ]
-    fp = "_".join(f"{s.st_mtime_ns:x}_{s.st_size:x}" for s in stats)
-    name = f"{label}_{sf_tag}_{fp}"
-    base = scratch_dir()
-    root = os.path.join(base, name)
-    marker = os.path.join(root, "_DONE")
-    tag = re.sub(r"[^0-9a-zA-Z_]", "_", f"{sf_tag}_{fp}_{n_buckets}")
+    sources = tuple(f"{t}.parquet" for t in sorted(table_keys))
+    name = fixture_name(label, sf_dir, *sources)
+    # {sf_tag}_{fingerprints}: the catalog names change with the bytes
+    tag = re.sub(r"[^0-9a-zA-Z_]", "_", f"{name[len(label) + 1:]}_{n_buckets}")
     tables = {
         t: (f"{label}_{t}_{tag}", key) for t, key in table_keys.items()
     }
 
-    if not os.path.exists(marker):
-        tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-        try:
-            for src, (tbl, key) in tables.items():
-                tmp_tbl = f"{tbl}_build"
-                spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-                (
-                    load(spark, sf_dir, src)
-                    .repartition(n_buckets, F.col(key))
-                    .write.mode("overwrite")
-                    .bucketBy(n_buckets, key)
-                    .sortBy(key)
-                    # zstd: 32% smaller than snappy on the x800 orders/
-                    # customer layout (1.20 vs 1.76 GB) at WARM-read
-                    # parity (0.384 vs 0.398 s isolated q4) — pay-at-
-                    # write-time bytes are the layout's recurring cost
-                    # at 100 TB (storage + every cold/evicted re-read).
-                    # Cold-read deltas weren't claimable on this sandbox
-                    # (host-level cache pollutes drop_caches A/Bs).
-                    .option("compression", "zstd")
-                    .option("path", os.path.join(tmp, src))
-                    .format("parquet")
-                    .saveAsTable(tmp_tbl)
-                )
-                # drop the catalog entry only (external table: files stay)
-                spark.sql(f"DROP TABLE {tmp_tbl}")
-            open(os.path.join(tmp, "_DONE"), "w").close()
-            for _ in range(2):
-                try:
-                    os.rename(tmp, root)
-                    break
-                except OSError:
-                    if os.path.exists(marker):
-                        break  # a concurrent builder published first
-                    shutil.rmtree(root, ignore_errors=True)
-            else:
-                raise OSError(f"could not publish bucketed layout at {root}")
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        evict_stale_fixtures(base, (f"{label}_{sf_tag}_",), keep=name)
+    def build(tmp):
+        for src, (tbl, key) in tables.items():
+            tmp_tbl = f"{tbl}_build"
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+            (
+                load(spark, sf_dir, src)
+                .repartition(n_buckets, F.col(key))
+                .write.mode("overwrite")
+                .bucketBy(n_buckets, key)
+                .sortBy(key)
+                # zstd: 32% smaller than snappy on the x800 orders/
+                # customer layout (1.20 vs 1.76 GB) at WARM-read
+                # parity (0.384 vs 0.398 s isolated q4) — pay-at-
+                # write-time bytes are the layout's recurring cost
+                # at 100 TB (storage + every cold/evicted re-read).
+                # Cold-read deltas weren't claimable on this sandbox
+                # (host-level cache pollutes drop_caches A/Bs).
+                .option("compression", "zstd")
+                .option("path", os.path.join(tmp, src))
+                .format("parquet")
+                .saveAsTable(tmp_tbl)
+            )
+            # drop the catalog entry only (external table: files stay)
+            spark.sql(f"DROP TABLE {tmp_tbl}")
 
+    root = fixture(label, sf_dir, sources, build)
     out = {}
     for src_name, (tbl, key) in tables.items():
         if not spark.catalog.tableExists(tbl):
@@ -311,33 +284,11 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     job just to discard it: a probe-flagged fixture publishes the
     _DEGENERATE marker with no summary files and the dispatcher keeps
     the bucketed join (the summary op itself falls back the same way).
-    Atomic temp-dir + _DONE + rename publish, age-gated eviction — the
-    q1sum/shred/bucketed-layout idiom."""
-    import os
-    import shutil
-    import tempfile
-
+    Published through :func:`tables.fixture`."""
     from aced_etl_pod_spark.operators.util import finite
-    from aced_etl_pod_spark.tables import (
-        evict_stale_fixtures,
-        scratch_dir,
-        table_row_count,
-    )
+    from aced_etl_pod_spark.tables import fixture, table_row_count
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    stats = [
-        os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in ("orders", "customer")
-    ]
-    fp = "_".join(f"{s.st_mtime_ns:x}_{s.st_size:x}" for s in stats)
-    base = scratch_dir()
-    name = f"q2sum_star_{sf_tag}_{fp}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
         orders = load(spark, sf_dir, "orders").select(
             "o_custkey", "o_totalprice"
         )
@@ -356,7 +307,7 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
         n_keys = customer.select("c_nationkey").distinct().count()
         if n_keys * 2 >= bound:
-            open(os.path.join(tmp, "_DEGENERATE"), "w").close()
+            open(f"{tmp}/_DEGENERATE", "w").close()
         else:
             summary = (
                 orders.join(customer, orders.o_custkey == customer.c_custkey)
@@ -370,22 +321,11 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
             summary.write.mode("overwrite").parquet(f"{tmp}/summary")
             n_groups = spark.read.parquet(f"{tmp}/summary").count()
             if n_groups * 2 >= bound:
-                open(os.path.join(tmp, "_DEGENERATE"), "w").close()
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish q2 summary at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"q2sum_star_{sf_tag}_",), keep=name)
-    return path
+                open(f"{tmp}/_DEGENERATE", "w").close()
+
+    return fixture(
+        "q2sum_star", sf_dir, ("orders.parquet", "customer.parquet"), build
+    )
 
 
 @op(

@@ -28,7 +28,12 @@ from aced_etl_pod_spark.sources.txnlog import (
     txn_read,
     txn_write,
 )
-from aced_etl_pod_spark.tables import load, scratch_dir, session_scratch_dir
+from aced_etl_pod_spark.tables import (
+    fixture_name,
+    load,
+    scratch_dir,
+    session_scratch_dir,
+)
 
 
 def build_orders_txn_table(spark: SparkSession, sf_dir: str) -> str:
@@ -42,9 +47,7 @@ def build_orders_txn_table(spark: SparkSession, sf_dir: str) -> str:
     Data files are range-distributed on o_orderkey (4 files/commit) with
     footer min/max recorded in the log — the stats that power manifest
     skipping."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_orders_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_orders", sf_dir, "orders.parquet"))
     if current_version(table) == 2:
         return table
     shutil.rmtree(table, ignore_errors=True)
@@ -99,9 +102,7 @@ def build_lineitem_txn_table(spark: SparkSession, sf_dir: str) -> str:
     skipping against real parquet row groups (~25k live rows at sf0.01,
     ~250k at sf0.1). Cached per source fingerprint like the orders
     fixture."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    table = scratch_dir(f"txn_lineitem_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_lineitem", sf_dir, "lineitem.parquet"))
     if current_version(table) == 2:
         return table
     shutil.rmtree(table, ignore_errors=True)
@@ -330,9 +331,7 @@ def build_changefeed_table(spark: SparkSession, sf_dir: str) -> str:
     """Two-commit table for the change feed: c0 = orders with key%5 in
     (0,1); c1 OVERWRITES with key%5 in (1,2) — so v0→v1 has inserts
     (%5=2), deletes (%5=0) and carried-over rows (%5=1)."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_cdc_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_cdc", sf_dir, "orders.parquet"))
     if current_version(table) == 1:
         return table
     shutil.rmtree(table, ignore_errors=True)
@@ -470,9 +469,7 @@ def txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_set_schema,
     )
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_schevo_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_schevo", sf_dir, "orders.parquet"))
     o = load(spark, sf_dir, "orders")
     if current_version(table) != 3:
         shutil.rmtree(table, ignore_errors=True)
@@ -534,10 +531,8 @@ def build_zorder_table(spark: SparkSession, sf_dir: str) -> str:
     the same broadcast-boundary discipline as feature_quantile_bucketize),
     bit-interleaved into a Morton code, range-partitioned AND sorted on it,
     then committed to the txn log with per-file min/max for BOTH columns.
-    Cached per source fingerprint (DPP discipline)."""
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_zorder_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    Cached per source fingerprint (:func:`tables.fixture_name`)."""
+    table = scratch_dir(fixture_name("txn_zorder", sf_dir, "orders.parquet"))
     if current_version(table) >= 0:
         return table
     o = load(spark, sf_dir, "orders").withColumn(
@@ -666,9 +661,7 @@ def build_mor_orders_table(spark: SparkSession, sf_dir: str) -> str:
     delete file — NO data file rewritten. Cached per source fingerprint."""
     from aced_etl_pod_spark.sources.txnlog import txn_delete_keys
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_mor_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_mor", sf_dir, "orders.parquet"))
     if current_version(table) == 1:
         return table
     shutil.rmtree(table, ignore_errors=True)
@@ -760,9 +753,7 @@ def build_bloom_indexed_table(spark: SparkSession, sf_dir: str) -> str:
     same either way."""
     import json as _json
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(f"txn_bloom_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_bloom", sf_dir, "orders.parquet"))
     idx_path = os.path.join(table, "_index", "bloom_o_orderkey.json")
     if current_version(table) == 0 and os.path.exists(idx_path):
         return table
@@ -907,9 +898,7 @@ def build_upsert_state_table(spark: SparkSession, sf_dir: str) -> str:
     breaks a sequence-unaware delete."""
     from aced_etl_pod_spark.sources.txnlog import txn_upsert
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    table = scratch_dir(f"txn_upsert_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
+    table = scratch_dir(fixture_name("txn_upsert", sf_dir, "events.parquet"))
     if current_version(table) == 3:
         return table
     shutil.rmtree(table, ignore_errors=True)
@@ -1064,11 +1053,7 @@ def txnlog_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB table."""
     from aced_etl_pod_spark.sources.txnlog import txn_overwrite_partition
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    table = scratch_dir(
-        f"txn_orders_part_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    )
+    table = scratch_dir(fixture_name("txn_orders_part", sf_dir, "orders.parquet"))
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -1294,11 +1279,7 @@ def txnlog_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_write_checked,
     )
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    table = scratch_dir(
-        f"txn_checked_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    )
+    table = scratch_dir(fixture_name("txn_checked", sf_dir, "orders.parquet"))
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     ).filter(F.col("o_totalprice") > 0)

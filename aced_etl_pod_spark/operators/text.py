@@ -152,25 +152,11 @@ def _token_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
 
     ntok uses the same JVM ``size(split(text, ' '))`` count the
     query-path kernels compute (count_substring+1 ≡ split-size for
-    non-null text; NULL text → NULL ntok, counted in n only). Atomic
-    temp-dir + _DONE + rename publish, age-gated eviction — the
-    shred/q1sum idiom."""
-    import os
-    import shutil
-    import tempfile
+    non-null text; NULL text → NULL ntok, counted in n only). Published
+    through :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture
 
-    from aced_etl_pod_spark.tables import evict_stale_fixtures, scratch_dir
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    base = scratch_dir()
-    name = f"toksum_documents_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    path = os.path.join(base, name)
-    marker = os.path.join(path, "_DONE")
-    if os.path.exists(marker):
-        return path
-    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-    try:
+    def build(tmp):
         d = load(spark, sf_dir, "documents")
         ntok = F.when(
             F.col("text").isNotNull(),
@@ -194,21 +180,8 @@ def _token_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
             .coalesce(1)
         )
         gold.write.mode("overwrite").parquet(f"{tmp}/lang")
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        for _ in range(2):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.exists(marker):
-                    break
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            raise OSError(f"could not publish token stats at {path}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    evict_stale_fixtures(base, (f"toksum_documents_{sf_tag}_",), keep=name)
-    return path
+
+    return fixture("toksum_documents", sf_dir, ("documents.parquet",), build)
 
 
 @op(
@@ -1179,13 +1152,11 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Index contents: band rows only (fixed ~24 bytes/doc/band); shingle
     arrays are re-joined once per surviving candidate, never stored or
     shuffled wholesale (functions/dedup.py's O(candidates) discipline)."""
-    import os
-
     from aced_etl_pod_spark.functions.dedup import (
         _shingled_signatures,
         band_buckets_expr,
     )
-    from aced_etl_pod_spark.tables import scratch_dir
+    from aced_etl_pod_spark.tables import fixture
 
     num_hashes, bands, threshold, cap = 32, 8, 0.5, 200
     d = load(spark, sf_dir, "documents")
@@ -1201,14 +1172,14 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # v2: cache key versioned with the hash scheme — a persisted index
     # built with a previous scheme must never satisfy a new-scheme run.
-    idx = scratch_dir(f"mh_index_v2_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}")
-    marker = os.path.join(idx, "_SUCCESS")
-    if not os.path.exists(marker):
-        banded(corpus).write.mode("overwrite").parquet(idx)
+    idx = fixture(
+        "mh_index_v2",
+        sf_dir,
+        ("documents.parquet",),
+        lambda tmp: banded(corpus).write.mode("overwrite").parquet(tmp),
+    )
     stored = spark.read.parquet(idx)
     allb = stored.unionAll(banded(inc))
     from pyspark.sql.window import Window as _W

@@ -127,7 +127,10 @@ class EtlPodPipeline:
 
         envelopes = (
             self.spark.read.schema(ENVELOPE_SCHEMA)
-            .json(os.path.join(source, "*.ndjson"))
+            # the directory itself, not a glob path: a glob sends Spark's
+            # _spark_metadata lookup to a path that cannot exist
+            .option("pathGlobFilter", "*.ndjson")
+            .json(source)
             .withColumn("project_id", F.lit(project_id))
             .cache()  # reused by graph, flat, discovery, raw — one scan
         )

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import functools as _functools
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -114,19 +115,85 @@ def evict_stale_fixtures(
         shutil.rmtree(full, ignore_errors=True)
 
 
-def scratch_dir(sub: str = "") -> str:
-    """Writable scratch area for sink / round-trip operators (gitignored).
+_DEFAULT_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 
-    SHARED across sessions — correct only for fingerprint-keyed fixture
-    dirs with atomic publish (temp dir + _DONE + rename) and age-gated
-    eviction. EPHEMERAL state (streaming checkpoints, rmtree-then-rebuild
-    sinks, test scratch) must use :func:`session_scratch_dir` instead:
-    two concurrent runners sharing a checkpoint dir or an
-    evict-then-rebuild cycle corrupt each other (round-11 verdict item —
-    the double-pytest races on test_wm_evict / ivf_schema_parity)."""
-    base = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+
+def scratch_dir(sub: str = "") -> str:
+    """Writable scratch area for sink / round-trip operators (gitignored;
+    ``SPARK_GRAFT_SCRATCH`` overrides the checkout's ``.scratch``).
+
+    SHARED across sessions: :func:`fixture` is the only publisher of
+    build-once artifacts into it (fingerprint-keyed name, temp dir +
+    _DONE + rename, age-gated eviction). The ``txn_*`` / ``mv_*`` tables
+    that later ops mutate through the txn log keep their own lifecycle
+    and take only their names from :func:`fixture_name`. EPHEMERAL
+    state (streaming checkpoints, rmtree-then-rebuild sinks, test
+    scratch) must use :func:`session_scratch_dir` instead: two
+    concurrent runners sharing a checkpoint dir or an evict-then-rebuild
+    cycle corrupt each other (round-11 verdict item — the double-pytest
+    races on test_wm_evict / ivf_schema_parity)."""
+    base = os.environ.get("SPARK_GRAFT_SCRATCH", _DEFAULT_SCRATCH)
     path = os.path.join(base, sub) if sub else base
     os.makedirs(path, exist_ok=True)
+    return path
+
+
+def fixture_name(label: str, sf_dir: str, *sources: str) -> str:
+    """``{label}_{sf_tag}_{mtime_ns:x}_{size:x}[_…]`` over ``sources``
+    (paths relative to ``sf_dir``, in the order given): the one source
+    fingerprint, so a regenerated table at the same path gets a new name
+    and never reuses a copy derived from its old bytes."""
+    parts = [label, sf_dir.rstrip("/").rsplit("/", 1)[-1]]
+    for src in sources:
+        st = os.stat(os.path.join(sf_dir, src))
+        parts.append(f"{st.st_mtime_ns:x}_{st.st_size:x}")
+    return "_".join(parts)
+
+
+def fixture(
+    label: str, sf_dir: str, sources: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """Build-once derived artifact under the shared scratch: the path of
+    ``fixture_name(label, sf_dir, *sources)``, calling ``build(tmp)``
+    only when no complete copy exists yet.
+
+    ``build`` writes into a private ``.{name}.tmp.*`` dir that is marked
+    _DONE and ``os.rename``d into place, so a reader that saw the marker
+    never scans a half-written dir. The first publisher wins: a losing
+    racer finds the marker and discards its copy; a marker-less target
+    (a crashed writer) is cleared and the rename retried once. The temp
+    dir is always removed, so a failing ``build`` leaves nothing behind.
+    After a build, superseded fingerprints of the same label and sf_tag
+    are evicted through :func:`evict_stale_fixtures`' age gate."""
+    import shutil
+    import tempfile
+
+    name = fixture_name(label, sf_dir, *sources)
+    base = scratch_dir()
+    path = os.path.join(base, name)
+    marker = os.path.join(path, "_DONE")
+    if os.path.exists(marker):
+        return path
+    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
+    try:
+        build(tmp)
+        open(os.path.join(tmp, "_DONE"), "w").close()
+        for _ in range(2):
+            try:
+                os.rename(tmp, path)  # atomic publish on the same fs
+                break
+            except OSError:
+                if os.path.exists(marker):
+                    break  # a concurrent builder published first
+                shutil.rmtree(path, ignore_errors=True)
+        else:
+            raise OSError(f"could not publish fixture at {path}")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    evict_stale_fixtures(base, (f"{label}_{sf_tag}_",), keep=name)
     return path
 
 
@@ -158,14 +225,9 @@ def load_validated_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy to scratch; every later scan reads pre-validated vectors with
     zero per-row guard work.
 
-    Publication is ATOMIC (round-9 advice): the copy is built in a
-    private temp dir (data + marker) and ``os.rename``d into place, so a
-    concurrent session that already saw the marker can never observe a
-    half-overwritten data dir — the live dir is immutable once visible.
-    A losing racer's rename fails (non-empty target) and its temp dir is
-    discarded. Superseded fingerprints for the same sf_tag are pruned
-    best-effort after publish, so validated copies don't accumulate as
-    the source regenerates across sweep rounds.
+    Published through :func:`fixture`, so a concurrent session never
+    observes a half-written copy and superseded fingerprints don't
+    accumulate as the source regenerates across sweep rounds.
 
     At 100 TB this is the standard corpus-curation posture — validation
     is a bounded one-time pass at ingest (where the quarantine/DLQ
@@ -178,47 +240,13 @@ def load_validated_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from aced_etl_pod_spark.operators.util import finite_vec
 
-    import shutil
-    import tempfile
+    def build(tmp):
+        load(spark, sf_dir, "embeddings").filter(
+            finite_vec(F.col("embedding"))
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "emb"))
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_dir()
-    name = f"validated_emb_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    out = os.path.join(base, name)
-    marker = os.path.join(out, "_VALIDATED")
-    data = os.path.join(out, "emb")
-    if not os.path.exists(marker):
-        tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-        try:
-            load(spark, sf_dir, "embeddings").filter(
-                finite_vec(F.col("embedding"))
-            ).write.mode("overwrite").parquet(os.path.join(tmp, "emb"))
-            open(os.path.join(tmp, "_VALIDATED"), "w").close()
-            for _ in range(2):
-                try:
-                    os.rename(tmp, out)  # atomic publish on the same fs
-                    break
-                except OSError:
-                    if os.path.exists(marker):
-                        # a concurrent session published first — theirs
-                        # is complete (marker only exists post-rename)
-                        break
-                    # marker-less target = partial dir from a pre-atomic
-                    # writer or a crash; clear it and rename once more
-                    shutil.rmtree(out, ignore_errors=True)
-            else:
-                raise OSError(f"could not publish validated copy at {out}")
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # best-effort eviction: older fingerprints of the SAME sf_tag are
-        # superseded (the source file was regenerated) — drop them so
-        # scratch doesn't grow one copy per sweep round. Age-gated so a
-        # concurrent reader that just resolved the old fingerprint isn't
-        # deleted mid-scan (round-11 advice).
-        evict_stale_fixtures(base, (f"validated_emb_{sf_tag}_",), keep=name)
-    return spark.read.parquet(data)
+    path = fixture("validated_emb", sf_dir, ("embeddings.parquet",), build)
+    return spark.read.parquet(os.path.join(path, "emb"))
 
 
 def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,12 +270,9 @@ def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     null/ragged slots (the _flatten_embeddings contract: a foreign
     input must error, not corrupt), and float32 bits round-trip exactly,
     so every downstream cosine is bit-identical to the list-column
-    kernels. Same fingerprint-keyed atomic publish + age-gated eviction
-    as the validated copy it derives from; snappy codec (hot-full-scan
-    artifact — the r11 codec rule)."""
-    import shutil
-    import tempfile
-
+    kernels. Published through :func:`fixture` like the validated copy
+    it derives from; snappy codec (hot-full-scan artifact — the r11
+    codec rule)."""
     from pyspark.sql.types import (
         BinaryType,
         LongType,
@@ -255,80 +280,57 @@ def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base = scratch_dir()
-    name = f"packed_emb_{sf_tag}_{st.st_mtime_ns:x}_{st.st_size:x}"
-    out = os.path.join(base, name)
-    marker = os.path.join(out, "_DONE")
-    data = os.path.join(out, "emb")
-    if not os.path.exists(marker):
-        validated = load_validated_embeddings(spark, sf_dir).select(
-            "vec_id", "embedding"
-        )
+    def pack(batches):
+        import numpy as np
+        import pyarrow as pa
 
-        def pack(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            for b in batches:
-                n = b.num_rows
-                if n == 0:
-                    continue
-                ids = b.column(0)
-                if isinstance(ids, pa.ChunkedArray):
-                    ids = ids.combine_chunks()
-                lst = b.column(1)
-                if isinstance(lst, pa.ChunkedArray):
-                    lst = lst.combine_chunks()
-                if lst.null_count:
-                    raise ValueError(
-                        "null embedding slots reached the packer; "
-                        "load_validated_embeddings guarantees none"
-                    )
-                flat = lst.flatten().to_numpy(zero_copy_only=False)
-                if len(flat) % n:
-                    raise ValueError(
-                        f"ragged embedding lists: {len(flat)} values "
-                        f"for {n} rows"
-                    )
-                dim = len(flat) // n
-                loff = np.frombuffer(lst.buffers()[1], dtype=np.int32)[
-                    lst.offset : lst.offset + n + 1
-                ]
-                if (np.diff(loff) != dim).any():
-                    raise ValueError("ragged embedding lists in batch")
-                boff = pa.py_buffer(
-                    (np.arange(n + 1, dtype=np.int32) * (dim * 4)).tobytes()
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            ids = b.column(0)
+            if isinstance(ids, pa.ChunkedArray):
+                ids = ids.combine_chunks()
+            lst = b.column(1)
+            if isinstance(lst, pa.ChunkedArray):
+                lst = lst.combine_chunks()
+            if lst.null_count:
+                raise ValueError(
+                    "null embedding slots reached the packer; "
+                    "load_validated_embeddings guarantees none"
                 )
-                bdata = pa.py_buffer(flat.astype("<f4", copy=False).tobytes())
-                vec = pa.Array.from_buffers(pa.binary(), n, [None, boff, bdata])
-                yield pa.RecordBatch.from_arrays([ids, vec], ["vec_id", "vec"])
-
-        schema = StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("vec", BinaryType()),
+            flat = lst.flatten().to_numpy(zero_copy_only=False)
+            if len(flat) % n:
+                raise ValueError(
+                    f"ragged embedding lists: {len(flat)} values "
+                    f"for {n} rows"
+                )
+            dim = len(flat) // n
+            loff = np.frombuffer(lst.buffers()[1], dtype=np.int32)[
+                lst.offset : lst.offset + n + 1
             ]
+            if (np.diff(loff) != dim).any():
+                raise ValueError("ragged embedding lists in batch")
+            boff = pa.py_buffer(
+                (np.arange(n + 1, dtype=np.int32) * (dim * 4)).tobytes()
+            )
+            bdata = pa.py_buffer(flat.astype("<f4", copy=False).tobytes())
+            vec = pa.Array.from_buffers(pa.binary(), n, [None, boff, bdata])
+            yield pa.RecordBatch.from_arrays([ids, vec], ["vec_id", "vec"])
+
+    schema = StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("vec", BinaryType()),
+        ]
+    )
+
+    def build(tmp):
+        load_validated_embeddings(spark, sf_dir).select(
+            "vec_id", "embedding"
+        ).mapInArrow(pack, schema).write.mode("overwrite").parquet(
+            os.path.join(tmp, "emb")
         )
-        tmp = tempfile.mkdtemp(prefix=f".{name}.tmp.", dir=base)
-        try:
-            validated.mapInArrow(pack, schema).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, "emb"))
-            open(os.path.join(tmp, "_DONE"), "w").close()
-            for _ in range(2):
-                try:
-                    os.rename(tmp, out)
-                    break
-                except OSError:
-                    if os.path.exists(marker):
-                        break
-                    shutil.rmtree(out, ignore_errors=True)
-            else:
-                raise OSError(f"could not publish packed copy at {out}")
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        evict_stale_fixtures(base, (f"packed_emb_{sf_tag}_",), keep=name)
-    return spark.read.parquet(data)
+
+    path = fixture("packed_emb", sf_dir, ("embeddings.parquet",), build)
+    return spark.read.parquet(os.path.join(path, "emb"))

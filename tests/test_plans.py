@@ -397,7 +397,12 @@ def test_bench_ladder_fixture_preserves_join_integrity(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LADDER_SRC", "/root/testdata/sf0.001")
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     spec = importlib.util.spec_from_file_location(
-        "bench_ladder", "/root/repo/tools/bench_ladder.py"
+        "bench_ladder",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools",
+            "bench_ladder.py",
+        ),
     )
     bl = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bl)

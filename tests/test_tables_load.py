@@ -73,7 +73,7 @@ def test_validated_embeddings_atomic_publish_and_eviction(spark):
 
     n = load_validated_embeddings(spark, sf_dir).count()
     assert n > 0
-    assert os.path.exists(os.path.join(out, "_VALIDATED"))
+    assert os.path.exists(os.path.join(out, "_DONE"))
     assert not os.path.exists(stale), "stale fingerprint not evicted"
     # no leftover temp dirs from the publish
     leftovers = [d for d in os.listdir(base) if d.startswith(f".{name}.tmp.")]
@@ -85,7 +85,7 @@ def test_validated_embeddings_atomic_publish_and_eviction(spark):
     os.makedirs(os.path.join(out, "emb"), exist_ok=True)  # partial: no marker
     n2 = load_validated_embeddings(spark, sf_dir).count()
     assert n2 == n
-    assert os.path.exists(os.path.join(out, "_VALIDATED"))
+    assert os.path.exists(os.path.join(out, "_DONE"))
 
 
 def test_ivf_index_empty_and_normal_build_one_schema(spark):
@@ -148,7 +148,7 @@ def test_session_scratch_is_process_private_and_footer_counts_match():
         capture_output=True,
         text=True,
         check=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     ).stdout.strip()
     assert child != mine, "child process resolved the SAME session scratch"
     assert session_scratch_dir("probe") == mine, "not stable within process"
@@ -176,3 +176,77 @@ def test_session_scratch_is_process_private_and_footer_counts_match():
     assert not os.path.exists(old), "aged-out superseded dir not evicted"
     for d in (fresh, os.path.join(base, keep)):
         shutil.rmtree(d, ignore_errors=True)
+
+
+def _source(tmp_path, monkeypatch):
+    """A one-file source dir and a private shared scratch for fixture()."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    sf_dir = tmp_path / "sf_t"
+    sf_dir.mkdir()
+    (sf_dir / "t.parquet").write_bytes(b"v1")
+    return str(sf_dir)
+
+
+def _leftovers(tmp_path):
+    return [d for d in os.listdir(tmp_path / "scratch") if ".tmp." in d]
+
+
+def test_fixture_concurrent_builders_publish_once(tmp_path, monkeypatch):
+    """Two threads that both find no fixture and both build it: one copy
+    is published, both get its path, and no temp dir is left behind."""
+    import threading
+
+    from aced_etl_pod_spark.tables import fixture
+
+    sf_dir = _source(tmp_path, monkeypatch)
+    both_building = threading.Barrier(2, timeout=30)
+
+    def build(tmp):
+        both_building.wait()
+        with open(os.path.join(tmp, f"built_by_{threading.get_ident()}"), "w"):
+            pass
+
+    paths = []
+    threads = [
+        threading.Thread(
+            target=lambda: paths.append(fixture("fx", sf_dir, ("t.parquet",), build))
+        )
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(paths) == 2 and paths[0] == paths[1], paths
+    published = sorted(os.listdir(paths[0]))
+    assert len(published) == 2 and "_DONE" in published, published
+    assert not _leftovers(tmp_path)
+
+
+def test_fixture_failed_build_leaves_nothing(tmp_path, monkeypatch):
+    import pytest
+
+    from aced_etl_pod_spark.tables import fixture, fixture_name
+
+    sf_dir = _source(tmp_path, monkeypatch)
+
+    def build(tmp):
+        with open(os.path.join(tmp, "half"), "w"):
+            pass
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError, match="build failed"):
+        fixture("fx", sf_dir, ("t.parquet",), build)
+    name = fixture_name("fx", sf_dir, "t.parquet")
+    assert not os.path.exists(tmp_path / "scratch" / name)
+    assert not _leftovers(tmp_path)
+
+
+def test_fixture_name_changes_when_source_rewritten(tmp_path, monkeypatch):
+    from aced_etl_pod_spark.tables import fixture_name
+
+    sf_dir = _source(tmp_path, monkeypatch)
+    before = fixture_name("fx", sf_dir, "t.parquet")
+    assert before.startswith("fx_sf_t_"), before
+    (tmp_path / "sf_t" / "t.parquet").write_bytes(b"v2 rewritten")
+    assert fixture_name("fx", sf_dir, "t.parquet") != before

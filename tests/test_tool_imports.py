@@ -1,12 +1,14 @@
-"""Parse-only guards over tools/*.py, bench.py and tests/*.py.
+"""Parse-only guards over the package, tools/*.py, bench.py and tests/*.py.
 
 Every import that names a repo file (``tools.X``, ``tests.X`` or a
 sibling module the script finds on its own sys.path) must resolve to a
 file that still exists, so deleting a tool cannot leave a kept one
-importing it. And no script puts a literal absolute path on sys.path: a
-script run from one checkout must import that checkout's package, so the
-path is derived from ``__file__``. Nothing is executed; third-party and
-stdlib names are checked with find_spec."""
+importing it. No string literal holds the absolute checkout path: code
+run from one checkout must read and import that checkout, so the path is
+derived from ``__file__``. And only ``tables.py`` fingerprints sources
+or evicts fixtures, so every build-once artifact goes through
+``tables.fixture``. Nothing is executed; third-party and stdlib names
+are checked with find_spec."""
 
 from __future__ import annotations
 
@@ -21,6 +23,9 @@ SOURCES = sorted(
     glob.glob(os.path.join(TOOLS, "*.py"))
     + glob.glob(os.path.join(ROOT, "tests", "*.py"))
     + [os.path.join(ROOT, "bench.py")]
+)
+PACKAGE = sorted(
+    glob.glob(os.path.join(ROOT, "aced_etl_pod_spark", "**", "*.py"), recursive=True)
 )
 
 
@@ -75,3 +80,40 @@ def test_sys_path_is_derived_not_literal():
             and os.path.isabs(node.args[1].value)
         ]
     assert not literal, f"literal absolute paths put on sys.path: {literal}"
+
+
+def _parsed(paths):
+    for path in paths:
+        with open(path) as f:
+            yield os.path.relpath(path, ROOT), ast.parse(f.read(), path)
+
+
+def test_checkout_path_is_derived_not_literal():
+    literal = [
+        f"{rel}:{node.lineno}"
+        for rel, tree in _parsed(SOURCES + PACKAGE)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and ROOT in node.value
+    ]
+    assert not literal, f"literal absolute checkout paths: {literal}"
+
+
+def test_only_tables_fingerprints_and_evicts_fixtures():
+    """A module that reads ``st_mtime_ns`` or calls ``evict_stale_fixtures``
+    is hand-rolling the build-once protocol ``tables.fixture`` owns."""
+    tables = os.path.join("aced_etl_pod_spark", "tables.py")
+    owned = {"st_mtime_ns", "evict_stale_fixtures"}
+    sites = []
+    for rel, tree in _parsed(PACKAGE + glob.glob(os.path.join(TOOLS, "*.py"))):
+        if rel == tables:
+            continue
+        for node in ast.walk(tree):
+            names = (
+                [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom)
+                else [getattr(node, "attr", getattr(node, "id", None))]
+            )
+            sites += [f"{rel}:{node.lineno} {n}" for n in names if n in owned]
+    assert not sites, f"fixture protocol outside tables.py: {sites}"

@@ -43,31 +43,27 @@ def parse_ops(argv_ops):
 def build_perturbed(scale: int) -> str:
     import duckdb
 
-    from aced_etl_pod_spark.tables import scratch_dir
+    from aced_etl_pod_spark.tables import fixture
 
-    st = os.stat(os.path.join(SRC, "documents.parquet"))
-    out = scratch_dir(f"dedupladder_x{scale}_{st.st_mtime_ns:x}")
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    con = duckdb.connect()
-    span = con.execute(
-        f"SELECT coalesce(max(doc_id), 0) + 1 FROM '{SRC}/documents.parquet'"
-    ).fetchone()[0]
-    con.execute(
-        f"""COPY (
-            SELECT doc_id + r * {span} AS doc_id,
-                   regexp_replace(text, '(\\S+)',
-                                  '\\0x' || CAST(r AS VARCHAR), 'g') AS text,
-                   lang, source,
-                   CAST(length(regexp_replace(text, '(\\S+)',
-                        '\\0x' || CAST(r AS VARCHAR), 'g')) AS BIGINT)
-                       AS n_chars
-            FROM '{SRC}/documents.parquet', range({scale}) tt(r)
-        ) TO '{out}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    open(marker, "w").close()
-    return out
+    def build(out):
+        con = duckdb.connect()
+        span = con.execute(
+            f"SELECT coalesce(max(doc_id), 0) + 1 FROM '{SRC}/documents.parquet'"
+        ).fetchone()[0]
+        con.execute(
+            f"""COPY (
+                SELECT doc_id + r * {span} AS doc_id,
+                       regexp_replace(text, '(\\S+)',
+                                      '\\0x' || CAST(r AS VARCHAR), 'g') AS text,
+                       lang, source,
+                       CAST(length(regexp_replace(text, '(\\S+)',
+                            '\\0x' || CAST(r AS VARCHAR), 'g')) AS BIGINT)
+                           AS n_chars
+                FROM '{SRC}/documents.parquet', range({scale}) tt(r)
+            ) TO '{out}/documents.parquet' (FORMAT PARQUET)"""
+        )
+
+    return fixture(f"dedupladder_x{scale}", SRC, ("documents.parquet",), build)
 
 
 def main() -> int:

@@ -14,8 +14,8 @@
 
     python tools/hotblock_ladder.py [--scale 10] [--reps 3] [--case all]
 
-Each case builds a deterministic skewed input under scratch (fingerprint
-keyed on the sf0.1 source, _DONE-marked), asserts Spark == DuckDB oracle
+Each case builds a deterministic skewed input under scratch once per
+source fingerprint (``tables.fixture``), asserts Spark == DuckDB oracle
 on the same files (and Spark-variant == Spark-variant where two plans
 exist), then reports warm medians plus the candidate/fan-out counts that
 prove the quadratic is bounded. Output: one JSON line per case.
@@ -41,13 +41,6 @@ HOT_LANG = "xx"
 HOT_NCHARS = 640
 
 
-def _scratch(case: str, scale: int) -> str:
-    from aced_etl_pod_spark.tables import scratch_dir
-
-    st = os.stat(os.path.join(SRC, "lineitem.parquet"))
-    return scratch_dir(f"hotblock_{case}_x{scale}_{st.st_mtime_ns:x}")
-
-
 def _link_other_tables(out: str) -> None:
     """Symlink every base table the skewed case does not overwrite, so
     the oracle harness (views over every TABLES file) still resolves."""
@@ -69,42 +62,42 @@ def build_documents_hot(scale: int) -> str:
     import duckdb
 
     from aced_etl_pod_spark.operators.llm_pipeline import LEV_BLOCK_CAP
+    from aced_etl_pod_spark.tables import fixture
 
-    out = _scratch("lev", scale)
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    hot_n = 2 * LEV_BLOCK_CAP
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          WITH base AS (
-            SELECT doc_id + r * (SELECT max(doc_id) + 1
-                                 FROM '{SRC}/documents.parquet') AS doc_id,
-                   regexp_replace(text, '(\\S+)',
-                                  '\\0x' || CAST(r AS VARCHAR), 'g') AS text,
-                   lang, source,
-                   CAST(length(regexp_replace(text, '(\\S+)',
-                        '\\0x' || CAST(r AS VARCHAR), 'g')) AS BIGINT)
-                       AS n_chars
-            FROM '{SRC}/documents.parquet', range({scale}) t(r)
-          ), hot AS (
-            SELECT 1000000000 + i AS doc_id,
-                   repeat('hotblock template line ', 20)
-                     || CAST(i % 7 AS VARCHAR) AS text,
-                   '{HOT_LANG}' AS lang,
-                   'hot' AS source,
-                   CAST({HOT_NCHARS} + (i % 16) AS BIGINT) AS n_chars
-            FROM range({hot_n}) t(i)
-          )
-          SELECT * FROM base UNION ALL SELECT * FROM hot
-        ) TO '{out}/documents.parquet' (FORMAT PARQUET)
-        """
+    def build(out):
+        hot_n = 2 * LEV_BLOCK_CAP
+        con = duckdb.connect()
+        con.execute(
+            f"""
+            COPY (
+              WITH base AS (
+                SELECT doc_id + r * (SELECT max(doc_id) + 1
+                                     FROM '{SRC}/documents.parquet') AS doc_id,
+                       regexp_replace(text, '(\\S+)',
+                                      '\\0x' || CAST(r AS VARCHAR), 'g') AS text,
+                       lang, source,
+                       CAST(length(regexp_replace(text, '(\\S+)',
+                            '\\0x' || CAST(r AS VARCHAR), 'g')) AS BIGINT)
+                           AS n_chars
+                FROM '{SRC}/documents.parquet', range({scale}) t(r)
+              ), hot AS (
+                SELECT 1000000000 + i AS doc_id,
+                       repeat('hotblock template line ', 20)
+                         || CAST(i % 7 AS VARCHAR) AS text,
+                       '{HOT_LANG}' AS lang,
+                       'hot' AS source,
+                       CAST({HOT_NCHARS} + (i % 16) AS BIGINT) AS n_chars
+                FROM range({hot_n}) t(i)
+              )
+              SELECT * FROM base UNION ALL SELECT * FROM hot
+            ) TO '{out}/documents.parquet' (FORMAT PARQUET)
+            """
+        )
+        _link_other_tables(out)
+
+    return fixture(
+        f"hotblock_lev_x{scale}", SRC, ("documents.parquet",), build
     )
-    _link_other_tables(out)
-    open(marker, "w").close()
-    return out
 
 
 def build_embeddings_hot(scale: int) -> str:
@@ -113,26 +106,27 @@ def build_embeddings_hot(scale: int) -> str:
     structure preserved), only the blocking key skews."""
     import duckdb
 
-    out = _scratch("knn", scale)
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT vec_id + r * (SELECT max(vec_id) + 1
-                               FROM '{SRC}/embeddings.parquet') AS vec_id,
-                 CASE WHEN (vec_id + r) % 4 = 0 THEN 999
-                      ELSE label END AS label,
-                 embedding
-          FROM '{SRC}/embeddings.parquet', range({scale}) t(r)
-        ) TO '{out}/embeddings.parquet' (FORMAT PARQUET)
-        """
+    from aced_etl_pod_spark.tables import fixture
+
+    def build(out):
+        con = duckdb.connect()
+        con.execute(
+            f"""
+            COPY (
+              SELECT vec_id + r * (SELECT max(vec_id) + 1
+                                   FROM '{SRC}/embeddings.parquet') AS vec_id,
+                     CASE WHEN (vec_id + r) % 4 = 0 THEN 999
+                          ELSE label END AS label,
+                     embedding
+              FROM '{SRC}/embeddings.parquet', range({scale}) t(r)
+            ) TO '{out}/embeddings.parquet' (FORMAT PARQUET)
+            """
+        )
+        _link_other_tables(out)
+
+    return fixture(
+        f"hotblock_knn_x{scale}", SRC, ("embeddings.parquet",), build
     )
-    _link_other_tables(out)
-    open(marker, "w").close()
-    return out
 
 
 def build_orders_hub(scale: int) -> str:
@@ -149,42 +143,43 @@ def build_orders_hub(scale: int) -> str:
     a skew demo needs this synthetic sparse background.)"""
     import duckdb
 
-    out = _scratch("tri", scale)
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          WITH bg AS (
-            -- sparse background: node i ~ i+1, i+2, i+3 (mod 500)
-            SELECT CAST(500 * (8000000 + j)
-                        + ((j % 500) + 1 + ((j // 500) % 3)) % 500
-                        AS BIGINT) AS o_orderkey,
-                   CAST(500 + (j % 500) AS BIGINT) AS o_custkey
-            FROM range({1500 * scale}) t(j)
-          ), hub AS (
-            -- node 250 meets every node (250≡250 self-loop dropped by
-            -- orient_edges)
-            SELECT CAST(500 * (4000000 + i // 500) + (i % 500)
-                        AS BIGINT) AS o_orderkey,
-                   CAST(750 AS BIGINT) AS o_custkey
-            FROM range({500 * scale}) t(i)
-          ), e AS (
-            SELECT * FROM bg UNION ALL SELECT * FROM hub
-          )
-          SELECT o_orderkey, o_custkey, 'H' AS o_orderstatus,
-                 0.0 AS o_totalprice,
-                 TIMESTAMP '1995-01-01' AS o_orderdate,
-                 'X' AS o_orderpriority
-          FROM e
-        ) TO '{out}/orders.parquet' (FORMAT PARQUET)
-        """
+    from aced_etl_pod_spark.tables import fixture
+
+    def build(out):
+        con = duckdb.connect()
+        con.execute(
+            f"""
+            COPY (
+              WITH bg AS (
+                -- sparse background: node i ~ i+1, i+2, i+3 (mod 500)
+                SELECT CAST(500 * (8000000 + j)
+                            + ((j % 500) + 1 + ((j // 500) % 3)) % 500
+                            AS BIGINT) AS o_orderkey,
+                       CAST(500 + (j % 500) AS BIGINT) AS o_custkey
+                FROM range({1500 * scale}) t(j)
+              ), hub AS (
+                -- node 250 meets every node (250≡250 self-loop dropped by
+                -- orient_edges)
+                SELECT CAST(500 * (4000000 + i // 500) + (i % 500)
+                            AS BIGINT) AS o_orderkey,
+                       CAST(750 AS BIGINT) AS o_custkey
+                FROM range({500 * scale}) t(i)
+              ), e AS (
+                SELECT * FROM bg UNION ALL SELECT * FROM hub
+              )
+              SELECT o_orderkey, o_custkey, 'H' AS o_orderstatus,
+                     0.0 AS o_totalprice,
+                     TIMESTAMP '1995-01-01' AS o_orderdate,
+                     'X' AS o_orderpriority
+              FROM e
+            ) TO '{out}/orders.parquet' (FORMAT PARQUET)
+            """
+        )
+        _link_other_tables(out)
+
+    return fixture(
+        f"hotblock_tri_x{scale}", SRC, ("orders.parquet",), build
     )
-    _link_other_tables(out)
-    open(marker, "w").close()
-    return out
 
 
 def _median_runs(df, reps: int) -> float:

@@ -37,7 +37,7 @@ import numpy as np  # noqa: E402
 
 from aced_etl_pod_spark.session import get_spark  # noqa: E402
 from aced_etl_pod_spark.sources.binary import sample_ppm_frames  # noqa: E402
-from aced_etl_pod_spark.tables import scratch_dir  # noqa: E402
+from aced_etl_pod_spark.tables import session_scratch_dir  # noqa: E402
 
 H, W, FRAMES = 96, 128, 24
 WAV_SAMPLES = 160_000
@@ -46,7 +46,7 @@ WAV_SAMPLES = 160_000
 def gen_ppm(n: int, sub: str) -> tuple[str, int]:
     from aced_etl_pod_spark.functions.imagecodec import encode_ppm
 
-    out = scratch_dir(sub)
+    out = session_scratch_dir(sub)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     total = 0
@@ -73,7 +73,7 @@ def gen_ppm(n: int, sub: str) -> tuple[str, int]:
 def gen_wav(n: int, sub: str) -> tuple[str, int]:
     from aced_etl_pod_spark.functions.audiocodec import encode_wav
 
-    out = scratch_dir(sub)
+    out = session_scratch_dir(sub)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     total = 0

@@ -3,7 +3,7 @@ win's SECOND axis. The x800/x3200 ladders prove wall-time; this tool
 quantifies what the probe GIVES UP, per n_probe, at the same scales.
 
     python tools/recall_ladder.py --scale 800 [--queries 64] [--reps 3]
-    python tools/recall_ladder.py --dir /root/repo/.scratch/embx3200 [...]
+    python tools/recall_ladder.py --dir .scratch/embx3200 [...]
 
 For each n_probe in {4, 8, 16, 32}: batched top-10 over ``--queries``
 query vectors from the persisted bucketed IVF index, reporting
@@ -78,13 +78,12 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from aced_etl_pod_spark.functions.similarity import (
-        ivf_index_build,
         ivf_index_probe,
         ivf_index_probe_many,
     )
     from aced_etl_pod_spark.session import get_spark, pin
-    from aced_etl_pod_spark.tables import load, scratch_dir
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.tables import fixture, load
+    from tools.bench_ladder import SRC, build_scaled, ivf_index
 
     spark = get_spark("recall-ladder", shuffle_partitions=32)
     pin(spark, {
@@ -92,34 +91,27 @@ def main() -> int:
         "spark.sql.leafNodeDefaultParallelism": "32",
     })
     if args.random_n:
-        tag = f"embrand_{args.random_n}"
-        out = scratch_dir(tag)
-        emb_path = os.path.join(out, "embeddings.parquet")
-        if not os.path.exists(os.path.join(out, "_DONE")):
+
+        def build(out):
             # deterministic uniform [-0.5, 0.5) components from
             # xxhash64(vec_id, dim index) — pure plan-side, no data dep
             dim = 64
-            vecs = spark.range(args.random_n).select(
+            spark.range(args.random_n).select(
                 F.col("id").alias("vec_id"),
                 F.expr(
                     f"transform(sequence(0, {dim - 1}), i -> "
                     "CAST(pmod(xxhash64(id, i), 100000) / 100000.0 - 0.5"
                     " AS FLOAT))"
                 ).alias("embedding"),
-            )
-            vecs.write.mode("overwrite").parquet(emb_path)
-            open(os.path.join(out, "_DONE"), "w").close()
-        emb = spark.read.parquet(emb_path).select("vec_id", "embedding")
-        sf = out
+            ).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
+
+        # no source table: the name carries only N
+        sf = fixture(f"embrand_{args.random_n}", SRC, (), build)
     elif args.jitter is not None:
         assert args.scale, "--jitter needs --scale"
-        tag = f"embjit_x{args.scale}_{str(args.jitter).replace('.', 'p')}"
-        out = scratch_dir(tag)
-        emb_path = os.path.join(out, "embeddings.parquet")
-        if not os.path.exists(os.path.join(out, "_DONE")):
-            base = load(
-                spark, "/root/testdata/sf0.1", "embeddings"
-            ).select("vec_id", "embedding")
+
+        def build(out):
+            base = load(spark, SRC, "embeddings").select("vec_id", "embedding")
             n_base = base.count()
             j = args.jitter
             tiled = base.crossJoin(
@@ -134,28 +126,21 @@ def main() -> int:
                     f" - 0.5) * {2 * j} AS FLOAT))"
                 ).alias("embedding"),
             )
-            tiled.write.mode("overwrite").parquet(emb_path)
-            open(os.path.join(out, "_DONE"), "w").close()
-        emb = spark.read.parquet(emb_path).select("vec_id", "embedding")
-        sf = out
-    elif args.dir:
-        sf = args.dir
-        emb_path = os.path.join(sf, "embeddings.parquet")
-        emb = spark.read.parquet(emb_path).select("vec_id", "embedding")
-        tag = os.path.basename(sf.rstrip("/"))
-    else:
-        sf = build_scaled(args.scale)
-        emb_path = os.path.join(sf, "embeddings.parquet")
-        emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
-        tag = os.path.basename(sf.rstrip("/"))
+            tiled.write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
-    idx = scratch_dir(f"ivfidx2_{tag}")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        t0 = time.perf_counter()
-        ivf_index_build(emb, idx)
-        print(f"index built in {time.perf_counter() - t0:.1f}s", flush=True)
-        open(marker, "w").close()
+        jit = str(args.jitter).replace(".", "p")
+        sf = fixture(
+            f"embjit_x{args.scale}_{jit}", SRC, ("embeddings.parquet",), build
+        )
+    else:
+        sf = args.dir or build_scaled(args.scale)
+    emb_path = os.path.join(sf, "embeddings.parquet")
+    emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
+    tag = os.path.basename(sf.rstrip("/"))
+
+    idx, build_s = ivf_index(spark, sf)
+    if build_s:
+        print(f"index built in {build_s:.1f}s", flush=True)
     n_cent = spark.read.parquet(f"{idx}/centroids").count()
     n_vec = emb.count()
     print(f"{tag}: {n_vec} vectors, {n_cent} cells", flush=True)

@@ -48,13 +48,12 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from aced_etl_pod_spark.functions.similarity import (
-        ivf_index_build,
         ivf_index_probe,
         ivf_index_probe_many,
     )
     from aced_etl_pod_spark.session import get_spark, pin
-    from aced_etl_pod_spark.tables import load, scratch_dir
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.tables import load
+    from tools.bench_ladder import build_scaled, ivf_index
 
     sf = build_scaled(args.scale)
     spark = get_spark("serve-throughput", shuffle_partitions=32)
@@ -66,13 +65,9 @@ def main() -> int:
         },
     )
     emb = load(spark, sf, "embeddings")
-    idx = scratch_dir(f"ivfidx2_{os.path.basename(sf.rstrip('/'))}")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        t0 = time.perf_counter()
-        ivf_index_build(emb, idx)
-        print(f"index built in {time.perf_counter() - t0:.1f}s", flush=True)
-        open(marker, "w").close()
+    idx, build_s = ivf_index(spark, sf)
+    if build_s:
+        print(f"index built in {build_s:.1f}s", flush=True)
 
     qids = list(range(args.queries))
     qset = emb.filter(F.col("vec_id").isin(qids))
