@@ -118,20 +118,18 @@ def bucketed_layout(
     import re
 
     from aced_etl_pod_spark.session import tune
-    from aced_etl_pod_spark.tables import fixture, fixture_name
+    from aced_etl_pod_spark.tables import fixture
+
+    def ident(text: str) -> str:
+        return re.sub(r"[^0-9a-zA-Z_]", "_", text)
 
     tune(spark)
     sources = tuple(f"{t}.parquet" for t in sorted(table_keys))
-    name = fixture_name(label, sf_dir, *sources)
-    # {sf_tag}_{fingerprints}: the catalog names change with the bytes
-    tag = re.sub(r"[^0-9a-zA-Z_]", "_", f"{name[len(label) + 1:]}_{n_buckets}")
-    tables = {
-        t: (f"{label}_{t}_{tag}", key) for t, key in table_keys.items()
-    }
 
     def build(tmp):
-        for src, (tbl, key) in tables.items():
-            tmp_tbl = f"{tbl}_build"
+        for src, key in table_keys.items():
+            # a build-private catalog name: the tmp dir's name is unique
+            tmp_tbl = ident(f"{os.path.basename(tmp)}_{src}")
             spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
             (
                 load(spark, sf_dir, src)
@@ -155,6 +153,11 @@ def bucketed_layout(
             spark.sql(f"DROP TABLE {tmp_tbl}")
 
     root = fixture(label, sf_dir, sources, build)
+    # {sf_tag}_{fingerprints}: the catalog names change with the bytes
+    tag = ident(f"{os.path.basename(root)[len(label) + 1:]}_{n_buckets}")
+    tables = {
+        t: (f"{label}_{t}_{tag}", key) for t, key in table_keys.items()
+    }
     out = {}
     for src_name, (tbl, key) in tables.items():
         if not spark.catalog.tableExists(tbl):

@@ -29,16 +29,59 @@ from aced_etl_pod_spark.sources.txnlog import (
     txn_write,
 )
 from aced_etl_pod_spark.tables import (
-    fixture_name,
+    fixture,
     load,
     scratch_dir,
     session_scratch_dir,
 )
 
 
+# the orders columns of every orders-derived txn table
+_ORDERS_COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+
+
+def _orders_txn_copy(spark: SparkSession, sf_dir: str, label: str, mutate) -> str:
+    """Fixture ``label``: a copy of the 3-commit orders table (which keeps
+    its v2 shape) after ``mutate(table)``. Log paths are relative, so the
+    copy is a valid table of its own; the base's _DONE marker stays
+    behind."""
+    base = build_orders_txn_table(spark, sf_dir)
+
+    def build(table):
+        shutil.copytree(
+            base, table, dirs_exist_ok=True, ignore=shutil.ignore_patterns("_DONE")
+        )
+        mutate(table)
+
+    return fixture(label, sf_dir, ("orders.parquet",), build)
+
+
+def _three_commit_table(
+    spark: SparkSession, sf_dir: str, label: str, name: str,
+    cols: tuple[str, ...], n_files: int,
+) -> str:
+    """Fixture ``label``: ``cols`` of table ``name`` (``cols[0]`` is the
+    key) committed as v0 append key % 7 == 0, v1 append key % 7 == 1, v2
+    overwrite key % 7 <= 2 — each commit range-distributed on the key
+    into ``n_files`` files with the key's footer min/max in the log."""
+    key = cols[0]
+
+    def build(table):
+        src = load(spark, sf_dir, name).select(*cols)
+        for pred, mode, op_name in (
+            (F.col(key) % 7 == 0, "append", "load_v0"),
+            (F.col(key) % 7 == 1, "append", "append_v1"),
+            (F.col(key) % 7 <= 2, "overwrite", "compact_v2"),
+        ):
+            txn_write(spark, src.filter(pred).repartitionByRange(n_files, key),
+                      table, mode=mode, stats_cols=(key,), op_name=op_name)
+
+    return fixture(label, sf_dir, (f"{name}.parquet",), build)
+
+
 def build_orders_txn_table(spark: SparkSession, sf_dir: str) -> str:
-    """Three-commit txn table from orders (cached per source fingerprint,
-    same invalidation discipline as the DPP fixture):
+    """Three-commit txn table from orders (built once per source
+    fingerprint):
 
       v0  append    o_orderkey % 7 == 0
       v1  append    o_orderkey % 7 == 1
@@ -47,24 +90,9 @@ def build_orders_txn_table(spark: SparkSession, sf_dir: str) -> str:
     Data files are range-distributed on o_orderkey (4 files/commit) with
     footer min/max recorded in the log — the stats that power manifest
     skipping."""
-    table = scratch_dir(fixture_name("txn_orders", sf_dir, "orders.parquet"))
-    if current_version(table) == 2:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    return _three_commit_table(
+        spark, sf_dir, "txn_orders", "orders", _ORDERS_COLS, 4
     )
-
-    def slice_df(pred):
-        return o.filter(pred).repartitionByRange(4, "o_orderkey")
-
-    txn_write(spark, slice_df(F.col("o_orderkey") % 7 == 0), table,
-              mode="append", stats_cols=("o_orderkey",), op_name="load_v0")
-    txn_write(spark, slice_df(F.col("o_orderkey") % 7 == 1), table,
-              mode="append", stats_cols=("o_orderkey",), op_name="append_v1")
-    txn_write(spark, slice_df(F.col("o_orderkey") % 7 <= 2), table,
-              mode="overwrite", stats_cols=("o_orderkey",), op_name="compact_v2")
-    return table
 
 
 def _snapshot_agg(df: DataFrame, version: int) -> DataFrame:
@@ -102,39 +130,29 @@ def build_lineitem_txn_table(spark: SparkSession, sf_dir: str) -> str:
     skipping against real parquet row groups (~25k live rows at sf0.01,
     ~250k at sf0.1). Cached per source fingerprint like the orders
     fixture."""
-    table = scratch_dir(fixture_name("txn_lineitem", sf_dir, "lineitem.parquet"))
-    if current_version(table) == 2:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-        "l_returnflag",
+    return _three_commit_table(
+        spark, sf_dir, "txn_lineitem", "lineitem",
+        ("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
+         "l_returnflag"),
+        8,
     )
-
-    def slice_df(pred):
-        return li.filter(pred).repartitionByRange(8, "l_orderkey")
-
-    txn_write(spark, slice_df(F.col("l_orderkey") % 7 == 0), table,
-              mode="append", stats_cols=("l_orderkey",), op_name="load_v0")
-    txn_write(spark, slice_df(F.col("l_orderkey") % 7 == 1), table,
-              mode="append", stats_cols=("l_orderkey",), op_name="append_v1")
-    txn_write(spark, slice_df(F.col("l_orderkey") % 7 <= 2), table,
-              mode="overwrite", stats_cols=("l_orderkey",), op_name="compact_v2")
-    return table
 
 
 def lineitem_pruned_file_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(live files, files surviving the bottom-eighth key-range prune) on
     the lineitem txn table — test hook for scan_txnlog_snapshot's plan."""
     table = build_lineitem_txn_table(spark, sf_dir)
-    hi = _lineitem_key_cap(spark, sf_dir)
-    all_files = snapshot_files(table)
+    return _pruned_counts(table, "l_orderkey", 0, _lineitem_key_cap(spark, sf_dir))
+
+
+def _pruned_counts(table: str, col: str, lo: int, hi: int) -> tuple[int, int]:
+    """(live files, files whose footer range of ``col`` meets [lo, hi])."""
+    files = snapshot_files(table)
     kept = [
-        f for f in all_files
-        if not (f["stats"]["l_orderkey"]["max"] < 0
-                or f["stats"]["l_orderkey"]["min"] > hi)
+        f for f in files
+        if not (f["stats"][col]["max"] < lo or f["stats"][col]["min"] > hi)
     ]
-    return len(all_files), len(kept)
+    return len(files), len(kept)
 
 
 def _lineitem_key_cap(spark: SparkSession, sf_dir: str) -> int:
@@ -245,14 +263,7 @@ def txnlog_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pruned_file_counts(spark: SparkSession, sf_dir: str,
                        lo: int = 0, hi: int = 300) -> tuple[int, int]:
     """(live files, files surviving the manifest prune) — test hook."""
-    table = build_orders_txn_table(spark, sf_dir)
-    all_files = snapshot_files(table)
-    kept = [
-        f for f in all_files
-        if not (f["stats"]["o_orderkey"]["max"] < lo
-                or f["stats"]["o_orderkey"]["min"] > hi)
-    ]
-    return len(all_files), len(kept)
+    return _pruned_counts(build_orders_txn_table(spark, sf_dir), "o_orderkey", lo, hi)
 
 
 @op(
@@ -331,18 +342,16 @@ def build_changefeed_table(spark: SparkSession, sf_dir: str) -> str:
     """Two-commit table for the change feed: c0 = orders with key%5 in
     (0,1); c1 OVERWRITES with key%5 in (1,2) — so v0→v1 has inserts
     (%5=2), deletes (%5=0) and carried-over rows (%5=1)."""
-    table = scratch_dir(fixture_name("txn_cdc", sf_dir, "orders.parquet"))
-    if current_version(table) == 1:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    txn_write(spark, o.filter((F.col("o_orderkey") % 5).isin(0, 1)), table,
-              mode="append", op_name="load_v0")
-    txn_write(spark, o.filter((F.col("o_orderkey") % 5).isin(1, 2)), table,
-              mode="overwrite", op_name="replace_v1")
-    return table
+    def build(table):
+        o = load(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        txn_write(spark, o.filter((F.col("o_orderkey") % 5).isin(0, 1)), table,
+                  mode="append", op_name="load_v0")
+        txn_write(spark, o.filter((F.col("o_orderkey") % 5).isin(1, 2)), table,
+                  mode="overwrite", op_name="replace_v1")
+
+    return fixture("txn_cdc", sf_dir, ("orders.parquet",), build)
 
 
 @op(
@@ -405,13 +414,10 @@ def txnlog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-efficient files without blocking readers for even a moment."""
     from aced_etl_pod_spark.sources.txnlog import txn_compact
 
-    base = build_orders_txn_table(spark, sf_dir)
-    # compact a COPY so the shared 3-commit fixture keeps its v2 shape
-    table = scratch_dir(base.rstrip("/") + "_compacted_copy")
-    if current_version(table) != 3:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.copytree(base, table)
-        txn_compact(spark, table, target_files=1, stats_cols=("o_orderkey",))
+    table = _orders_txn_copy(
+        spark, sf_dir, "txn_orders_compacted",
+        lambda t: txn_compact(spark, t, target_files=1, stats_cols=("o_orderkey",)),
+    )
     return _snapshot_agg(txn_read(spark, table), 3).orderBy("o_orderstatus")
 
 
@@ -432,14 +438,12 @@ def txnlog_checkpoint_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit table readable in milliseconds and its storage bounded."""
     from aced_etl_pod_spark.sources.txnlog import txn_checkpoint, txn_compact, vacuum
 
-    base = build_orders_txn_table(spark, sf_dir)
-    table = scratch_dir(base.rstrip("/") + "_ckpt_copy")
-    if current_version(table) != 4:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.copytree(base, table)
+    def maintain(table):
         txn_compact(spark, table, target_files=1, stats_cols=("o_orderkey",))
         txn_checkpoint(table)
         vacuum(table, keep_versions=0)
+
+    table = _orders_txn_copy(spark, sf_dir, "txn_orders_ckpt", maintain)
     return _snapshot_agg(txn_read(spark, table), 4).orderBy("o_orderstatus")
 
 
@@ -469,10 +473,8 @@ def txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_set_schema,
     )
 
-    table = scratch_dir(fixture_name("txn_schevo", sf_dir, "orders.parquet"))
-    o = load(spark, sf_dir, "orders")
-    if current_version(table) != 3:
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
+        o = load(spark, sf_dir, "orders")
         gen1 = o.filter(F.col("o_orderkey") % 6 == 0).select(
             "o_orderkey", "o_orderstatus"
         )
@@ -482,6 +484,8 @@ def txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_write(spark, gen1, table, op_name="gen1")
         txn_set_schema(table, _json.dumps(gen2.schema.jsonValue()))
         txn_write(spark, gen2, table, op_name="gen2")
+
+    table = fixture("txn_schevo", sf_dir, ("orders.parquet",), build)
     return txn_read_with_schema(spark, table).orderBy("o_orderkey")
 
 
@@ -531,45 +535,44 @@ def build_zorder_table(spark: SparkSession, sf_dir: str) -> str:
     the same broadcast-boundary discipline as feature_quantile_bucketize),
     bit-interleaved into a Morton code, range-partitioned AND sorted on it,
     then committed to the txn log with per-file min/max for BOTH columns.
-    Cached per source fingerprint (:func:`tables.fixture_name`)."""
-    table = scratch_dir(fixture_name("txn_zorder", sf_dir, "orders.parquet"))
-    if current_version(table) >= 0:
-        return table
-    o = load(spark, sf_dir, "orders").withColumn(
-        "o_day", F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
-    )
-    lo_c, hi_c, lo_d, hi_d = o.agg(
-        F.min("o_custkey"), F.max("o_custkey"), F.min("o_day"), F.max("o_day")
-    ).first()
-    if lo_c is None:  # empty table: degenerate bounds (no rows to scale)
-        lo_c = hi_c = lo_d = hi_d = 0
-    span = (1 << ZORDER_BITS) - 1
+    Built once per source fingerprint through :func:`tables.fixture`."""
+    def build(table):
+        o = load(spark, sf_dir, "orders").withColumn(
+            "o_day", F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
+        )
+        lo_c, hi_c, lo_d, hi_d = o.agg(
+            F.min("o_custkey"), F.max("o_custkey"), F.min("o_day"), F.max("o_day")
+        ).first()
+        if lo_c is None:  # empty table: degenerate bounds (no rows to scale)
+            lo_c = hi_c = lo_d = hi_d = 0
+        span = (1 << ZORDER_BITS) - 1
 
-    def scale(col, lo, hi):
-        return F.least(
-            F.lit(span),
-            ((col - F.lit(lo)) * span / F.lit(max(hi - lo, 1))).cast("long"),
+        def scale(col, lo, hi):
+            return F.least(
+                F.lit(span),
+                ((col - F.lit(lo)) * span / F.lit(max(hi - lo, 1))).cast("long"),
+            )
+
+        z = o.withColumn(
+            "zval",
+            _interleave_bits(
+                scale(F.col("o_custkey"), lo_c, hi_c),
+                scale(F.col("o_day"), lo_d, hi_d),
+                ZORDER_BITS,
+            ),
+        )
+        clustered = z.repartitionByRange(ZORDER_FILES, "zval").sortWithinPartitions(
+            "zval"
+        )
+        txn_write(
+            spark,
+            clustered.drop("zval"),
+            table,
+            stats_cols=("o_custkey", "o_day"),
+            op_name="zorder",
         )
 
-    z = o.withColumn(
-        "zval",
-        _interleave_bits(
-            scale(F.col("o_custkey"), lo_c, hi_c),
-            scale(F.col("o_day"), lo_d, hi_d),
-            ZORDER_BITS,
-        ),
-    )
-    clustered = z.repartitionByRange(ZORDER_FILES, "zval").sortWithinPartitions(
-        "zval"
-    )
-    txn_write(
-        spark,
-        clustered.drop("zval"),
-        table,
-        stats_cols=("o_custkey", "o_day"),
-        op_name="zorder",
-    )
-    return table
+    return fixture("txn_zorder", sf_dir, ("orders.parquet",), build)
 
 
 def _zorder_prune(files: list[dict]) -> list[dict]:
@@ -661,25 +664,23 @@ def build_mor_orders_table(spark: SparkSession, sf_dir: str) -> str:
     delete file — NO data file rewritten. Cached per source fingerprint."""
     from aced_etl_pod_spark.sources.txnlog import txn_delete_keys
 
-    table = scratch_dir(fixture_name("txn_mor", sf_dir, "orders.parquet"))
-    if current_version(table) == 1:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    o = load(spark, sf_dir, "orders")
-    txn_write(
-        spark,
-        o.repartitionByRange(4, "o_orderkey"),
-        table,
-        stats_cols=("o_orderkey",),
-        op_name="base",
-    )
-    txn_delete_keys(
-        spark,
-        o.filter(F.col("o_orderkey") % _DEL_MOD == 0),
-        table,
-        "o_orderkey",
-    )
-    return table
+    def build(table):
+        o = load(spark, sf_dir, "orders")
+        txn_write(
+            spark,
+            o.repartitionByRange(4, "o_orderkey"),
+            table,
+            stats_cols=("o_orderkey",),
+            op_name="base",
+        )
+        txn_delete_keys(
+            spark,
+            o.filter(F.col("o_orderkey") % _DEL_MOD == 0),
+            table,
+            "o_orderkey",
+        )
+
+    return fixture("txn_mor", sf_dir, ("orders.parquet",), build)
 
 
 @op(
@@ -753,43 +754,42 @@ def build_bloom_indexed_table(spark: SparkSession, sf_dir: str) -> str:
     same either way."""
     import json as _json
 
-    table = scratch_dir(fixture_name("txn_bloom", sf_dir, "orders.parquet"))
-    idx_path = os.path.join(table, "_index", "bloom_o_orderkey.json")
-    if current_version(table) == 0 and os.path.exists(idx_path):
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    o = load(spark, sf_dir, "orders")
-    txn_write(
-        spark,
-        o.repartition(BLOOM_FILES, "o_orderkey"),
-        table,
-        op_name="base",
-    )
-    files = snapshot_files(table)
-    rows_per_file = max(f["rows"] for f in files)
-    m = 1 << max(8, (rows_per_file * 16).bit_length())
-    paths = [os.path.join(table, f["path"]) for f in files]
-    df = spark.read.parquet(*paths).withColumn(
-        "_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-    )
-    k = F.col("o_orderkey") % F.lit(2**31)
-    h1 = (k * _KNUTH) % F.lit(2**32)
-    h2 = ((k * _H2) % F.lit(2**32)).bitwiseOR(F.lit(1))
-    probes = F.array(
-        *[(h1 + F.lit(i) * h2) % F.lit(m) for i in range(BLOOM_PROBES)]
-    )
-    bits = (
-        df.select("_file", F.explode(probes).alias("bit"))
-        .groupBy("_file")
-        .agg(F.collect_set("bit").alias("bits"))
-        .collect()
-    )
-    index = {r._file: {"m": m, "bits": sorted(int(b) for b in r.bits)} for r in bits}
-    os.makedirs(os.path.dirname(idx_path), exist_ok=True)
-    with open(idx_path + ".tmp", "w") as f:
-        _json.dump(index, f)
-    os.replace(idx_path + ".tmp", idx_path)
-    return table
+    def build(table):
+        o = load(spark, sf_dir, "orders")
+        txn_write(
+            spark,
+            o.repartition(BLOOM_FILES, "o_orderkey"),
+            table,
+            op_name="base",
+        )
+        files = snapshot_files(table)
+        rows_per_file = max(f["rows"] for f in files)
+        m = 1 << max(8, (rows_per_file * 16).bit_length())
+        paths = [os.path.join(table, f["path"]) for f in files]
+        df = spark.read.parquet(*paths).withColumn(
+            "_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
+        )
+        k = F.col("o_orderkey") % F.lit(2**31)
+        h1 = (k * _KNUTH) % F.lit(2**32)
+        h2 = ((k * _H2) % F.lit(2**32)).bitwiseOR(F.lit(1))
+        probes = F.array(
+            *[(h1 + F.lit(i) * h2) % F.lit(m) for i in range(BLOOM_PROBES)]
+        )
+        bits = (
+            df.select("_file", F.explode(probes).alias("bit"))
+            .groupBy("_file")
+            .agg(F.collect_set("bit").alias("bits"))
+            .collect()
+        )
+        index = {
+            r._file: {"m": m, "bits": sorted(int(b) for b in r.bits)}
+            for r in bits
+        }
+        os.makedirs(os.path.join(table, "_index"))
+        with open(os.path.join(table, "_index", "bloom_o_orderkey.json"), "w") as f:
+            _json.dump(index, f)
+
+    return fixture("txn_bloom", sf_dir, ("orders.parquet",), build)
 
 
 def bloom_probed_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
@@ -898,24 +898,22 @@ def build_upsert_state_table(spark: SparkSession, sf_dir: str) -> str:
     breaks a sequence-unaware delete."""
     from aced_etl_pod_spark.sources.txnlog import txn_upsert
 
-    table = scratch_dir(fixture_name("txn_upsert", sf_dir, "events.parquet"))
-    if current_version(table) == 3:
-        return table
-    shutil.rmtree(table, ignore_errors=True)
-    e = load(spark, sf_dir, "events").filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    cuts = [F.lit(c).cast("timestamp") for c in _UPSERT_WEEKS]
-    batches = [
-        e.filter(F.col("ts") < cuts[0]),
-        e.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        e.filter((F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2])),
-        e.filter(F.col("ts") >= cuts[2]),
-    ]
-    txn_write(spark, _latest_per_user(batches[0]), table, op_name="gen0")
-    for b in batches[1:]:
-        txn_upsert(spark, _latest_per_user(b), table, "user_id")
-    return table
+    def build(table):
+        e = load(spark, sf_dir, "events").filter(
+            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+        )
+        cuts = [F.lit(c).cast("timestamp") for c in _UPSERT_WEEKS]
+        batches = [
+            e.filter(F.col("ts") < cuts[0]),
+            e.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
+            e.filter((F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2])),
+            e.filter(F.col("ts") >= cuts[2]),
+        ]
+        txn_write(spark, _latest_per_user(batches[0]), table, op_name="gen0")
+        for b in batches[1:]:
+            txn_upsert(spark, _latest_per_user(b), table, "user_id")
+
+    return fixture("txn_upsert", sf_dir, ("events.parquet",), build)
 
 
 @op("txnlog_merge_upsert", oracle=TXNLOG_MERGE_UPSERT_ORACLE, tags=("sink", "acid", "extra"))
@@ -1053,12 +1051,8 @@ def txnlog_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB table."""
     from aced_etl_pod_spark.sources.txnlog import txn_overwrite_partition
 
-    table = scratch_dir(fixture_name("txn_orders_part", sf_dir, "orders.parquet"))
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    if current_version(table) != 3:
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
+        o = load(spark, sf_dir, "orders").select(*_ORDERS_COLS)
         for status in ("F", "O", "P"):
             txn_write(
                 spark,
@@ -1078,6 +1072,8 @@ def txnlog_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
             part_value="O",
             stats_cols=("o_orderkey",),
         )
+
+    table = fixture("txn_orders_part", sf_dir, ("orders.parquet",), build)
     return _snapshot_agg(txn_read(spark, table), 3).orderBy("o_orderstatus")
 
 
@@ -1103,24 +1099,27 @@ def txnlog_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-merge version immutably — both asserted in tests. This is how a
     pipeline stages risky multi-table work at 100 TB: validate on the
     branch, publish with one swap, never block or half-expose readers."""
+    base = build_branch_merge_table(spark, sf_dir)
+    return _snapshot_agg(txn_read(spark, base), 3).orderBy("o_orderstatus")
+
+
+def build_branch_merge_table(spark: SparkSession, sf_dir: str) -> str:
+    """The merged base of :func:`txnlog_branch_merge`: a copy of the
+    3-commit orders table tagged ``pre-merge`` at v2, branched into its
+    own ``_branch`` subdir, appended to on the branch and fast-forward
+    merged back (v3). The branch's log names the build dir's absolute
+    path; nothing reads the branch after the merge."""
     from aced_etl_pod_spark.sources.txnlog import (
         create_branch,
         merge_branch,
         set_tag,
     )
 
-    base_fix = build_orders_txn_table(spark, sf_dir)
-    base = scratch_dir(base_fix.rstrip("/") + "_branch_base")
-    branch = base.rstrip("/") + "_etl_branch"
-    if current_version(base) != 3:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(branch, ignore_errors=True)
-        shutil.copytree(base_fix, base)
+    def branch_and_merge(base):
+        branch = os.path.join(base, "_branch")
         set_tag(base, "pre-merge", 2)
         create_branch(base, branch)
-        o = load(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        )
+        o = load(spark, sf_dir, "orders").select(*_ORDERS_COLS)
         txn_write(
             spark,
             o.filter(F.col("o_orderkey") % 7 == 3).repartition(2),
@@ -1130,7 +1129,8 @@ def txnlog_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             op_name="branch_append",
         )
         merge_branch(base, branch)
-    return _snapshot_agg(txn_read(spark, base), 3).orderBy("o_orderstatus")
+
+    return _orders_txn_copy(spark, sf_dir, "txn_orders_branch", branch_and_merge)
 
 
 # ---------------------------------------------------------------------------
@@ -1182,16 +1182,10 @@ def plan_result_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     between a dashboard refresh that re-reads a petabyte and one that
     reads a kilobyte — and the txn log is what makes it SAFE, since a
     cached result is forever correct for the version it names."""
-    base_fix = build_orders_txn_table(spark, sf_dir)
-    table = scratch_dir(base_fix.rstrip("/") + "_cache_demo")
-    if current_version(table) != 3:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.copytree(base_fix, table)
+    def cache_then_append(table):
         _cached_snapshot_agg(spark, table)  # compute + materialize (v2)
         _cached_snapshot_agg(spark, table)  # pure cache hit
-        o = load(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        )
+        o = load(spark, sf_dir, "orders").select(*_ORDERS_COLS)
         txn_write(
             spark,
             o.filter(F.col("o_orderkey") % 7 == 3).repartition(2),
@@ -1200,6 +1194,8 @@ def plan_result_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=("o_orderkey",),
             op_name="invalidate",
         )
+
+    table = _orders_txn_copy(spark, sf_dir, "txn_orders_cache", cache_then_append)
     return _cached_snapshot_agg(spark, table).orderBy("o_orderstatus")
 
 
@@ -1228,11 +1224,10 @@ def txnlog_cdc_replay_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame
     lineage linear (the BFS discipline)."""
     table = build_orders_txn_table(spark, sf_dir)
     head = current_version(table)
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     state = None
     prev = None
     for v in range(0, head + 1):
-        cur = txn_read(spark, table, version=v).select(*cols)
+        cur = txn_read(spark, table, version=v).select(*_ORDERS_COLS)
         if prev is None:
             ins = cur
             dels = None
@@ -1279,12 +1274,10 @@ def txnlog_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_write_checked,
     )
 
-    table = scratch_dir(fixture_name("txn_checked", sf_dir, "orders.parquet"))
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    ).filter(F.col("o_totalprice") > 0)
-    if current_version(table) != 3:
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table):
+        o = load(spark, sf_dir, "orders").select(*_ORDERS_COLS).filter(
+            F.col("o_totalprice") > 0
+        )
         txn_write(
             spark,
             o.filter(F.col("o_orderkey") % 7 == 0).repartition(2),
@@ -1307,4 +1300,6 @@ def txnlog_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=("o_orderkey",),
             op_name="clean_batch",
         )
+
+    table = fixture("txn_checked", sf_dir, ("orders.parquet",), build)
     return _snapshot_agg(txn_read(spark, table), 3).orderBy("o_orderstatus")

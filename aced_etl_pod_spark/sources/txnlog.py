@@ -28,13 +28,22 @@ Each log line is one action::
              "stats": {"col": {"min": .., "max": ..}}}}
     {"remove": {"path": "v0-...parquet"}}
 
-Commit protocol (optimistic concurrency, atomic publish): write the full
-action file to a hidden temp name, fsync, then ``os.link(tmp, final)`` —
-link(2) fails with EEXIST if another writer won the version, in which case
-the loser re-reads the log, revalidates, and retries at version+1. Readers
-only ever see complete, immutable log files, so a crashed writer leaves at
-worst an orphan temp file and orphan (unreferenced) data files — never a
-torn table.
+Write protocol: a data write is one or two ``_stage`` calls and one
+``_commit``; a metadata commit (schema, constraints, checkpoint) is a
+``_commit`` alone; branch create and merge are single ``_publish``es that
+conflict rather than retry. ``_stage`` writes a DataFrame into a hidden
+``.staging-*`` dir, moves each parquet file into the table root under a
+writer-unique name and returns its footer stats; the files stay
+unreferenced until a log entry names them. ``_commit`` is the one
+optimistic loop: each attempt takes ``version = current_version + 1``,
+asks the writer's ``body(version)`` for its actions (a body that read the
+table revalidates that read against the snapshot at ``version - 1`` and
+raises to abort), and ``_publish``es them: write the action file to a
+hidden temp name, fsync, then ``os.link(tmp, final)``. link(2) fails with
+EEXIST if another writer won the version, and only that conflict is
+retried. Readers only ever see complete, immutable log files, so a crashed
+writer leaves at worst an orphan temp file and orphan (unreferenced) data
+files — never a torn table.
 
 Reference anchor: the reference's stores are rebuilt wholesale per job
 (etl-job/fhir_import_export.py:230-258 load, :372-385 delete); this is the
@@ -48,6 +57,7 @@ import json
 import os
 import shutil
 import threading
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -129,6 +139,80 @@ def _file_stats(path: str, stats_cols: tuple[str, ...]) -> tuple[int, dict]:
     return md.num_rows, stats
 
 
+def _log_actions(table: str, start: int = 0, upto: int | None = None):
+    """Yield ``(version, action)`` for every log line of versions
+    ``start..upto`` (inclusive; None = latest), oldest first — the one
+    replay of ``_txnlog/<version>.json`` files."""
+    if upto is None:
+        upto = current_version(table)
+    for v in range(start, upto + 1):
+        path = _log_path(table, v)
+        if not os.path.exists(path):
+            continue
+        with open(path) as f:
+            for line in f:
+                yield v, json.loads(line)
+
+
+def _first_action(table: str, version: int) -> dict | None:
+    """The first line of log version ``version`` (its commit line), or
+    None if that version is not committed."""
+    return next((a for _, a in _log_actions(table, version, version)), None)
+
+
+def _is_checkpoint(table: str, version: int) -> bool:
+    first = _first_action(table, version) or {}
+    return first.get("commit", {}).get("op") == "checkpoint"
+
+
+def _stage(
+    df: DataFrame, table: str, kind: str, stats_cols: tuple[str, ...] = ()
+) -> list[dict]:
+    """Write ``df`` into a hidden staging dir, then move each parquet file
+    ONCE into the table root as ``v{attempt}-{kind}-{uid}-{seq:05d}.parquet``
+    and return its ``{path, rows, stats}`` entry from the footer. The
+    files are unreferenced until a log commit names them, so a crash or
+    a lost commit race leaves only orphans, never a torn table."""
+    uid = _writer_uid()
+    staging = os.path.join(table, f".staging-{kind}-{uid}")
+    df.write.mode("overwrite").parquet(staging)
+    attempt = current_version(table) + 1
+    entries = []
+    for seq, fname in enumerate(
+        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
+    ):
+        final = f"v{attempt}-{kind}-{uid}-{seq:05d}.parquet"
+        os.replace(os.path.join(staging, fname), os.path.join(table, final))
+        rows, stats = _file_stats(os.path.join(table, final), stats_cols)
+        entries.append({"path": final, "rows": rows, "stats": stats})
+    shutil.rmtree(staging, ignore_errors=True)
+    return entries
+
+
+def _commit(table: str, op: str, body: Callable[[int], list[dict]]) -> int:
+    """The one optimistic commit loop: each attempt publishes
+    ``[commit line] + body(version)`` at ``version = current_version + 1``
+    and returns that version. Only a lost ``_publish`` race is retried;
+    whatever ``body`` raises (a stale read set, a refused partition swap)
+    aborts the commit."""
+    while True:
+        version = current_version(table) + 1
+        actions = [{"commit": {"op": op, "version": version}}] + body(version)
+        try:
+            _publish(table, version, actions)
+            return version
+        except CommitConflict:
+            continue
+
+
+def _paths(entries: list[dict]) -> set[str]:
+    return {e["path"] for e in entries}
+
+
+def _removes(entries: list[dict], action: str = "remove") -> list[dict]:
+    return [{action: {"path": e["path"]}} for e in entries]
+
+
 def txn_write(
     spark: SparkSession,
     df: DataFrame,
@@ -143,86 +227,44 @@ def txn_write(
     file live in the snapshot the writer validated against. Returns the
     committed version. On CommitConflict the commit retries at the next
     version — for append that is always safe (file-level appends commute);
-    an overwrite retry re-reads the live set so it removes the winner's
-    files too."""
-    os.makedirs(table, exist_ok=True)
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.mode("overwrite").parquet(staging)
-    # Move staged parquet into the table root ONCE, under names unique to
-    # this writer invocation — data files are immutable and unreferenced
-    # until a log commit names them, so a crash or a lost commit race
-    # leaves only orphans, never a torn table.
-    attempt = current_version(table) + 1
-    adds = []
-    for seq, fname in enumerate(
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ):
-        final = f"v{attempt}-{uid}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, fname), os.path.join(table, final))
-        rows, stats = _file_stats(os.path.join(table, final), stats_cols)
-        adds.append({"add": {"path": final, "rows": rows, "stats": stats}})
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
-        actions = [{"commit": {"op": op_name, "version": version}}]
-        if mode == "overwrite":
-            # Revalidate against the CURRENT snapshot each attempt so a
-            # retried overwrite also removes files a rival just added.
-            actions += [
-                {"remove": {"path": f["path"]}}
-                for f in snapshot_files(table, version - 1)
-            ]
-        actions += adds
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            continue  # optimistic retry at the next version
+    an overwrite re-reads the live set on every attempt so it removes a
+    rival's files too."""
+    adds = [{"add": e} for e in _stage(df, table, "write", stats_cols)]
+
+    def body(version: int) -> list[dict]:
+        if mode != "overwrite":
+            return adds
+        return _removes(snapshot_files(table, version - 1)) + adds
+
+    return _commit(table, op_name, body)
 
 
 def snapshot_files(table: str, version: int | None = None) -> list[dict]:
     """Replay the log up to ``version`` (inclusive; None = latest) and
     return the live file entries [{path, rows, stats}, ...]."""
     latest = current_version(table)
-    if latest < 0:
-        return []
     upto = latest if version is None else min(version, latest)
-    live: dict[str, dict] = {}
-    start = 0
     # Start replay at the newest checkpoint at-or-before ``upto``: a
     # checkpoint's add actions ARE the full live set as of that version,
     # so earlier log entries are redundant for this read.
-    for v in range(upto, -1, -1):
-        cp = _log_path(table, v)
-        if not os.path.exists(cp):
-            continue
-        with open(cp) as f:
-            first = json.loads(f.readline())
-        if first.get("commit", {}).get("op") == "checkpoint":
-            start = v
-            break
-    for v in range(start, upto + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                action = json.loads(line)
-                if "add" in action:
-                    # tag the entry with its commit version (the "sequence
-                    # number" of the published formats) — equality deletes
-                    # apply only to files committed BEFORE the delete. A
-                    # checkpoint's materialized adds carry the ORIGINAL v
-                    # forward (see txn_checkpoint), so sequence semantics
-                    # survive replay-from-checkpoint.
-                    live[action["add"]["path"]] = {
-                        **action["add"],
-                        "v": action["add"].get("v", v),
-                    }
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
+    start = next(
+        (v for v in range(upto, -1, -1) if _is_checkpoint(table, v)), 0
+    )
+    live: dict[str, dict] = {}
+    for v, action in _log_actions(table, start, upto):
+        if "add" in action:
+            # tag the entry with its commit version (the "sequence number"
+            # of the published formats) — equality deletes apply only to
+            # files committed BEFORE the delete. A checkpoint's
+            # materialized adds carry the ORIGINAL v forward (see
+            # txn_checkpoint), so sequence semantics survive
+            # replay-from-checkpoint.
+            live[action["add"]["path"]] = {
+                **action["add"],
+                "v": action["add"].get("v", v),
+            }
+        elif "remove" in action:
+            live.pop(action["remove"]["path"], None)
     return list(live.values())
 
 
@@ -268,15 +310,11 @@ def txn_read(
 
 def table_history(table: str) -> list[dict]:
     """The commit line of every version, oldest first (DESCRIBE HISTORY)."""
-    out = []
-    for v in range(current_version(table) + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            first = json.loads(f.readline())
-        out.append(first.get("commit", {"version": v}))
-    return out
+    return [
+        first.get("commit", {"version": v})
+        for v in range(current_version(table) + 1)
+        if (first := _first_action(table, v)) is not None
+    ]
 
 
 def txn_compact(
@@ -295,37 +333,20 @@ def txn_compact(
     separate retention-driven step, as in the published designs)."""
     live = snapshot_files(table)
     df = spark.read.parquet(*[os.path.join(table, f["path"]) for f in live])
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-compact-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    attempt = current_version(table) + 1
-    adds = []
-    for seq, fname in enumerate(
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ):
-        final = f"v{attempt}-compact-{uid}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, fname), os.path.join(table, final))
-        rows, stats = _file_stats(os.path.join(table, final), stats_cols)
-        adds.append({"add": {"path": final, "rows": rows, "stats": stats}})
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
-        actions = (
-            [{"commit": {"op": "compact", "version": version}}]
-            + [{"remove": {"path": f["path"]}} for f in live]
-            + adds
-        )
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            # a rival commit landed; revalidate that OUR source files are
-            # still the live set (else the compaction is stale — abort)
-            if {f["path"] for f in snapshot_files(table)} != {
-                f["path"] for f in live
-            }:
-                raise
+    adds = [
+        {"add": e}
+        for e in _stage(df.coalesce(target_files), table, "compact", stats_cols)
+    ]
+
+    def body(version: int) -> list[dict]:
+        # the compaction is stale if any commit since the read changed
+        # the live set — checked on EVERY attempt, not only after a lost
+        # race (a rival that committed while we staged is no race)
+        if _paths(snapshot_files(table, version - 1)) != _paths(live):
+            raise CommitConflict("live set changed since the compaction read")
+        return _removes(live) + adds
+
+    return _commit(table, "compact", body)
 
 
 def txn_checkpoint(table: str) -> int:
@@ -336,32 +357,21 @@ def txn_checkpoint(table: str) -> int:
     published Delta checkpoint-parquet idea in JSON form. A checkpoint is
     just another atomic commit: concurrent writers race it like any other
     version."""
-    while True:
-        version = current_version(table) + 1
-        live = snapshot_files(table, version - 1)
-        actions = [
-            {"commit": {"op": "checkpoint", "version": version}},
-            {"checkpoint": {"base": version}},
-        ] + [{"add": f if "stats" in f else dict(f)} for f in live]
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            continue
+    return _commit(
+        table,
+        "checkpoint",
+        lambda version: [{"checkpoint": {"base": version}}]
+        + [{"add": f} for f in snapshot_files(table, version - 1)],
+    )
 
 
 def latest_checkpoint(table: str) -> int | None:
     """Version of the newest checkpoint commit, or None."""
-    best = None
-    for v in range(current_version(table) + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            first = json.loads(f.readline())
-        if first.get("commit", {}).get("op") == "checkpoint":
-            best = v
-    return best
+    return next(
+        (v for v in range(current_version(table), -1, -1)
+         if _is_checkpoint(table, v)),
+        None,
+    )
 
 
 def vacuum(table: str, keep_versions: int = 0) -> list[str]:
@@ -389,17 +399,11 @@ def txn_set_schema(table: str, schema_json: str) -> None:
     simplicity the schema rides its own commit (the published formats
     fold it into the writing commit; the isolation property is the same
     because the publish is atomic either way)."""
-    while True:
-        version = current_version(table) + 1
-        actions = [
-            {"commit": {"op": "set_schema", "version": version}},
-            {"metaData": {"schemaJson": schema_json}},
-        ]
-        try:
-            _publish(table, version, actions)
-            return
-        except CommitConflict:
-            continue
+    _commit(
+        table,
+        "set_schema",
+        lambda version: [{"metaData": {"schemaJson": schema_json}}],
+    )
 
 
 def table_schema(table: str, version: int | None = None):
@@ -407,18 +411,10 @@ def table_schema(table: str, version: int | None = None):
     parsed back into a Spark StructType; None if never recorded."""
     from pyspark.sql.types import StructType
 
-    latest = current_version(table)
-    upto = latest if version is None else min(version, latest)
     found = None
-    for v in range(upto + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                action = json.loads(line)
-                if "metaData" in action:
-                    found = action["metaData"]["schemaJson"]
+    for _, action in _log_actions(table, upto=version):
+        if "metaData" in action:
+            found = action["metaData"]["schemaJson"]
     return None if found is None else StructType.fromJson(json.loads(found))
 
 
@@ -455,26 +451,20 @@ def snapshot_delete_files(table: str, version: int | None = None) -> list[dict]:
     only data-file adds, and delete files are few by construction — a
     compaction (txn_apply_deletes) retires them, so the set replayed here
     stays O(deletes since last compaction)."""
-    latest = current_version(table)
-    if latest < 0:
-        return []
-    upto = latest if version is None else min(version, latest)
     live: dict[str, dict] = {}
-    for v in range(0, upto + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                action = json.loads(line)
-                if "add_delete" in action:
-                    live[action["add_delete"]["path"]] = {
-                        **action["add_delete"],
-                        "v": v,
-                    }
-                elif "remove_delete" in action:
-                    live.pop(action["remove_delete"]["path"], None)
+    for v, action in _log_actions(table, upto=version):
+        if "add_delete" in action:
+            live[action["add_delete"]["path"]] = {**action["add_delete"], "v": v}
+        elif "remove_delete" in action:
+            live.pop(action["remove_delete"]["path"], None)
     return list(live.values())
+
+
+def _add_deletes(entries: list[dict], key_col: str) -> list[dict]:
+    return [
+        {"add_delete": {"path": e["path"], "rows": e["rows"], "key": key_col}}
+        for e in entries
+    ]
 
 
 def txn_delete_keys(spark, keys_df, table: str, key_col: str) -> int:
@@ -483,30 +473,10 @@ def txn_delete_keys(spark, keys_df, table: str, key_col: str) -> int:
     action — O(matched keys) I/O, NO data-file rewrite. Readers must go
     through txn_read_mor (merge-on-read) until txn_apply_deletes
     compacts."""
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-del-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    keys_df.select(key_col).coalesce(1).write.mode("overwrite").parquet(staging)
-    attempt = current_version(table) + 1
-    adds = []
-    for seq, fname in enumerate(
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ):
-        final = f"v{attempt}-delete-{uid}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, fname), os.path.join(table, final))
-        rows, _ = _file_stats(os.path.join(table, final), ())
-        adds.append(
-            {"add_delete": {"path": final, "rows": rows, "key": key_col}}
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
-        actions = [{"commit": {"op": "delete", "version": version}}] + adds
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            continue
+    adds = _add_deletes(
+        _stage(keys_df.select(key_col).coalesce(1), table, "delete"), key_col
+    )
+    return _commit(table, "delete", lambda version: adds)
 
 
 def txn_read_mor(spark, table: str, version: int | None = None):
@@ -528,9 +498,7 @@ def txn_read_mor(spark, table: str, version: int | None = None):
 
     files = snapshot_files(table, version)
     dels = snapshot_delete_files(table, version)
-    if not files:
-        return txn_read(spark, table, version)
-    if not dels:
+    if not files or not dels:
         return txn_read(spark, table, version)
     key = dels[0]["key"]
     # group data files by applicable delete versions
@@ -570,45 +538,12 @@ def txn_upsert(
     (deletes apply only to EARLIER files) is what lets the delete and the
     replacement rows share a version. Cost is O(batch), never a base
     rewrite — the merge-on-read MERGE of the published formats."""
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-upsert-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.mode("overwrite").parquet(os.path.join(staging, "data"))
-    df.select(key_col).distinct().coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(staging, "keys")
+    keys = _stage(
+        df.select(key_col).distinct().coalesce(1), table, "upsert-keys"
     )
-    attempt = current_version(table) + 1
-    actions_files: list[dict] = []
-    for sub, kind in (("keys", "add_delete"), ("data", "add")):
-        for seq, fname in enumerate(
-            f
-            for f in sorted(os.listdir(os.path.join(staging, sub)))
-            if f.endswith(".parquet")
-        ):
-            final = f"v{attempt}-upsert-{kind}-{uid}-{seq:05d}.parquet"
-            os.replace(
-                os.path.join(staging, sub, fname), os.path.join(table, final)
-            )
-            rows, _ = _file_stats(os.path.join(table, final), ())
-            if kind == "add_delete":
-                actions_files.append(
-                    {"add_delete": {"path": final, "rows": rows, "key": key_col}}
-                )
-            else:
-                actions_files.append(
-                    {"add": {"path": final, "rows": rows, "stats": {}}}
-                )
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
-        actions = [
-            {"commit": {"op": op_name, "version": version}}
-        ] + actions_files
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            continue
+    data = _stage(df, table, "upsert-data")
+    actions = _add_deletes(keys, key_col) + [{"add": e} for e in data]
+    return _commit(table, op_name, lambda version: actions)
 
 
 def txn_apply_deletes(
@@ -620,39 +555,22 @@ def txn_apply_deletes(
     one commit). After this, plain txn_read equals txn_read_mor and the
     read path pays no anti-join — the same write-amplification-for-read-
     speed trade OPTIMIZE makes for small files."""
-    live = snapshot_files(table)
-    dels = snapshot_delete_files(table)
-    purged = txn_read_mor(spark, table)
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-purge-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    purged.write.mode("overwrite").parquet(staging)
-    attempt = current_version(table) + 1
-    adds = []
-    for seq, fname in enumerate(
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ):
-        final = f"v{attempt}-purge-{uid}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, fname), os.path.join(table, final))
-        rows, stats = _file_stats(os.path.join(table, final), stats_cols)
-        adds.append({"add": {"path": final, "rows": rows, "stats": stats}})
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
-        actions = (
-            [{"commit": {"op": "apply_deletes", "version": version}}]
-            + [{"remove": {"path": f["path"]}} for f in live]
-            + [{"remove_delete": {"path": d["path"]}} for d in dels]
-            + adds
-        )
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            if {f["path"] for f in snapshot_files(table)} != {
-                f["path"] for f in live
-            }:
-                raise
+    read = current_version(table)
+    live = snapshot_files(table, read)
+    dels = snapshot_delete_files(table, read)
+    purged = txn_read_mor(spark, table, read)
+    adds = [{"add": e} for e in _stage(purged, table, "purge", stats_cols)]
+
+    def body(version: int) -> list[dict]:
+        # stale if any commit since the read changed the live data or
+        # delete files — checked on EVERY attempt (see txn_compact)
+        now = (_paths(snapshot_files(table, version - 1)),
+               _paths(snapshot_delete_files(table, version - 1)))
+        if now != (_paths(live), _paths(dels)):
+            raise CommitConflict("live set changed since the purge read")
+        return _removes(live) + _removes(dels, "remove_delete") + adds
+
+    return _commit(table, "apply_deletes", body)
 
 
 def txn_overwrite_partition(
@@ -676,37 +594,29 @@ def txn_overwrite_partition(
     partition-aligned tables are written partition-aligned (every add in
     this repo's fixtures carries exact-stats files). The check re-runs on
     every optimistic retry against the then-current snapshot."""
-    os.makedirs(table, exist_ok=True)
-    uid = _writer_uid()
-    staging = os.path.join(table, f".staging-{uid}")
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.mode("overwrite").parquet(staging)
-    attempt = current_version(table) + 1
     all_stats = tuple(dict.fromkeys((part_col, *stats_cols)))
-    adds = []
-    for seq, fname in enumerate(
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ):
-        final = f"v{attempt}-{uid}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, fname), os.path.join(table, final))
-        rows, stats = _file_stats(os.path.join(table, final), all_stats)
-        if rows == 0:
-            # a zero-row staged file (empty replacement = partition
-            # truncation) carries no data and no stats — adding it would
-            # fail alignment; dropping it is exactly the overwrite-with-
-            # empty semantics (the removes below still retire the old files)
-            os.remove(os.path.join(table, final))
-            continue
-        ps = stats.get(part_col)
-        if ps is None or ps["min"] != part_value or ps["max"] != part_value:
+    staged = _stage(df, table, "overwrite", all_stats)
+    for e in staged:
+        ps = e["stats"].get(part_col)
+        if e["rows"] and (
+            ps is None or ps["min"] != part_value or ps["max"] != part_value
+        ):
+            for f in staged:  # a refused swap leaves no orphans behind
+                os.remove(os.path.join(table, f["path"]))
             raise ValueError(
-                f"replacement file {final} is not aligned to partition "
+                f"replacement file {e['path']} is not aligned to partition "
                 f"{part_col}={part_value!r} (stats {ps})"
             )
-        adds.append({"add": {"path": final, "rows": rows, "stats": stats}})
-    shutil.rmtree(staging, ignore_errors=True)
-    while True:
-        version = current_version(table) + 1
+    # a zero-row staged file (empty replacement = partition truncation)
+    # carries no data and no stats; dropping it is exactly the
+    # overwrite-with-empty semantics (the removes below still retire the
+    # old files)
+    for e in staged:
+        if not e["rows"]:
+            os.remove(os.path.join(table, e["path"]))
+    adds = [{"add": e} for e in staged if e["rows"]]
+
+    def body(version: int) -> list[dict]:
         removes = []
         for f in snapshot_files(table, version - 1):
             if f.get("rows") == 0:
@@ -727,16 +637,9 @@ def txn_overwrite_partition(
                     f"{part_value!r} ({ps}); partition overwrite would drop "
                     "co-resident rows"
                 )
-        actions = (
-            [{"commit": {"op": "overwrite_partition", "version": version}}]
-            + removes
-            + adds
-        )
-        try:
-            _publish(table, version, actions)
-            return version
-        except CommitConflict:
-            continue
+        return removes + adds
+
+    return _commit(table, "overwrite_partition", body)
 
 
 # ---------------------------------------------------------------------------
@@ -770,11 +673,9 @@ def create_branch(base_table: str, branch_table: str, version: int | None = None
 
 
 def branch_info(branch_table: str) -> dict:
-    with open(_log_path(branch_table, 0)) as f:
-        for line in f:
-            action = json.loads(line)
-            if "branch" in action:
-                return action["branch"]
+    for _, action in _log_actions(branch_table, 0, 0):
+        if "branch" in action:
+            return action["branch"]
     raise ValueError(f"{branch_table} is not a branch (no branch action in v0)")
 
 
@@ -796,9 +697,9 @@ def merge_branch(base_table: str, branch_table: str) -> int:
             f"base advanced to v{base_v} past the branch point "
             f"v{info['base_version']}; rebase required"
         )
-    seed_paths = {f["path"] for f in snapshot_files(branch_table, 0)}
+    seed_paths = _paths(snapshot_files(branch_table, 0))
     live = snapshot_files(branch_table)
-    live_paths = {f["path"] for f in live}
+    live_paths = _paths(live)
     version = base_v + 1
     uid = _writer_uid()
     actions: list[dict] = [
@@ -875,31 +776,16 @@ def txn_set_constraints(table: str, constraints: dict[str, str]) -> int:
     """Declare named CHECK constraints (SQL boolean expressions over the
     row) as a `constraints` metadata action — from this version on, every
     `txn_write_checked` commit must prove its batch satisfies them."""
-    version = current_version(table) + 1
-    _publish(
-        table,
-        version,
-        [
-            {"commit": {"op": "set_constraints", "version": version}},
-            {"constraints": constraints},
-        ],
+    return _commit(
+        table, "set_constraints", lambda version: [{"constraints": constraints}]
     )
-    return version
 
 
 def table_constraints(table: str, version: int | None = None) -> dict[str, str]:
-    latest = current_version(table)
-    upto = latest if version is None else min(version, latest)
     found: dict[str, str] = {}
-    for v in range(0, upto + 1):
-        path = _log_path(table, v)
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                action = json.loads(line)
-                if "constraints" in action:
-                    found = action["constraints"]  # latest declaration wins
+    for _, action in _log_actions(table, upto=version):
+        if "constraints" in action:
+            found = action["constraints"]  # latest declaration wins
     return found
 
 

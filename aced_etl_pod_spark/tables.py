@@ -126,9 +126,9 @@ def scratch_dir(sub: str = "") -> str:
 
     SHARED across sessions: :func:`fixture` is the only publisher of
     build-once artifacts into it (fingerprint-keyed name, temp dir +
-    _DONE + rename, age-gated eviction). The ``txn_*`` / ``mv_*`` tables
-    that later ops mutate through the txn log keep their own lifecycle
-    and take only their names from :func:`fixture_name`. EPHEMERAL
+    _DONE + rename, age-gated eviction). Only the ``mv_*`` snapshots,
+    which later ops mutate in place, keep their own lifecycle and take
+    only their names from :func:`fixture_name`. EPHEMERAL
     state (streaming checkpoints, rmtree-then-rebuild sinks, test
     scratch) must use :func:`session_scratch_dir` instead: two
     concurrent runners sharing a checkpoint dir or an evict-then-rebuild

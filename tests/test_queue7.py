@@ -965,7 +965,7 @@ def test_branch_merge_acid(spark, con):
     assert not compare(sdf, ddf)
 
     base_fix = tf.build_orders_txn_table(spark, SF_SMALL)
-    base = scratch_dir(base_fix.rstrip("/") + "_branch_base")
+    base = tf.build_branch_merge_table(spark, SF_SMALL)
     # the pre-merge tag still resolves the v2 content (no %7==3 rows)
     tagged = read_tag(spark, base, "pre-merge")
     assert tagged.filter("o_orderkey % 7 = 3").count() == 0

@@ -6,9 +6,9 @@ file that still exists, so deleting a tool cannot leave a kept one
 importing it. No string literal holds the absolute checkout path: code
 run from one checkout must read and import that checkout, so the path is
 derived from ``__file__``. And only ``tables.py`` fingerprints sources
-or evicts fixtures, so every build-once artifact goes through
-``tables.fixture``. Nothing is executed; third-party and stdlib names
-are checked with find_spec."""
+or evicts fixtures, and only two modules take a bare ``fixture_name``,
+so every build-once artifact goes through ``tables.fixture``. Nothing
+is executed; third-party and stdlib names are checked with find_spec."""
 
 from __future__ import annotations
 
@@ -100,20 +100,44 @@ def test_checkout_path_is_derived_not_literal():
     assert not literal, f"literal absolute checkout paths: {literal}"
 
 
-def test_only_tables_fingerprints_and_evicts_fixtures():
-    """A module that reads ``st_mtime_ns`` or calls ``evict_stale_fixtures``
-    is hand-rolling the build-once protocol ``tables.fixture`` owns."""
-    tables = os.path.join("aced_etl_pod_spark", "tables.py")
-    owned = {"st_mtime_ns", "evict_stale_fixtures"}
+def _uses(names: set[str], allowed: set[str]) -> list[str]:
+    """``file:line name`` for every import or reference of ``names`` in
+    the package and tools/ outside the ``allowed`` files."""
     sites = []
     for rel, tree in _parsed(PACKAGE + glob.glob(os.path.join(TOOLS, "*.py"))):
-        if rel == tables:
+        if rel in allowed:
             continue
         for node in ast.walk(tree):
-            names = (
+            found = (
                 [a.name for a in node.names]
                 if isinstance(node, ast.ImportFrom)
                 else [getattr(node, "attr", getattr(node, "id", None))]
             )
-            sites += [f"{rel}:{node.lineno} {n}" for n in names if n in owned]
+            sites += [f"{rel}:{node.lineno} {n}" for n in found if n in names]
+    return sites
+
+
+TABLES = os.path.join("aced_etl_pod_spark", "tables.py")
+
+
+def test_only_tables_fingerprints_and_evicts_fixtures():
+    """A module that reads ``st_mtime_ns`` or calls ``evict_stale_fixtures``
+    is hand-rolling the build-once protocol ``tables.fixture`` owns."""
+    sites = _uses({"st_mtime_ns", "evict_stale_fixtures"}, {TABLES})
     assert not sites, f"fixture protocol outside tables.py: {sites}"
+
+
+def test_scratch_tables_are_built_through_fixture():
+    """A bare ``fixture_name`` names a shared-scratch dir that no
+    ``tables.fixture`` publishes, so its builder needs its own
+    completion check. Only the ``mv_*`` snapshots that later ops mutate
+    in place (incremental_ops.py) and the event-type dictionary's cache
+    key (aggs.py) take a bare name."""
+    ops = os.path.join("aced_etl_pod_spark", "operators")
+    allowed = {
+        TABLES,
+        os.path.join(ops, "incremental_ops.py"),
+        os.path.join(ops, "aggs.py"),
+    }
+    sites = _uses({"fixture_name"}, allowed)
+    assert not sites, f"fixture_name outside tables.fixture: {sites}"

@@ -12,6 +12,7 @@ import threading
 
 import pytest
 
+from aced_etl_pod_spark.sources import txnlog
 from aced_etl_pod_spark.sources.txnlog import (
     CommitConflict,
     _publish,
@@ -266,3 +267,132 @@ def test_concurrent_upserts_no_lost_update(spark, table):
     want.update({i: i * 100 for i in range(5)})
     want.update({i: i * 1000 for i in range(10, 15)})
     assert got == want
+
+
+def _rival_while_staging(monkeypatch, rival):
+    """Run ``rival()`` once, inside the first footer read of the next
+    staged file: a commit that lands while a writer stages."""
+    real = txnlog._file_stats
+    fired = []
+
+    def first_read_runs_rival(path, stats_cols):
+        if not fired:
+            fired.append(path)
+            rival()
+        return real(path, stats_cols)
+
+    monkeypatch.setattr(txnlog, "_file_stats", first_read_runs_rival)
+
+
+def test_compaction_aborts_on_a_rival_commit_while_staging(
+    spark, table, monkeypatch
+):
+    """A rival overwrite that commits while the compaction stages wins no
+    race against it, yet makes its read set stale: the compaction must
+    abort, not re-add the overwritten rows."""
+    from aced_etl_pod_spark.sources.txnlog import txn_compact
+
+    txn_write(spark, _df(spark, 0, 10).repartition(2), table)
+    _rival_while_staging(
+        monkeypatch,
+        lambda: txn_write(spark, _df(spark, 100, 103), table, mode="overwrite"),
+    )
+    with pytest.raises(CommitConflict):
+        txn_compact(spark, table)
+    ids = sorted(r["id"] for r in txn_read(spark, table).collect())
+    assert ids == [100, 101, 102]
+
+
+def test_apply_deletes_aborts_on_a_rival_upsert_while_staging(
+    spark, table, monkeypatch
+):
+    """A rival upsert of key 2 that commits while the purge stages: the
+    purge must abort rather than publish the pre-upsert row beside the
+    upserted one."""
+    from aced_etl_pod_spark.sources.txnlog import (
+        txn_apply_deletes,
+        txn_delete_keys,
+        txn_read_mor,
+        txn_upsert,
+    )
+
+    txn_write(spark, _df(spark, 0, 10), table)  # v = id * 2
+    txn_delete_keys(spark, spark.range(0, 1), table, "id")
+    _rival_while_staging(
+        monkeypatch,
+        lambda: txn_upsert(
+            spark, spark.range(2, 3).selectExpr("id", "id * 2 + 5000 AS v"),
+            table, "id",
+        ),
+    )
+    with pytest.raises(CommitConflict):
+        txn_apply_deletes(spark, table)
+    rows = sorted((r.id, r.v) for r in txn_read_mor(spark, table).collect())
+    assert [r for r in rows if r[0] == 2] == [(2, 5004)]
+    assert len(rows) == 9  # key 0 still deleted, no key duplicated
+
+
+def test_set_constraints_retries_a_lost_race(table, monkeypatch):
+    """Declaring constraints is an optimistic commit like any other: a
+    rival that takes the version moves it to the next one."""
+    from aced_etl_pod_spark.sources.txnlog import (
+        table_constraints,
+        txn_set_constraints,
+    )
+
+    os.makedirs(table)
+    _publish(table, 0, [{"commit": {"op": "seed", "version": 0}}])
+    real = txnlog._publish
+
+    def lose_first_race(t, version, actions):
+        monkeypatch.setattr(txnlog, "_publish", real)
+        real(t, version, [{"commit": {"op": "rival", "version": version}}])
+        real(t, version, actions)  # raises CommitConflict
+
+    monkeypatch.setattr(txnlog, "_publish", lose_first_race)
+    constraints = {"positive_v": "v > 0"}
+    assert txn_set_constraints(table, constraints) == 2
+    assert table_constraints(table) == constraints
+    ops = [h["op"] for h in table_history(table)]
+    assert ops == ["seed", "rival", "set_constraints"]
+
+
+@pytest.mark.parametrize(
+    "op_name, label",
+    [
+        ("txnlog_schema_evolution", "txn_schevo"),
+        ("txnlog_check_constraints", "txn_checked"),
+    ],
+)
+def test_txn_fixture_is_built_once(spark, op_name, label):
+    """A second call of the op reuses the published table: its data
+    files (writer-unique names) are the same files."""
+    from aced_etl_pod_spark.operators import table_format as tf
+    from aced_etl_pod_spark.tables import fixture_name, scratch_dir
+
+    def data_files():
+        return sorted(f for f in os.listdir(table) if f.endswith(".parquet"))
+
+    getattr(tf, op_name)(spark, SF_SMALL)
+    table = scratch_dir(fixture_name(label, SF_SMALL, "orders.parquet"))
+    first = data_files()
+    getattr(tf, op_name)(spark, SF_SMALL)
+    assert first and data_files() == first
+
+
+def test_refused_partition_overwrite_leaves_no_files(spark, table):
+    """A replacement that is not aligned to the partition is refused
+    after staging; its staged files go with it."""
+    from aced_etl_pod_spark.sources.txnlog import txn_overwrite_partition
+
+    for part in (0, 1):
+        txn_write(spark, _df(spark, 0, 4).selectExpr(f"{part} AS p", "id"),
+                  table, stats_cols=("p",))
+    before = sorted(os.listdir(table))
+    with pytest.raises(ValueError, match="not aligned"):
+        txn_overwrite_partition(
+            spark, _df(spark, 0, 4).selectExpr("id % 2 AS p", "id").coalesce(1),
+            table, part_col="p", part_value=1,
+        )
+    assert sorted(os.listdir(table)) == before
+    assert current_version(table) == 1
