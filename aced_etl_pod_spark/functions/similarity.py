@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aced_etl_pod_spark.tables import read_parquet
+
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -456,7 +458,7 @@ def ivf_index_probe(
         return spark.createDataFrame([], f"{id_col} long, cos_sim double")
     qvec = np.asarray(head1[0][0], dtype=np.float64)
     q_norm = float(np.sqrt(qvec @ qvec))
-    cpdf = spark.read.parquet(f"{path}/centroids").toPandas()
+    cpdf = read_parquet(spark, f"{path}/centroids").toPandas()
     if not len(cpdf):  # empty index (built over zero valid vectors)
         return spark.createDataFrame([], f"{id_col} long, cos_sim double")
     C = np.stack(cpdf["c_emb"].to_numpy()).astype(np.float64)
@@ -466,7 +468,7 @@ def ivf_index_probe(
     bkts = sorted({int(cpdf["bkt"].iloc[i]) for i in order[:n_probe]})
 
     idx = (
-        spark.read.parquet(f"{path}/cells")
+        read_parquet(spark, f"{path}/cells")
         .filter(F.col("bkt").isin(bkts))
         .filter(F.col("cid").isin(cells))
     )
@@ -537,7 +539,7 @@ def ivf_index_probe_many(
             exclude_self=exclude_self,
         )
 
-    cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
+    cents = F.broadcast(read_parquet(spark, f"{path}/centroids"))
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")
     )
@@ -561,7 +563,7 @@ def ivf_index_probe_many(
     # splits — measured at x200 under the old per-cell layout: 2528
     # tasks for 26 MB, 6 of 12 s wall on pure scheduling; coalesced, the
     # same probe runs ~4 s warm.
-    idx = spark.read.parquet(f"{path}/cells").coalesce(
+    idx = read_parquet(spark, f"{path}/cells").coalesce(
         spark.sparkContext.defaultParallelism
     )
     cands = idx.join(q_cells, ["bkt", "cid"])
@@ -603,7 +605,7 @@ def _ivf_probe_many_gemm(
     qpdf = queries.select(
         F.col(id_col).alias("q_id"), F.col(emb_col).alias("q_emb")
     ).toPandas()
-    cpdf = spark.read.parquet(f"{path}/centroids").toPandas()
+    cpdf = read_parquet(spark, f"{path}/centroids").toPandas()
     if not len(qpdf) or not len(cpdf):
         return spark.createDataFrame([], empty)
     if not np.issubdtype(qpdf["q_id"].to_numpy().dtype, np.integer):
@@ -645,7 +647,7 @@ def _ivf_probe_many_gemm(
         allow[np.searchsorted(cid_sorted, probe_cells[j]), j] = True
 
     scan = (
-        spark.read.parquet(f"{path}/cells")
+        read_parquet(spark, f"{path}/cells")
         .filter(F.col("bkt").isin(bkts))
         .filter(F.col("cid").isin([int(c) for c in cell_union]))
         .select(id_col, emb_col, "cid")

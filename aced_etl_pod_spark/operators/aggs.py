@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from aced_etl_pod_spark.operators.util import finite, finite_sql
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load
+from aced_etl_pod_spark.tables import load, read_parquet
 
 
 @op(
@@ -148,7 +148,7 @@ def _q1_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
             .sortWithinPartitions("l_shipdate")
         )
         summary.write.mode("overwrite").parquet(f"{tmp}/summary")
-        n_groups = spark.read.parquet(f"{tmp}/summary").count()
+        n_groups = read_parquet(spark, f"{tmp}/summary").count()
         if n_groups * 2 >= max(table_row_count(sf_dir, "lineitem"), 1):
             open(f"{tmp}/_DEGENERATE", "w").close()
 
@@ -225,7 +225,7 @@ def q1_summary_answer(spark: SparkSession, path: str) -> DataFrame:
     """The q1 re-aggregation over a pricing-summary fixture at ``path`` —
     shared by the ingest op and the delta-merge A/B (any fixture whose
     partials re-sum to the same totals answers identically)."""
-    s = spark.read.parquet(f"{path}/summary")
+    s = read_parquet(spark, f"{path}/summary")
     f = s.filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
@@ -505,7 +505,7 @@ def agg_distinct_count_mask_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     path = _user_mask_fixture(spark, sf_dir)
     if path is None:
         return agg_distinct_count(spark, sf_dir)
-    return mask_table_counts(spark.read.parquet(f"{path}/masks"))
+    return mask_table_counts(read_parquet(spark, f"{path}/masks"))
 
 
 def mask_table_counts(per_user: DataFrame) -> DataFrame:
@@ -553,7 +553,7 @@ def merge_user_mask_delta(
 
     types_old = [
         (r["bit"], r["event_type"])
-        for r in spark.read.parquet(f"{base_fixture}/types").collect()
+        for r in read_parquet(spark, f"{base_fixture}/types").collect()
     ]
     types_old.sort()
     known = {t for _, t in types_old}
@@ -584,7 +584,7 @@ def merge_user_mask_delta(
         .groupBy("user_id")
         .agg(F.expr("bit_or(mask)").alias("mask"))
     )
-    base_masks = spark.read.parquet(f"{base_fixture}/masks")
+    base_masks = read_parquet(spark, f"{base_fixture}/masks")
     parent = os.path.dirname(out.rstrip("/")) or "."
     tmp = tempfile.mkdtemp(prefix=".maskmerge.tmp.", dir=parent)
     try:
@@ -623,7 +623,7 @@ def merge_q1_summary_delta(
     import tempfile
 
     delta_summary = _q1_partials(delta)
-    base = spark.read.parquet(f"{base_fixture}/summary")
+    base = read_parquet(spark, f"{base_fixture}/summary")
     merged = (
         base.unionByName(delta_summary)
         .groupBy("l_returnflag", "l_linestatus", "l_shipdate")
@@ -905,7 +905,7 @@ def agg_rollup_summary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips every level — real (priority, NULL) groups and subtotal
     rows included."""
     path = _rollup_summary_fixture(spark, sf_dir)
-    s = spark.read.parquet(f"{path}/summary")
+    s = read_parquet(spark, f"{path}/summary")
     base = s.groupBy("o_orderpriority", "o_orderstatus").agg(
         F.sum("_n").cast("long").alias("_n"),
         F.sum("_s").alias("_s"),

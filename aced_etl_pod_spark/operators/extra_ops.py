@@ -20,7 +20,7 @@ from aced_etl_pod_spark.operators.util import (
     zn_sql,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load
+from aced_etl_pod_spark.tables import load, read_parquet
 
 
 @op(
@@ -452,7 +452,7 @@ def agg_time_bucket_summary_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     ships: ingest maintains the finest rollup once; every dashboard
     grain re-aggregates it for ~nothing."""
     path = _minute_summary_fixture(spark, sf_dir)
-    s = spark.read.parquet(f"{path}/minute")
+    s = read_parquet(spark, f"{path}/minute")
     # floor division of the minute index by 60 (pmod keeps pre-1970
     # minutes on the correct hour — the same idiom as the micros bucket)
     hour = F.expr("(m - pmod(m, 60)) DIV 60")

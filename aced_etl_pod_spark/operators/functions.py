@@ -27,7 +27,7 @@ from aced_etl_pod_spark.operators.util import (
     zn_sql,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load
+from aced_etl_pod_spark.tables import load, read_parquet
 
 
 @op(
@@ -501,7 +501,7 @@ def fn_json_shredded_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys). The one-time parse cost is fn_json's wall once; it amortizes
     over every query after (measured: PLANS.md round-10)."""
     path = _shredded_events_fixture(spark, sf_dir)
-    e = spark.read.parquet(f"{path}/events_k")
+    e = read_parquet(spark, f"{path}/events_k")
     k_int = F.when(
         F.col("k").between(-2147483648, 2147483647)
         & (F.col("k") == F.floor("k")),
@@ -563,7 +563,7 @@ def _schema_shredded_events_fixture(spark: SparkSession, sf_dir: str) -> str:
             ).alias("doc")
         )
         envelope.write.mode("overwrite").parquet(f"{tmp}/raw")
-        raw = spark.read.parquet(f"{tmp}/raw")
+        raw = read_parquet(spark, f"{tmp}/raw")
         sample = [r["doc"] for r in raw.limit(512).collect() if r["doc"]]
         if sample:
             inferred = spark.read.json(
@@ -635,7 +635,7 @@ def fn_json_shred_schema_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest, serve hot queries columnar (the q6 answer made
     schema-driven; cost/payoff rows in PLANS.md round-11)."""
     path = _schema_shredded_events_fixture(spark, sf_dir)
-    s = spark.read.parquet(f"{path}/shred")
+    s = read_parquet(spark, f"{path}/shred")
     k_int = F.when(
         F.col("k").between(-2147483648, 2147483647)
         & (F.col("k") == F.floor("k")),

@@ -68,7 +68,7 @@ from aced_etl_pod_spark.operators.util import (
     money_sql,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import fixture_name, load, scratch_dir
+from aced_etl_pod_spark.tables import fixture_name, load, read_parquet, scratch_dir
 
 # ---------------------------------------------------------------------------
 # mv_incremental_refresh
@@ -140,7 +140,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = o.filter(F.col("o_orderkey") % _MV_DELTA_MOD != 0)
         _mv_partials(base).coalesce(1).write.mode("overwrite").parquet(snap)
 
-    snapshot = spark.read.parquet(snap)
+    snapshot = read_parquet(spark, snap)
     delta = _mv_partials(o.filter(F.col("o_orderkey") % _MV_DELTA_MOD == 0))
     merged = (
         snapshot.unionByName(delta)
@@ -835,7 +835,7 @@ def mv_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         _mv_join_partials(base, c).coalesce(1).write.mode("overwrite").parquet(
             snap
         )
-    snapshot = spark.read.parquet(snap)
+    snapshot = read_parquet(spark, snap)
     delta = _mv_join_partials(
         o.filter(F.col("o_orderkey") % _MV_DELTA_MOD == 0), c
     )

@@ -16,7 +16,7 @@ from aced_etl_pod_spark.plans.scale import (
     write_bucketed,
 )
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load
+from aced_etl_pod_spark.tables import load, read_parquet
 
 
 @op(
@@ -322,7 +322,7 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
                 .coalesce(1)
             )
             summary.write.mode("overwrite").parquet(f"{tmp}/summary")
-            n_groups = spark.read.parquet(f"{tmp}/summary").count()
+            n_groups = read_parquet(spark, f"{tmp}/summary").count()
             if n_groups * 2 >= bound:
                 open(f"{tmp}/_DEGENERATE", "w").close()
 
@@ -372,7 +372,7 @@ def join_multiway_star_summary_ingest(
     path = _q2_summary_fixture(spark, sf_dir)
     if not os.path.isdir(os.path.join(path, "summary")):
         return join_multiway_star_bucketed(spark, sf_dir)
-    s = spark.read.parquet(f"{path}/summary")
+    s = read_parquet(spark, f"{path}/summary")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
     nr = nation.join(region, nation.n_regionkey == region.r_regionkey).select(

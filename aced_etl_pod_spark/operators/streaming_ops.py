@@ -34,7 +34,7 @@ from aced_etl_pod_spark.streaming.replay import (
     run_foreach_batch,
     run_to_memory,
 )
-from aced_etl_pod_spark.tables import session_scratch_dir
+from aced_etl_pod_spark.tables import read_parquet, session_scratch_dir
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -1221,7 +1221,7 @@ def stream_json_shred_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sample = [
         r["doc"]
-        for r in spark.read.parquet(f"{src}/batch_000.parquet")
+        for r in read_parquet(spark, f"{src}/batch_000.parquet")
         .limit(512)
         .collect()
         if r["doc"]

@@ -31,7 +31,7 @@ from aced_etl_pod_spark.sources.txnlog import (
 from aced_etl_pod_spark.tables import (
     fixture,
     load,
-    scratch_dir,
+    read_parquet,
     session_scratch_dir,
 )
 
@@ -1147,27 +1147,37 @@ RESULT_CACHE_COMPUTES = {"n": 0}
 
 
 def _cached_snapshot_agg(spark: SparkSession, table: str) -> DataFrame:
-    """Serve the snapshot aggregate from a result cache keyed on
-    (query id, table version): a hit reads the materialized parquet and
-    touches ZERO source files; any commit to the table changes the key,
-    so staleness is impossible by construction rather than by TTL. This
-    is the warehouse result cache (Snowflake-style) on the txn log —
-    valid precisely because snapshots are immutable."""
-    import hashlib
+    """Serve the snapshot aggregate from a result cache keyed on the
+    table version: a hit reads the materialized parquet and touches ZERO
+    source files; any commit to the table changes the key, so staleness
+    is impossible by construction rather than by TTL. This is the
+    warehouse result cache (Snowflake-style) on the txn log — valid
+    precisely because snapshots are immutable.
+
+    The slot is ``<table>/_result_cache/v<version>``, published by temp
+    dir + rename, so it moves, is copied and dies with its table. Spark
+    skips ``_``-prefixed dirs and vacuum unlinks only top-level parquet,
+    so the table's own reads never see it."""
+    import tempfile
 
     v = current_version(table)
-    key = hashlib.sha256(
-        f"snapshot_agg|{os.path.abspath(table)}|v{v}".encode()
-    ).hexdigest()[:24]
-    slot = scratch_dir(f"result_cache/{key}")
-    marker = os.path.join(slot, "_SUCCESS")
-    if not os.path.exists(marker):
+    cache = os.path.join(table, "_result_cache")
+    slot = os.path.join(cache, f"v{v}")
+    if not os.path.isdir(slot):
         RESULT_CACHE_COMPUTES["n"] += 1
-        res = _snapshot_agg(txn_read(spark, table), v)
-        res.coalesce(1).write.mode("overwrite").parquet(slot)
-    return spark.read.parquet(slot).withColumn(
-        "version", F.lit(current_version(table))
-    )
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".v{v}.tmp.", dir=cache)
+        try:
+            res = _snapshot_agg(txn_read(spark, table), v)
+            res.coalesce(1).write.mode("overwrite").parquet(tmp)
+            try:
+                os.rename(tmp, slot)
+            except OSError:
+                if not os.path.isdir(slot):
+                    raise  # else a concurrent writer published first
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return read_parquet(spark, slot).withColumn("version", F.lit(v))
 
 
 @op("plan_result_cache", oracle=PLAN_RESULT_CACHE_ORACLE, tags=('scan', 'acid', 'extra'))
@@ -1194,6 +1204,7 @@ def plan_result_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=("o_orderkey",),
             op_name="invalidate",
         )
+        _cached_snapshot_agg(spark, table)  # recompute (v3) before publish
 
     table = _orders_txn_copy(spark, sf_dir, "txn_orders_cache", cache_then_append)
     return _cached_snapshot_agg(spark, table).orderBy("o_orderstatus")

@@ -24,7 +24,7 @@ from aced_etl_pod_spark.functions.dedup import (
 from aced_etl_pod_spark.functions.text import ngrams_expr, normalize
 from aced_etl_pod_spark.operators.util import finite, finite_sql, money, money_sql
 from aced_etl_pod_spark.registry import op
-from aced_etl_pod_spark.tables import load
+from aced_etl_pod_spark.tables import load, read_parquet
 
 # English-ish stopword set used by the language-ID heuristic (tiny, inlined
 # into the plan as a literal array — broadcast-free).
@@ -167,7 +167,7 @@ def _token_stats_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
         silver.write.mode("overwrite").parquet(f"{tmp}/docs")
         gold = (
-            spark.read.parquet(f"{tmp}/docs")
+            read_parquet(spark, f"{tmp}/docs")
             .groupBy("lang")
             .agg(
                 F.count("*").alias("n"),
@@ -211,7 +211,7 @@ def text_tokenize_stats_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     every byte), per-doc counts land next to the documents as the
     silver table, and recurring stats are metadata reads."""
     path = _token_stats_fixture(spark, sf_dir)
-    g = spark.read.parquet(f"{path}/lang")
+    g = read_parquet(spark, f"{path}/lang")
     return g.groupBy("lang").agg(
         F.sum("n").cast("long").alias("n_docs"),
         F.round(F.sum("s_ntok") / F.sum("c_ntok"), 2).alias("avg_tokens"),
@@ -1180,7 +1180,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("documents.parquet",),
         lambda tmp: banded(corpus).write.mode("overwrite").parquet(tmp),
     )
-    stored = spark.read.parquet(idx)
+    stored = read_parquet(spark, idx)
     allb = stored.unionAll(banded(inc))
     from pyspark.sql.window import Window as _W
 

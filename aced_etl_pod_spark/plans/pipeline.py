@@ -86,6 +86,25 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
+# The schema of each store the pipeline reads back, as Spark reads a
+# partitioned table: the written columns, then ``project_id``. A read
+# passes it, so no job re-infers it from the footers; a test pins each
+# one against what the writes produce.
+STORE_SCHEMAS = {
+    "raw/resources": "id string, resource_type string, resource_json string, project_id string",
+    "flat/patient": (
+        "id string, resourceType string, status string, description string, "
+        "identifier array<string>, identifier_coding array<string>, "
+        "subject_id string, value double, effective_ts timestamp, "
+        "observation_count bigint, observation_avg double, file_count bigint, "
+        "latest_file_id string, project_id string"
+    ),
+    "discovery/studies": (
+        "patient_count bigint, description string, "
+        "identifier_coding array<string>, project_id string"
+    ),
+}
+
 RESOURCE_TYPES = ("ResearchStudy", "Patient", "Observation", "DocumentReference")
 FLAT_INDICES = {"Patient": "patient", "Observation": "observation", "DocumentReference": "file"}
 
@@ -102,16 +121,20 @@ class EtlPodPipeline:
     def path(self, store: str) -> str:
         return os.path.join(self.warehouse, store)
 
-    def _read(self, store: str) -> DataFrame | None:
-        """The store's table, or None when it holds no partition: never
-        written (the empty-input branch, R9 :235-238) or every project
-        dropped. Any error reading a present store propagates."""
+    def _resident(self, store: str) -> bool:
+        """Whether the store holds a partition: False when never written
+        (the empty-input branch, R9 :235-238) or every project dropped."""
         p = self.path(store)
-        if not os.path.isdir(p) or not any(
+        return os.path.isdir(p) and any(
             name.startswith("project_id=") for name in os.listdir(p)
-        ):
+        )
+
+    def _read(self, store: str) -> DataFrame | None:
+        """The store's table, read with its pinned schema, or None when it
+        holds no partition. Any error reading a present store propagates."""
+        if not self._resident(store):
             return None
-        return self.spark.read.parquet(p)
+        return self.spark.read.schema(STORE_SCHEMAS[store]).parquet(self.path(store))
 
     # ---- put (import) ----------------------------------------------------
     def put(self, project_id: str, source: str, user: dict | None = None) -> dict:
@@ -251,8 +274,7 @@ class EtlPodPipeline:
                     ),
                 }
             ],
-            "project_id string, patient_count long, description string, "
-            "identifier_coding array<string>",
+            STORE_SCHEMAS["discovery/studies"],
         )
         upsert_partitions(self.spark, discovery, self.path("discovery/studies"), "project_id")
         return {"project_id": project_id, **counts}
@@ -267,19 +289,26 @@ class EtlPodPipeline:
         """
         if user is not None and not can_read(user, project_id):
             raise PermissionError(f"user cannot read {project_id}")
-        raw = self._read("raw/resources")
-        if raw is None:
+        if not self._resident("raw/resources"):
             raise FileNotFoundError("raw store is empty")
         export_dir = os.path.join(out_dir, f"{project_id}_export")
         shutil.rmtree(export_dir, ignore_errors=True)
+        os.makedirs(export_dir)
         # One scan, one job: the project's rows split by type on write.
+        # Only the project's own partition is listed and read; basePath
+        # keeps project_id a column of the pinned schema.
         parts = os.path.join(export_dir, "_parts")
-        (
-            raw.filter(F.col("project_id") == project_id)
-            .select("resource_type", "resource_json")
-            .write.partitionBy("resource_type")
-            .text(parts)
-        )
+        store = self.path("raw/resources")
+        part = os.path.join(store, f"project_id={project_id}")
+        if os.path.isdir(part):
+            (
+                self.spark.read.schema(STORE_SCHEMAS["raw/resources"])
+                .option("basePath", store)
+                .parquet(part)
+                .select("resource_type", "resource_json")
+                .write.partitionBy("resource_type")
+                .text(parts)
+            )
         # Concatenate each type's part files into {Type}.ndjson; a type the
         # project has no rows of gets an empty file.
         for rtype in RESOURCE_TYPES:
@@ -290,7 +319,7 @@ class EtlPodPipeline:
                     if name.startswith("part-"):
                         with open(os.path.join(d, name), "rb") as src:
                             shutil.copyfileobj(src, out)
-        shutil.rmtree(parts)
+        shutil.rmtree(parts, ignore_errors=True)
         zip_path = os.path.join(out_dir, f"{project_id}_{ts}_SNAPSHOT.zip")
         return zip_dir(export_dir, zip_path)
 

@@ -1,17 +1,33 @@
-"""Test-table loaders (TESTDATA.md / FIXTURES.md §A).
+"""Test-table loaders and the package's one parquet read path.
 
-Ten parquet tables per scale factor. ``load`` is the single scan entry point
-so every operator inherits the same tuned session + columnar scan
-(predicate pushdown / column pruning come free from the parquet source).
+Ten parquet tables per scale factor (TESTDATA.md / FIXTURES.md §A). Every
+plain parquet scan in the package goes through :func:`read_parquet`:
+``load`` for the test tables, the embeddings loaders and every operator
+that reads a build-once artifact back from :func:`fixture`. Only the
+transaction-log snapshot reads (``sources/txnlog.py``,
+``operators/table_format.py``) list their files themselves.
+
+``read_parquet`` remembers the schema of a source that cannot change under
+its key: a parquet file by ``(path, mtime_ns, size)``, a directory inside
+a published fixture by its path (the fixture's name already carries its
+source fingerprint, and a published fixture is never rewritten). A known
+schema is handed to the reader, so planning the scan starts no Spark job;
+without it Spark runs one job per read to merge the footers' schemas
+(docs/SCALE.md §26). The executed plan is the same either way: predicate
+pushdown and column pruning come from the parquet source, and the session
+is tuned once per ``load``.
 """
 
 from __future__ import annotations
 
 import functools as _functools
 import os
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from aced_etl_pod_spark.session import tune
 
@@ -31,8 +47,61 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMAS_MAX = 1024
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The key under which ``path``'s schema cannot change, or None when
+    it can (a build's ``.tmp.`` dir, an ``mv_*`` snapshot, a session
+    sink, a warehouse store) or ``path`` cannot be stat'd. The session's
+    ``nanosAsLong`` is part of it: it decides whether a TIMESTAMP(NANOS)
+    column reads as ``bigint``."""
+    ap = os.path.abspath(path)
+    try:
+        st = os.stat(ap)
+    except (OSError, ValueError):
+        return None
+    nanos = spark.conf.get(_NANOS_AS_LONG, "false")
+    if not os.path.isdir(ap):
+        return (ap, st.st_mtime_ns, st.st_size, nanos)
+    base = os.path.abspath(os.environ.get("SPARK_GRAFT_SCRATCH", _DEFAULT_SCRATCH))
+    rel = os.path.relpath(ap, base)
+    name = rel.split(os.sep, 1)[0]
+    if name in (".", "..") or name.startswith("."):
+        return None
+    if not os.path.exists(os.path.join(base, name, "_DONE")):
+        return None
+    return (ap, nanos)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, planned with no Spark job when the
+    schema is already known under :func:`_schema_key`. The first read of
+    a key infers it (one job, as before) and remembers it; the cache is a
+    bounded LRU. An uncacheable or missing path reads exactly as
+    ``spark.read.parquet`` does, errors included."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+        if len(_SCHEMAS) > _SCHEMAS_MAX:
+            _SCHEMAS.popitem(last=False)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one test table.
+    """Columnar scan of one test table, through :func:`read_parquet`.
 
     ``events.ts`` has been written by the generator as parquet
     TIMESTAMP(NANOS) in some rounds and TIMESTAMP(MICROS, ntz) in others, so
@@ -47,18 +116,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     tune(spark)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return read_parquet(spark, path)
+    from pyspark.sql import functions as F
 
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if ts_type.startswith("timestamp_ntz"):
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    df = read_parquet(spark, path)
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 @_functools.lru_cache(maxsize=256)
@@ -246,7 +316,7 @@ def load_validated_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(os.path.join(tmp, "emb"))
 
     path = fixture("validated_emb", sf_dir, ("embeddings.parquet",), build)
-    return spark.read.parquet(os.path.join(path, "emb"))
+    return read_parquet(spark, os.path.join(path, "emb"))
 
 
 def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,12 +343,7 @@ def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels. Published through :func:`fixture` like the validated copy
     it derives from; snappy codec (hot-full-scan artifact — the r11
     codec rule)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import BinaryType, StructField
 
     def pack(batches):
         import numpy as np
@@ -333,4 +398,4 @@ def load_packed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = fixture("packed_emb", sf_dir, ("embeddings.parquet",), build)
-    return spark.read.parquet(os.path.join(path, "emb"))
+    return read_parquet(spark, os.path.join(path, "emb"))

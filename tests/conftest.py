@@ -30,6 +30,23 @@ def assert_gated(*pairs):
         assert ops[fn].oracle == oracle, f"{fn.__name__}: oracle differs"
 
 
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return the ids of the jobs in
+    that group and of the jobs it started with no group, read once the
+    listener bus has delivered every event they posted."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return tracker.getJobIdsForGroup(group), set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=8)

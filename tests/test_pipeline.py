@@ -15,8 +15,9 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from aced_etl_pod_spark.plans.authz import can_create, can_read
-from aced_etl_pod_spark.plans.pipeline import EtlPodPipeline
+from aced_etl_pod_spark.plans.pipeline import STORE_SCHEMAS, EtlPodPipeline
 from aced_etl_pod_spark.sources.archives import zip_dir
+from tests.conftest import jobs_in_group
 
 # Reference-shaped profile (_can_create/_can_read fhir_import_export.py:62-145):
 # program paths in `resources`, grant under the PROJECT-level authz path.
@@ -202,25 +203,10 @@ def test_job_protocol_dispatch(spark, fhir_fixture, tmp_path):
         run_job(spark, {"project_id": "prog-alpha", "method": "bogus"}, wh)
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return the ids of the jobs in
-    that group and of the jobs it started with no group."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, "pipeline test")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return tracker.getJobIdsForGroup(group), set(tracker.getJobIdsForGroup(None)) - ungrouped
-
-
 def test_put_jobs_run_in_the_callers_job_group(pipeline, fhir_fixture):
     """The put's concurrent writes inherit the caller's job group, so
     ``cancelJobGroup`` and per-group metrics cover the whole put."""
-    in_group, ungrouped = _jobs_in_group(
+    in_group, ungrouped = jobs_in_group(
         pipeline.spark, "g", lambda: pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
     )
     assert in_group
@@ -229,15 +215,42 @@ def test_put_jobs_run_in_the_callers_job_group(pipeline, fhir_fixture):
 
 def test_put_and_get_job_counts(pipeline, fhir_fixture, tmp_path):
     """Pinned at the fixture: a recount after a write, or a scan per
-    exported type, adds jobs and fails here."""
+    exported type, adds jobs and fails here. The get's one job is its
+    export: the raw store is read with its pinned schema, so no job
+    infers it."""
     spark = pipeline.spark
-    put_jobs, _ = _jobs_in_group(
+    put_jobs, _ = jobs_in_group(
         spark, "put-jobs", lambda: pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
     )
-    get_jobs, _ = _jobs_in_group(
+    get_jobs, _ = jobs_in_group(
         spark, "get-jobs", lambda: pipeline.get("prog-alpha", str(tmp_path / "out"))
     )
-    assert (len(put_jobs), len(get_jobs)) == (15, 2)
+    assert (len(put_jobs), len(get_jobs)) == (15, 1)
+
+
+def test_pinned_store_schemas_match_the_writes(pipeline, fhir_fixture):
+    """Each store's pinned read schema is the one Spark infers from what
+    the put wrote, so a change to a write cannot leave a stale pin."""
+    spark = pipeline.spark
+    pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    for store, ddl in STORE_SCHEMAS.items():
+        pinned = spark.read.schema(ddl).parquet(pipeline.path(store)).schema
+        assert pinned == spark.read.parquet(pipeline.path(store)).schema, store
+
+
+def test_get_of_a_project_with_no_partition_exports_empty_files(
+    pipeline, fhir_fixture, tmp_path
+):
+    """Another project is resident, this one has no partition: the export
+    still holds one empty file per type, and no other project's rows."""
+    pipeline.put("prog-alpha", fhir_fixture["prog-alpha"])
+    zip_path = pipeline.get("prog-beta", str(tmp_path / "out"))
+    with zipfile.ZipFile(zip_path) as zf:
+        assert sorted(zf.namelist()) == sorted(
+            f"{t}.ndjson"
+            for t in ("ResearchStudy", "Patient", "Observation", "DocumentReference")
+        )
+        assert all(zf.read(n) == b"" for n in zf.namelist())
 
 
 def test_export_of_a_missing_type_is_an_empty_file(pipeline, fhir_fixture, tmp_path):

@@ -938,7 +938,7 @@ def test_streaks_reference(spark):
         assert got[uid] == (best, current), uid
 
 
-def test_branch_merge_acid(spark, con):
+def test_branch_merge_acid(spark, con, tmp_path):
     """Branch workflow guarantees: oracle parity of the merged base,
     isolation before merge, zero-copy seed, diverged-base merge refusal,
     and tag immutability."""
@@ -958,7 +958,7 @@ def test_branch_merge_acid(spark, con):
         txn_read,
         txn_write,
     )
-    from aced_etl_pod_spark.tables import load, scratch_dir
+    from aced_etl_pod_spark.tables import load
 
     sdf = tf.txnlog_branch_merge(spark, SF_SMALL).toPandas()
     ddf = con.execute(tf.TXNLOG_BRANCH_MERGE_ORACLE).fetchdf()
@@ -976,10 +976,8 @@ def test_branch_merge_acid(spark, con):
     # fresh isolation + divergence scenario on copies
     import shutil
 
-    iso_base = scratch_dir(base_fix.rstrip("/") + "_iso_base")
-    iso_branch = iso_base.rstrip("/") + "_br"
-    shutil.rmtree(iso_base, ignore_errors=True)
-    shutil.rmtree(iso_branch, ignore_errors=True)
+    iso_base = str(tmp_path / "iso_base")
+    iso_branch = str(tmp_path / "iso_base_br")
     shutil.copytree(base_fix, iso_base)
     create_branch(iso_base, iso_branch)
     # zero-copy: the branch dir holds no parquet of its own after seeding
@@ -1015,18 +1013,20 @@ def test_queue7_parity_tranche20(spark, con):
 def test_result_cache_hit_and_invalidation(spark, tmp_path):
     """Contract: repeated same-version reads never recompute (compute
     counter frozen), and a table commit changes the key (recompute).
-    The table lives under tmp_path so the (path, version) cache key is
-    unique per test run — the cache itself persists across runs BY
-    DESIGN (that is the feature), so a reused path would start warm."""
+    The table lives under tmp_path, and its cache slots live inside it:
+    nothing is written to the shared scratch."""
+    import os
     import shutil
 
     from aced_etl_pod_spark.operators import table_format as tf
     from aced_etl_pod_spark.sources.txnlog import current_version, txn_write
-    from aced_etl_pod_spark.tables import load
+    from aced_etl_pod_spark.tables import load, scratch_dir
 
     base_fix = tf.build_orders_txn_table(spark, SF_SMALL)
     table = str(tmp_path / "cache_unit")
     shutil.copytree(base_fix, table)
+    shared = os.path.join(scratch_dir(), "result_cache")
+    before = set(os.listdir(shared)) if os.path.isdir(shared) else set()
     n0 = tf.RESULT_CACHE_COMPUTES["n"]
     tf._cached_snapshot_agg(spark, table).collect()
     assert tf.RESULT_CACHE_COMPUTES["n"] == n0 + 1
@@ -1040,6 +1040,9 @@ def test_result_cache_hit_and_invalidation(spark, tmp_path):
               stats_cols=("o_orderkey",), op_name="bump")
     tf._cached_snapshot_agg(spark, table).collect()
     assert tf.RESULT_CACHE_COMPUTES["n"] == n0 + 2  # version-keyed recompute
+    assert sorted(os.listdir(os.path.join(table, "_result_cache"))) == ["v2", "v3"]
+    after = set(os.listdir(shared)) if os.path.isdir(shared) else set()
+    assert after == before
 
 
 def test_queue7_parity_tranche21(spark, con):

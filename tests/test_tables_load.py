@@ -1,7 +1,9 @@
 """Regression guard for tables.load's events.ts normalization: the testdata
 generator has shipped ts as parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS,
 ntz) across rounds (the r03 external run broke on the switch); the loader
-must land every encoding on a session-UTC timestamp with identical values."""
+must land every encoding on a session-UTC timestamp with identical values.
+The schema cache behind ``read_parquet`` is checked here too: a warm read
+starts no job, and a source that can change under its key is re-inferred."""
 
 from __future__ import annotations
 
@@ -12,7 +14,13 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from aced_etl_pod_spark.tables import load, session_scratch_dir
+from aced_etl_pod_spark.tables import (
+    load,
+    load_validated_embeddings,
+    read_parquet,
+    session_scratch_dir,
+)
+from tests.conftest import SF_SMALL, jobs_in_group
 
 TS = [
     datetime.datetime(2024, 1, 1, 0, 0, 7, 179575),
@@ -39,11 +47,69 @@ def _fixture_dir(unit: str) -> str:
 
 
 def test_load_normalizes_every_ts_encoding(spark):
-    for unit in ("ns", "us"):
-        df = load(spark, _fixture_dir(unit), "events")
+    dirs = {unit: _fixture_dir(unit) for unit in ("ns", "us")}
+    for unit in ("ns", "us", "ns", "us"):  # the second round reads warm
+        df = load(spark, dirs[unit], "events")
         assert dict(df.dtypes)["ts"] == "timestamp", unit
         got = sorted(r.ts for r in df.select("ts").collect())
         assert got == TS, (unit, got)
+
+
+def _jobs(spark, fn) -> int:
+    return len(jobs_in_group(spark, f"tables-{os.urandom(4).hex()}", fn)[0])
+
+
+def _region(sf_dir, keys) -> None:
+    pq.write_table(pa.table({"r_regionkey": keys}), os.path.join(sf_dir, "region.parquet"))
+
+
+def test_warm_load_and_fixture_read_start_no_job(spark, tmp_path):
+    """The first load of a file infers its schema (one job); a later load
+    of the same bytes, and a read of a published fixture, plan with the
+    remembered schema and start none."""
+    _region(str(tmp_path), pa.array([0, 1], pa.int64()))
+    assert _jobs(spark, lambda: load(spark, str(tmp_path), "region")) == 1
+    assert _jobs(spark, lambda: load(spark, str(tmp_path), "region")) == 0
+    load_validated_embeddings(spark, SF_SMALL)
+    assert _jobs(spark, lambda: load_validated_embeddings(spark, SF_SMALL)) == 0
+
+
+def test_rewritten_table_is_reinferred(spark, tmp_path):
+    """The file key is (path, mtime_ns, size): a table rewritten at the
+    same path with another column type reads with the new schema."""
+    _region(str(tmp_path), pa.array([7], pa.int64()))
+    assert load(spark, str(tmp_path), "region").dtypes == [("r_regionkey", "bigint")]
+    _region(str(tmp_path), pa.array(["seven"]))
+    df = load(spark, str(tmp_path), "region")
+    assert df.dtypes == [("r_regionkey", "string")]
+    assert [r.r_regionkey for r in df.collect()] == ["seven"]
+
+
+def test_only_published_fixture_dirs_are_cached(spark, tmp_path, monkeypatch):
+    """A build's ``.tmp.`` dir and a dir with no _DONE marker can change
+    under the same path, so every read re-infers them; a dir inside a
+    published fixture is read warm."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+
+    def write(d, cols):
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        pq.write_table(pa.table({c: [1] for c in cols}), os.path.join(d, "part-0.parquet"))
+
+    # a build marks its temp dir _DONE just before the publishing rename
+    os.makedirs(tmp_path / ".lbl_x.tmp.abc")
+    open(tmp_path / ".lbl_x.tmp.abc" / "_DONE", "w").close()
+    for sub in (".lbl_x.tmp.abc/t", "no_marker/t"):
+        d = str(tmp_path / sub)
+        write(d, ["a"])
+        assert read_parquet(spark, d).columns == ["a"]
+        write(d, ["a", "b"])
+        assert read_parquet(spark, d).columns == ["a", "b"], sub
+    d = str(tmp_path / "published" / "t")
+    write(d, ["a"])
+    open(tmp_path / "published" / "_DONE", "w").close()
+    read_parquet(spark, d)
+    assert _jobs(spark, lambda: read_parquet(spark, d)) == 0
 
 
 def test_validated_embeddings_atomic_publish_and_eviction(spark):

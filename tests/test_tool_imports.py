@@ -7,8 +7,10 @@ importing it. No string literal holds the absolute checkout path: code
 run from one checkout must read and import that checkout, so the path is
 derived from ``__file__``. And only ``tables.py`` fingerprints sources
 or evicts fixtures, and only two modules take a bare ``fixture_name``,
-so every build-once artifact goes through ``tables.fixture``. Nothing
-is executed; third-party and stdlib names are checked with find_spec."""
+so every build-once artifact goes through ``tables.fixture``. Outside
+the txn-log snapshot readers, every plain parquet read goes through
+``tables.read_parquet``. Nothing is executed; third-party and stdlib
+names are checked with find_spec."""
 
 from __future__ import annotations
 
@@ -100,11 +102,14 @@ def test_checkout_path_is_derived_not_literal():
     assert not literal, f"literal absolute checkout paths: {literal}"
 
 
-def _uses(names: set[str], allowed: set[str]) -> list[str]:
+def _uses(names: set[str], allowed: set[str], tools: bool = True) -> list[str]:
     """``file:line name`` for every import or reference of ``names`` in
-    the package and tools/ outside the ``allowed`` files."""
+    the package (and tools/, unless ``tools`` is False) outside the
+    ``allowed`` files. A dotted name such as ``read.parquet`` matches an
+    attribute chain ending in it."""
     sites = []
-    for rel, tree in _parsed(PACKAGE + glob.glob(os.path.join(TOOLS, "*.py"))):
+    paths = PACKAGE + (glob.glob(os.path.join(TOOLS, "*.py")) if tools else [])
+    for rel, tree in _parsed(paths):
         if rel in allowed:
             continue
         for node in ast.walk(tree):
@@ -113,6 +118,8 @@ def _uses(names: set[str], allowed: set[str]) -> list[str]:
                 if isinstance(node, ast.ImportFrom)
                 else [getattr(node, "attr", getattr(node, "id", None))]
             )
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Attribute):
+                found.append(f"{node.value.attr}.{node.attr}")
             sites += [f"{rel}:{node.lineno} {n}" for n in found if n in names]
     return sites
 
@@ -141,3 +148,18 @@ def test_scratch_tables_are_built_through_fixture():
     }
     sites = _uses({"fixture_name"}, allowed)
     assert not sites, f"fixture_name outside tables.fixture: {sites}"
+
+
+def test_parquet_reads_go_through_read_parquet():
+    """A bare ``spark.read.parquet`` re-infers the schema from the
+    footers, one Spark job per read; ``tables.read_parquet`` remembers it.
+    Only the txn-log snapshot reads, which name their files from the log,
+    read parquet themselves. A schema-pinned ``read.schema(s).parquet``
+    starts no inference job and is not flagged."""
+    allowed = {
+        TABLES,
+        os.path.join("aced_etl_pod_spark", "sources", "txnlog.py"),
+        os.path.join("aced_etl_pod_spark", "operators", "table_format.py"),
+    }
+    sites = _uses({"read.parquet"}, allowed, tools=False)
+    assert not sites, f"parquet reads outside tables.read_parquet: {sites}"
