@@ -36,9 +36,8 @@ def agg_count_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.filter(F.col("o_orderstatus") == "O").agg(F.count("*").alias("n_open"))
 
 
-@op(
-    "agg_group_sums",
-    oracle=f"""
+# q1's oracle, shared by the scan plan and the ingest-summary plan
+_Q1_ORACLE = f"""
     SELECT l_returnflag, l_linestatus,
            round(sum({finite_sql("l_quantity")}), 2) AS sum_qty,
            round(sum({finite_sql("l_extendedprice")}), 2) AS sum_base_price,
@@ -51,7 +50,12 @@ def agg_count_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
-    """,
+    """
+
+
+@op(
+    "agg_group_sums",
+    oracle=_Q1_ORACLE,
     tags=("agg", "bench"),
 )
 def agg_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,20 +188,7 @@ def _q1_partials(li: DataFrame) -> DataFrame:
 
 @op(
     "agg_group_sums_summary_ingest",
-    oracle=f"""
-    SELECT l_returnflag, l_linestatus,
-           round(sum({finite_sql("l_quantity")}), 2) AS sum_qty,
-           round(sum({finite_sql("l_extendedprice")}), 2) AS sum_base_price,
-           round(sum({finite_sql("l_extendedprice * (1 - l_discount)")}), 2) AS sum_disc_price,
-           round(sum({finite_sql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}), 2) AS sum_charge,
-           round(avg({finite_sql("l_quantity")}), 2) AS avg_qty,
-           round(avg({finite_sql("l_extendedprice")}), 2) AS avg_price,
-           round(avg({finite_sql("l_discount")}), 4) AS avg_disc,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
+    oracle=_Q1_ORACLE,
     tags=("agg", "ingest", "scale", "extra"),
 )
 def agg_group_sums_summary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,9 +232,8 @@ def q1_summary_answer(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-@op(
-    "agg_distinct_count",
-    oracle="""
+# q10's oracle, shared by the pair, bitmask and mask-ingest plans
+_Q10_ORACLE = """
     SELECT CAST(count(DISTINCT CASE WHEN user_id IS NOT NULL
                                      AND event_type IS NOT NULL
                                 THEN (user_id, event_type) END)
@@ -251,7 +241,12 @@ def q1_summary_answer(spark: SparkSession, path: str) -> DataFrame:
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
            CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
     FROM events
-    """,
+    """
+
+
+@op(
+    "agg_distinct_count",
+    oracle=_Q10_ORACLE,
     tags=("agg", "dedup"),
 )
 def agg_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,15 +342,7 @@ def _event_type_dictionary(sf_dir: str, fingerprint: str) -> tuple[str, ...]:
 
 @op(
     "agg_distinct_count_bitmask",
-    oracle="""
-    SELECT CAST(count(DISTINCT CASE WHEN user_id IS NOT NULL
-                                     AND event_type IS NOT NULL
-                                THEN (user_id, event_type) END)
-                AS BIGINT) AS n_pairs,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
-    FROM events
-    """,
+    oracle=_Q10_ORACLE,
     tags=("agg", "dedup", "scale", "extra"),
 )
 def agg_distinct_count_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,34 +379,22 @@ def agg_distinct_count_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if len(types) > 62:
         return agg_distinct_count(spark, sf_dir)
-    e = load(spark, sf_dir, "events")
-    mapping = F.create_map(
-        *[
-            x
-            for i, t in enumerate(types)
-            for x in (F.lit(t), F.lit(1 << i))
-        ]
-    ) if types else None
-    bit = (
-        F.coalesce(mapping[F.col("event_type")], F.lit(0))
-        if types
-        else F.lit(0)
-    )
-    per_user = (
-        e.select("user_id", bit.alias("bit"))
+    return mask_table_counts(_user_masks(load(spark, sf_dir, "events"), types))
+
+
+def _user_masks(events: DataFrame, types: tuple[str, ...]) -> DataFrame:
+    """One (user_id, mask) row per user, null user included: bit ``i``
+    of the mask is set when the user has an event of ``types[i]``."""
+    bit = F.lit(0)
+    if types:
+        mapping = F.create_map(
+            *[x for i, t in enumerate(types) for x in (F.lit(t), F.lit(1 << i))]
+        )
+        bit = F.coalesce(mapping[F.col("event_type")], F.lit(0))
+    return (
+        events.select("user_id", bit.alias("bit"))
         .groupBy("user_id")
         .agg(F.expr("bit_or(bit)").alias("mask"))
-    )
-    return per_user.agg(
-        F.sum(
-            F.when(F.col("user_id").isNotNull(), F.bit_count("mask")).otherwise(
-                0
-            )
-        )
-        .cast("long")
-        .alias("n_pairs"),
-        F.count(F.col("user_id")).cast("long").alias("n_users"),
-        F.bit_count(F.expr("bit_or(mask)")).cast("long").alias("n_types"),
     )
 
 
@@ -446,30 +421,9 @@ def _user_mask_fixture(spark: SparkSession, sf_dir: str) -> str | None:
         return None
 
     def build(tmp):
-        e = load(spark, sf_dir, "events")
-        mapping = (
-            F.create_map(
-                *[
-                    x
-                    for i, t in enumerate(types)
-                    for x in (F.lit(t), F.lit(1 << i))
-                ]
-            )
-            if types
-            else None
-        )
-        bit = (
-            F.coalesce(mapping[F.col("event_type")], F.lit(0))
-            if types
-            else F.lit(0)
-        )
-        (
-            e.select("user_id", bit.alias("bit"))
-            .groupBy("user_id")
-            .agg(F.expr("bit_or(bit)").alias("mask"))
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/masks")
-        )
+        _user_masks(load(spark, sf_dir, "events"), types).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/masks")
         spark.createDataFrame(
             [(i, t) for i, t in enumerate(types)], "bit int, event_type string"
         ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/types")
@@ -479,15 +433,7 @@ def _user_mask_fixture(spark: SparkSession, sf_dir: str) -> str | None:
 
 @op(
     "agg_distinct_count_mask_ingest",
-    oracle="""
-    SELECT CAST(count(DISTINCT CASE WHEN user_id IS NOT NULL
-                                     AND event_type IS NOT NULL
-                                THEN (user_id, event_type) END)
-                AS BIGINT) AS n_pairs,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(count(DISTINCT event_type) AS BIGINT) AS n_types
-    FROM events
-    """,
+    oracle=_Q10_ORACLE,
     tags=("agg", "dedup", "ingest", "scale", "extra"),
 )
 def agg_distinct_count_mask_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,8 +62,8 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller input — and at real scale AQE would have to abandon the
     broadcast anyway; the dispatch just stops the driver-side build
     from growing with the corpus. The dispatch count comes from parquet
-    FOOTERS read driver-side (tables.table_row_count, lru-cached per
-    sf_dir) — a df.count() here would be a real scan job at plan time,
+    FOOTERS read driver-side (tables.table_row_count, cached per file
+    mtime and size) — a df.count() here would be a real scan job at plan time,
     not metadata (round-11 advice; aggregatePushdown is off).
 
     SUMMARY-LAYOUT dispatch since round 12 (optimization session 2):

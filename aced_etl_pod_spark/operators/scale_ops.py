@@ -239,9 +239,10 @@ def join_multiway_star_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     SMJ runs with zero exchanges (both scans co-partitioned, one sorted
     file per bucket); the constant dims still broadcast; the only
     shuffle left is the 125-key (r_name, n_name) agg. Interleaved A/B
-    (tools/q2_bucketed_ab.py; money compared at 1e-12 rel — fold-order
-    ULP drift at trillion-scale sums): x200 1.46 -> 0.74 s (2.0x, ratio
-    6.1x -> 3.1x), x800 4.87 -> 2.97 s (1.6x, ratio 5.5x -> 3.35x)."""
+    (PLANS.md round-11; money compared at 1e-12 rel, the rule now in
+    oracle.compare_at_scale — fold-order ULP drift at trillion-scale
+    sums): x200 1.46 -> 0.74 s (2.0x, ratio 6.1x -> 3.1x), x800 4.87 ->
+    2.97 s (1.6x, ratio 5.5x -> 3.35x)."""
     bo, bc = _bucketed_custkey_tables(spark, sf_dir)
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")

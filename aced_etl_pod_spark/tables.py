@@ -131,7 +131,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-@_functools.lru_cache(maxsize=256)
 def table_row_count(sf_dir: str, name: str) -> int:
     """Row count of one test table read from PARQUET FOOTERS only —
     pure driver-side metadata, NO Spark job. Size-dispatch sites
@@ -139,12 +138,18 @@ def table_row_count(sf_dir: str, name: str) -> int:
     Arrow-kernel knee) previously used ``df.count()``, which is a real
     scan job unless ``spark.sql.parquet.aggregatePushdown`` is on
     (round-11 advice) — hiding a scan inside plan construction. Footer
-    reads cost one file-open per footer and are cached per (sf_dir,
-    table) for the process lifetime; test tables are immutable inputs,
-    so staleness is not a concern."""
+    reads cost one file-open per footer and are cached per path and
+    ``(mtime_ns, size)``, as :func:`read_parquet` keys its schemas: a
+    table rewritten at the same path is counted again."""
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    return _footer_rows(os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+@_functools.lru_cache(maxsize=256)
+def _footer_rows(path: str, mtime_ns: int, size: int) -> int:
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
     if os.path.isdir(path):
         total = 0
         for root, _dirs, files in os.walk(path):

@@ -5,10 +5,12 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
   {"metric": ..., "value": <sum of medians, sec>, "unit": "sec",
    "queries": {q: sec}, "sf": ...}
 
-Protocol per BASELINE.md: plan built once, action (collect) timed, 1 warmup
-+ 5 timed runs, median reported. Session/JVM startup excluded. Shuffle
-partitions kept low (8) — at sf0.1 the per-query floor is task scheduling,
-not data (BASELINE.md "Rules").
+Protocol (``aced_etl_pod_spark.ladder``): every plan built once, outside
+the timer; each query warmed twice, then 9 round-robin rounds of one
+full re-execution per query; median reported. Session/JVM startup
+excluded. The session has 32 shuffle partitions and 2 MB scan splits
+(``ladder.session("bench", split="2m")``). A second tier re-times the ten
+headline queries on the x40 tiling (``extra.tiled_x40``, below).
 
 PROTOCOL CORRECTION (round 9): repeated ``collect()`` on ONE DataFrame
 lets Spark SKIP every completed shuffle map stage (shuffle files outlive
@@ -16,9 +18,9 @@ the action; the UI shows them as "skipped stages"), so rounds 1-8 timed
 only the final stage of every multi-stage query while DuckDB re-executed
 its full pipeline each rep — measured at x40: a forced 24 M-row SMJ
 "re-collected" in 75 ms vs 1.4 s actually re-executed. Each timed sample
-now wraps the prebuilt plan in ``.where(lit(True))``: a fresh
-QueryExecution → new shuffle IDs → every stage re-runs, while the only
-added driver work is the optimizer pass DuckDB equally pays per
+now wraps the prebuilt plan in ``.where(lit(True))`` (``ladder.fresh``):
+a fresh QueryExecution → new shuffle IDs → every stage re-runs, while the
+only added driver work is the optimizer pass DuckDB equally pays per
 ``execute()``. Plan CONSTRUCTION (the operator fn, incl. any build-time
 jobs) stays outside the timed region, same as before — and so does the
 wrapper's Catalyst re-optimization: the fresh QueryExecution's
@@ -31,10 +33,10 @@ across this boundary; both protocols' r9 numbers are recorded in
 PLANS.md round-9.
 
 ``--sf xN`` (e.g. ``--sf x10`` ~ sf1, ``--sf x40`` ~ sf4) instead runs the
-ENGINE-VS-ENGINE ladder in one command: tile the sf0.1 tables xN with
-key-offset replicas (persisted under .scratch, built once per testdata
-generation), then run every headline query on Spark AND its DuckDB oracle
-over the SAME files (tools/bench_ladder.py; DuckDB sf1 reference numbers
+ENGINE-VS-ENGINE ladder in one command: tile the sf0.1 tables xN
+(``ladder.tile``: key-offset replicas, persisted under .scratch, built
+once per testdata generation), then run every headline query on Spark AND
+its DuckDB oracle over the SAME files (tools/bench_ladder.py; DuckDB sf1 reference numbers
 recorded in BASELINE.md's appendix). ``--sf <dir>`` runs the same
 two-engine comparison on an already-built tiled directory.
 """
@@ -44,16 +46,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
+from aced_etl_pod_spark import ladder
+from aced_etl_pod_spark.ladder import HEADLINE
 from aced_etl_pod_spark.registry import registry
-from aced_etl_pod_spark.session import get_spark, pin
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -72,38 +72,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Arrow-transfer-bound Python at ~3x DuckDB's fused native kernel on
 # every scale the ladder measured — a documented kernel-floor gap, not a
 # plan gap (both engines scale linearly; the IVF row is the scale path).
-BENCH_QUERIES = {
-    "q1_pricing_summary": "agg_group_sums",
-    "q2_star_join": "join_multiway_star",
-    "q3_topk_window": "win_row_number_topk",
-    # q4's op layout-dispatches since round 11: past ~1 M orders it
-    # answers from the bucketed-colocated custkey layout (zero-exchange
-    # SMJ, 3.2x at x200 / 4.0x at x800, ratio 6.8x -> 1.71x; one-time
-    # layout write fingerprint-cached); at sf0.1 it keeps the plain
-    # Catalyst plan, which wins at the job floor. PLANS.md round-11 q4.
-    "q4_semi_anti": "join_left_semi",
-    "q5_tumbling": "agg_time_bucket",
-    # q6's op ships the anchored-regex raw-string fast path since round
-    # 11 (json_key_double_fastpath: single-key envelopes skip Jackson
-    # entirely, everything else falls back to from_json — semantics
-    # identical by construction, 3.2x at x200; PLANS.md round-11 q6). The
-    # shred-at-ingest family remains the architectural answer for owned
-    # corpora; this is the query-path kernel for ad-hoc JSON.
-    "q6_json_extract": "fn_json",
-    # q7's op dispatches its token kernel on corpus size since round 10:
-    # JVM size(split()) below ~100k docs (sf0.1 sits here — Arrow
-    # transfer doesn't amortize, measured 1.18x at x10), the pyarrow
-    # count_substring mapInArrow kernel above (0.58x at x40, 0.49x at
-    # x200 — the JVM String[]-per-row allocation is the cost). Same
-    # oracle either way; PLANS.md round-10.
-    "q7_token_stats": "text_tokenize_stats",
-    "q9_rollup": "agg_rollup_partial_reagg",  # r10: no-EXPAND shape, 1.6x at x200
-    # q10's op kernel-dispatches since round 11: past ~1 M events it
-    # uses the decomposable bitmask plan (one exchange of (user, mask)
-    # longs, 2.0x at x200 / 2.1x at x800, ratio 3.16x -> 1.49x); at
-    # sf0.1 it keeps the pair-dedup plan. PLANS.md round-11 q10.
-    "q10_distinct": "agg_distinct_count",
-}
+BENCH_QUERIES = {n: q for n, q in HEADLINE.items() if n != "q8_cosine_topk"}
 EXACT_Q8_OP = "sim_cosine_topk_fast"
 
 # Knee-crossing second tier (round-13 verdict item 2): every sf0.1 median
@@ -129,37 +98,13 @@ def _tiled_tier(spark):
     if os.environ.get("SPARK_GRAFT_TILED", "1") == "0":
         return None
     try:
-        from tools.bench_ladder import (
-            BENCH_QUERIES as LADDER_QUERIES,
-            build_scaled,
-        )
-
         reg = registry()
-        sf = build_scaled(TILED_SCALE, src=SF_DIR)
-        dfs = {
-            name: reg[q].fn(spark, sf) for name, q in LADDER_QUERIES.items()
-        }
-
-        def rerun(df):
-            w = df.where(F.lit(True))
-            w._jdf.queryExecution().executedPlan()
-            return w
-
+        sf = ladder.tile(SF_DIR, TILED_SCALE)
+        dfs = {name: reg[q].fn(spark, sf) for name, q in HEADLINE.items()}
         spark.sparkContext.setJobDescription(f"bench tiled x{TILED_SCALE}")
-        for df in dfs.values():
-            rerun(df).collect()
-        samples: dict[str, list[float]] = {name: [] for name in dfs}
-        for _ in range(TILED_REPS):
-            for name, df in dfs.items():
-                w = rerun(df)
-                t0 = time.perf_counter()
-                w.collect()
-                samples[name].append(time.perf_counter() - t0)
+        samples = ladder.sample(dfs, TILED_REPS, warm=1)
         spark.sparkContext.setJobDescription(None)
-        return {
-            name: round(statistics.median(ts), 4)
-            for name, ts in samples.items()
-        }
+        return ladder.medians(samples)
     except Exception as e:  # never let the tier break the contract line
         return {"error": f"{type(e).__name__}: {e}"[:300]}
 
@@ -181,7 +126,6 @@ def main() -> None:
             raise SystemExit(ladder_run(scale=int(args.sf[1:]), reps=args.reps))
         raise SystemExit(ladder_run(sf_dir=args.sf, reps=args.reps))
 
-    spark = get_spark("bench", shuffle_partitions=32)
     # r9 posture: the bench runs the ENGINE session as-is (AQE + skew
     # handling ON — under honest full re-execution AQE's runtime
     # re-planning is part of Spark's real cost/benefit, and the r9 grid
@@ -191,13 +135,7 @@ def main() -> None:
     # splits saturate the machine (grid-searched at sf0.1 and x10;
     # PLANS.md round-9). On a real cluster tables are many files and this
     # pin is a no-op.
-    pin(
-        spark,
-        {
-            "spark.sql.files.maxPartitionBytes": "2m",
-            "spark.sql.leafNodeDefaultParallelism": "32",
-        },
-    )
+    spark = ladder.session("bench", split="2m")
     reg = registry()
     # Build every plan once, warm each twice (codegen compile + HotSpot
     # tiered-compile settle), then time in ROUND-ROBIN order: one sample of
@@ -225,31 +163,13 @@ def main() -> None:
         spark, ivf_path, emb.filter("vec_id = 0"), k=10, n_probe=16
     )
     dfs["q8_exact_scan"] = reg[EXACT_Q8_OP].fn(spark, SF_DIR)
-    # full-re-execution wrapper (see module docstring): fresh
+    # full-re-execution samples (see module docstring): a fresh
     # QueryExecution per sample so no shuffle map stage is ever skipped;
-    # its planning happens OUTSIDE the timer (executedPlan materialized
-    # before the clock starts)
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
-
+    # its planning happens OUTSIDE the timer
     try:
-        for df in dfs.values():
-            rerun(df).collect()
-            rerun(df).collect()
-        samples: dict[str, list[float]] = {name: [] for name in dfs}
-        for _ in range(9):
-            for name, df in dfs.items():
-                w = rerun(df)
-                t0 = time.perf_counter()
-                w.collect()
-                samples[name].append(time.perf_counter() - t0)
+        results = ladder.medians(ladder.sample(dfs, 9, warm=2))
     finally:
         shutil.rmtree(ivf_path, ignore_errors=True)
-    results = {
-        name: round(statistics.median(ts), 4) for name, ts in samples.items()
-    }
     extra = {
         "q8_exact_scan": results.pop("q8_exact_scan"),
         "q8_ivf_build_once": round(build_once, 4),

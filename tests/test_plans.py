@@ -383,30 +383,18 @@ def test_shuffle_budget_covers_census():
 
 
 def test_bench_ladder_fixture_preserves_join_integrity(tmp_path, monkeypatch):
-    """The ladder's scaled fixture (tools/bench_ladder.py::build_scaled)
-    must preserve the schema EXACTLY (the ladder times the same operator
-    code on the scaled dir), multiply every fact cardinality by the
-    scale, keep the constant star dims un-tiled, and keep every FK
-    resolvable — an orphaned key would quietly change join selectivity
-    and corrupt the engine-vs-engine ratios recorded in PLANS.md."""
-    import importlib.util
-    import os
-
+    """The ladder's scaled fixture (``ladder.tile``) must preserve the
+    schema EXACTLY (the ladder times the same operator code on the
+    scaled dir), multiply every fact cardinality by the scale, keep the
+    constant star dims un-tiled, and keep every FK resolvable — an
+    orphaned key would quietly change join selectivity and corrupt the
+    engine-vs-engine ratios recorded in PLANS.md."""
     import duckdb
 
-    monkeypatch.setenv("SPARK_GRAFT_LADDER_SRC", "/root/testdata/sf0.001")
+    from aced_etl_pod_spark import ladder as bl
+
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    spec = importlib.util.spec_from_file_location(
-        "bench_ladder",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-            "bench_ladder.py",
-        ),
-    )
-    bl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bl)
-    out = bl.build_scaled(3)
+    out = bl.tile("/root/testdata/sf0.001", 3)
     con = duckdb.connect()
     src = "/root/testdata/sf0.001"
     for t in list(bl.KEY_OFFSETS) + bl.CONST_DIMS:

@@ -316,3 +316,18 @@ def test_fixture_name_changes_when_source_rewritten(tmp_path, monkeypatch):
     assert before.startswith("fx_sf_t_"), before
     (tmp_path / "sf_t" / "t.parquet").write_bytes(b"v2 rewritten")
     assert fixture_name("fx", sf_dir, "t.parquet") != before
+
+
+def test_table_row_count_follows_a_rewritten_table(tmp_path):
+    """The dispatch knees read ``table_row_count``; a table rewritten at
+    the same path with a different row count must be counted again, not
+    served from the first count."""
+    from aced_etl_pod_spark.tables import table_row_count
+
+    sf_dir = str(tmp_path / "sf_rc")
+    os.makedirs(sf_dir)
+    path = os.path.join(sf_dir, "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": pa.array(range(3), pa.int64())}), path)
+    assert table_row_count(sf_dir, "orders") == 3
+    pq.write_table(pa.table({"o_orderkey": pa.array(range(50), pa.int64())}), path)
+    assert table_row_count(sf_dir, "orders") == 50

@@ -31,7 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SRC = "/root/testdata/sf0.1"
+from aced_etl_pod_spark import ladder  # noqa: E402
+from aced_etl_pod_spark.tables import DEFAULT_SF_DIR as SRC  # noqa: E402
 
 OPS = ("dedup_minhash_lsh", "text_line_dedup_c4", "dedup_incremental_minhash")
 
@@ -76,22 +77,10 @@ def main() -> int:
 
     import duckdb
 
-    from pyspark.sql import functions as F
-
     from aced_etl_pod_spark.registry import registry
-    from aced_etl_pod_spark.session import get_spark, pin
 
-    spark = get_spark("dedup-ladder", shuffle_partitions=32)
-    pin(spark, {
-        "spark.sql.files.maxPartitionBytes": "4m",
-        "spark.sql.leafNodeDefaultParallelism": "32",
-    })
+    spark = ladder.session("dedup-ladder")
     reg = registry()
-
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
 
     results = {}
     for scale in args.scales:
@@ -108,20 +97,13 @@ def main() -> int:
             orows = sorted(tuple(r) for r in con.execute(o.oracle).fetchall())
             duck_first = time.perf_counter() - t0
             match = rows == orows
-            # warm medians, both engines
-            rerun(df).collect()
-            ts = []
-            for _ in range(args.reps):
-                w = rerun(df)
-                t0 = time.perf_counter()
-                w.collect()
-                ts.append(time.perf_counter() - t0)
-            td = [duck_first]
-            for _ in range(max(args.reps - 1, 1)):
-                t0 = time.perf_counter()
-                con.execute(o.oracle).fetchall()
-                td.append(time.perf_counter() - t0)
-            ms, md = statistics.median(ts), statistics.median(td)
+            # warm medians, both engines (the oracle's first run counts)
+            ms = ladder.median_s(df, args.reps)
+            duck = lambda: con.execute(o.oracle).fetchall()  # noqa: E731
+            md = statistics.median(
+                [duck_first]
+                + [ladder.clock(duck) for _ in range(max(args.reps - 1, 1))]
+            )
             results[f"{op_id}_x{scale}"] = {
                 "rows": len(rows),
                 "rows_match": match,

@@ -25,13 +25,12 @@ import argparse
 import os
 import sys
 import tempfile
-import time
-import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402
+from tools.parity import run_ops  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.001"
 
@@ -58,33 +57,10 @@ def main() -> int:
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
 
-    reg = registry()
-    ids = args.ops or sorted(reg)
+    ids = args.ops or sorted(registry())
     spark = get_spark("empty-sweep")
     sf = make_empty_sf(args.rows)
-
-    n_ok = n_fail = 0
-    failures: list[tuple[str, str]] = []
-    for op_id in ids:
-        if op_id not in reg:
-            print(f"?? {op_id}: not registered", flush=True)
-            n_fail += 1
-            continue
-        t0 = time.time()
-        try:
-            n = reg[op_id].fn(spark, sf).count()
-            print(f"ok   {op_id}: {n} rows [{time.time() - t0:.1f}s]", flush=True)
-            n_ok += 1
-        except Exception:
-            tb = traceback.format_exc().strip().splitlines()
-            print(f"FAIL {op_id}: {tb[-1]}", flush=True)
-            failures.append((op_id, tb[-1]))
-            n_fail += 1
-
-    print(f"\n{n_ok} ok, {n_fail} failed / {len(ids)} total")
-    for op_id, err in failures:
-        print(f"  {op_id}: {err}")
-    return 1 if n_fail else 0
+    return run_ops(spark, sf, ids, title=f"empty sweep (rows {args.rows})")
 
 
 if __name__ == "__main__":

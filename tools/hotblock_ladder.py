@@ -26,13 +26,13 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SRC = os.environ.get("SPARK_GRAFT_LADDER_SRC", "/root/testdata/sf0.1")
+from aced_etl_pod_spark import ladder  # noqa: E402
+from aced_etl_pod_spark.tables import DEFAULT_SF_DIR as SRC  # noqa: E402
 
 # documents-case hot block: lang/length chosen to collide in ONE
 # (lang, n_chars // 16) block, text near-identical so the pairs would
@@ -182,24 +182,6 @@ def build_orders_hub(scale: int) -> str:
     )
 
 
-def _median_runs(df, reps: int) -> float:
-    from pyspark.sql import functions as F
-
-    def rerun():
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
-
-    rerun().collect()
-    ts = []
-    for _ in range(reps):
-        w = rerun()
-        t0 = time.perf_counter()
-        w.collect()
-        ts.append(time.perf_counter() - t0)
-    return round(statistics.median(ts), 3)
-
-
 def _oracle_check(op_id: str, sf: str, spark_df) -> int:
     from aced_etl_pod_spark.oracle import compare, duck_con
     from aced_etl_pod_spark.registry import registry
@@ -233,7 +215,7 @@ def run_lev(spark, scale: int, reps: int) -> dict:
     spark.sparkContext.setJobDescription(f"hotblock lev x{scale}")
     df = dedup_levenshtein_pairs(spark, sf)
     n_rows = _oracle_check("dedup_levenshtein_pairs", sf, df)
-    sec = _median_runs(df, reps)
+    sec = round(ladder.median_s(df, reps), 3)
     return {
         "case": "dedup_levenshtein_pairs",
         "scale": scale,
@@ -268,7 +250,7 @@ def run_knn(spark, scale: int, reps: int, with_plain: bool) -> dict:
     srt = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     s_rows = srt(salted)
     _oracle_check("sim_knn_all_pairs_topk", sf, salted)
-    sec_salted = _median_runs(salted, reps)
+    sec_salted = round(ladder.median_s(salted, reps), 3)
     out = {
         "case": "sim_knn_all_pairs_topk",
         "scale": scale,
@@ -337,7 +319,7 @@ def run_tri(spark, scale: int, reps: int, with_id_orient: bool) -> dict:
     spark.sparkContext.setJobDescription(f"hotblock tri x{scale}")
     df = graph_triangle_count(spark, sf)
     n_rows = _oracle_check("graph_triangle_count", sf, df)
-    sec_degree = _median_runs(df, reps)
+    sec_degree = round(ladder.median_s(df, reps), 3)
     out = {
         "case": "graph_triangle_count",
         "scale": scale,
@@ -369,9 +351,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from aced_etl_pod_spark.session import get_spark
-
-    spark = get_spark("hotblock_ladder", shuffle_partitions=32)
+    spark = ladder.session("hotblock_ladder", split=None)
     if args.case in ("all", "lev"):
         print(json.dumps(run_lev(spark, args.scale, args.reps)))
     if args.case in ("all", "knn"):

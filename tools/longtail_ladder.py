@@ -18,13 +18,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+from aced_etl_pod_spark import ladder  # noqa: E402
 
 DEFAULT_OPS = (
     "text_tfidf_topk",
@@ -43,19 +42,12 @@ def main() -> int:
     args = ap.parse_args()
     ops = args.ops or list(DEFAULT_OPS)
 
-    import duckdb
-
     from aced_etl_pod_spark.oracle import compare, duck_con
     from aced_etl_pod_spark.registry import registry
-    from aced_etl_pod_spark.session import get_spark, pin
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR
 
-    sf = build_scaled(args.scale)
-    spark = get_spark("longtail-ladder", shuffle_partitions=32)
-    pin(spark, {
-        "spark.sql.files.maxPartitionBytes": "4m",
-        "spark.sql.leafNodeDefaultParallelism": "32",
-    })
+    sf = ladder.tile(DEFAULT_SF_DIR, args.scale)
+    spark = ladder.session("longtail-ladder")
     reg = registry()
     con = duck_con(sf)
 
@@ -83,11 +75,6 @@ def main() -> int:
 
     PERTURBED_OPS = {"dedup_cluster_cc"}
 
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
-
     rc = 0
     for op_id in ops:
         o = reg[op_id]
@@ -106,33 +93,25 @@ def main() -> int:
                 rc = 1
                 continue
         # warm both engines once, then alternate engine order per rep
-        rerun(df).collect()
+        legs = {"spark": df}
         if o.oracle:
-            op_con.execute(o.oracle).fetchall()
-        s_t, d_t = [], []
+            legs["duck"] = lambda: op_con.execute(o.oracle).fetchall()
+        ladder.sample(legs, 0, warm=1)
+        samples = {}
         for rep in range(args.reps):
-            legs = ["spark", "duck"] if rep % 2 == 0 else ["duck", "spark"]
-            for leg in legs:
-                if leg == "spark":
-                    w = rerun(df)
-                    t0 = time.perf_counter()
-                    w.collect()
-                    s_t.append(time.perf_counter() - t0)
-                elif o.oracle:
-                    t0 = time.perf_counter()
-                    op_con.execute(o.oracle).fetchall()
-                    d_t.append(time.perf_counter() - t0)
+            order = legs if rep % 2 == 0 else dict(reversed(legs.items()))
+            ladder.sample(order, 1, warm=0, into=samples)
+        med = ladder.medians(samples)
         row = {
             "op": op_id,
             "scale": args.scale,
-            "spark_sec": round(statistics.median(s_t), 3),
+            "spark_sec": round(med["spark"], 3),
             "plan_construction_sec": round(plan_s, 3),
             "oracle_match": True,
         }
-        if d_t:
-            dm = statistics.median(d_t)
-            row["duck_sec"] = round(dm, 3)
-            row["ratio"] = round(row["spark_sec"] / dm, 2)
+        if "duck" in med:
+            row["duck_sec"] = round(med["duck"], 3)
+            row["ratio"] = round(med["spark"] / med["duck"], 2)
         print(json.dumps(row), flush=True)
     return rc
 

@@ -28,14 +28,13 @@ import argparse
 import os
 import sys
 import tempfile
-import time
-import traceback
 import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402
+from tools.parity import run_ops  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.001"
 
@@ -57,7 +56,7 @@ ALL_TABLES = [
 ]
 
 
-def _rng(tag: str):
+def seeded_rng(tag: str):
     import numpy as np
 
     return np.random.Generator(np.random.PCG64(zlib.crc32(tag.encode())))
@@ -77,7 +76,7 @@ def make_nonfinite_sf(rate: float) -> str:
             col = tab.column(field.name)
             if field.name in poison_cols:
                 vals = np.asarray(col.to_pylist(), dtype=np.float64)
-                rng = _rng(f"nf:{t}.{field.name}")
+                rng = seeded_rng(f"nf:{t}.{field.name}")
                 u = rng.random(tab.num_rows)
                 vals[u < rate / 2] = np.nan
                 vals[(u >= rate / 2) & (u < rate * 0.75)] = np.inf
@@ -85,7 +84,7 @@ def make_nonfinite_sf(rate: float) -> str:
                 cols.append(pa.array(vals, type=field.type))
             elif t == "embeddings" and field.name == "embedding":
                 vecs = col.to_pylist()
-                rng = _rng(f"nf:{t}.{field.name}")
+                rng = seeded_rng(f"nf:{t}.{field.name}")
                 u = rng.random(len(vecs))
                 for i in np.flatnonzero(u < rate):
                     v = vecs[i]
@@ -116,8 +115,7 @@ def main() -> int:
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
 
-    reg = registry()
-    ids = args.ops or sorted(reg)
+    ids = args.ops or sorted(registry())
     spark = get_spark("nonfinite-sweep")
     sf = make_nonfinite_sf(args.rate)
     print(f"non-finite-injected sf at {sf} (rate {args.rate})", flush=True)
@@ -127,50 +125,7 @@ def main() -> int:
         from aced_etl_pod_spark.oracle import duck_con
 
         con = duck_con(sf)
-
-    n_ok = n_fail = 0
-    failures: list[tuple[str, str]] = []
-    for op_id in ids:
-        if op_id not in reg:
-            print(f"?? {op_id}: not registered", flush=True)
-            n_fail += 1
-            continue
-        t0 = time.time()
-        try:
-            op = reg[op_id]
-            sdf = op.fn(spark, sf)
-            if args.parity and op.oracle:
-                from aced_etl_pod_spark.oracle import compare
-
-                problems = compare(
-                    sdf.toPandas(), con.execute(op.oracle).fetchdf()
-                )
-                if problems:
-                    raise AssertionError("; ".join(problems))
-                verdict = "parity"
-            else:
-                verdict = f"{sdf.count()} rows"
-            print(f"ok   {op_id}: {verdict} [{time.time() - t0:.1f}s]", flush=True)
-            n_ok += 1
-        except Exception:
-            lines = traceback.format_exc().strip().splitlines()
-            msg = next(
-                (
-                    ln.strip()
-                    for ln in reversed(lines)
-                    if ("Error" in ln or "Exception" in ln or "Assertion" in ln)
-                    and ln.strip() not in ("^", "")
-                ),
-                lines[-1],
-            )
-            print(f"FAIL {op_id}: {msg}", flush=True)
-            failures.append((op_id, msg))
-            n_fail += 1
-
-    print(f"\n== non-finite sweep (rate {args.rate}): {n_ok} ok / {n_fail} failed ==")
-    for op_id, msg in failures:
-        print(f"   {op_id}: {msg[:160]}")
-    return 1 if n_fail else 0
+    return run_ops(spark, sf, ids, con, f"non-finite sweep (rate {args.rate})")
 
 
 if __name__ == "__main__":

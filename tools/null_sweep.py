@@ -25,14 +25,13 @@ import argparse
 import os
 import sys
 import tempfile
-import time
-import traceback
 import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aced_etl_pod_spark.registry import registry  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402
+from tools.parity import run_ops  # noqa: E402
 
 SRC_SF = "/root/testdata/sf0.001"
 
@@ -96,8 +95,7 @@ def main() -> int:
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
 
-    reg = registry()
-    ids = args.ops or sorted(reg)
+    ids = args.ops or sorted(registry())
     spark = get_spark("null-sweep")
     sf = make_null_sf(args.rate)
     print(f"null-injected sf at {sf} (rate {args.rate})", flush=True)
@@ -107,41 +105,7 @@ def main() -> int:
         from aced_etl_pod_spark.oracle import duck_con
 
         con = duck_con(sf)
-
-    n_ok = n_fail = 0
-    failures: list[tuple[str, str]] = []
-    for op_id in ids:
-        if op_id not in reg:
-            print(f"?? {op_id}: not registered", flush=True)
-            n_fail += 1
-            continue
-        t0 = time.time()
-        try:
-            op = reg[op_id]
-            sdf = op.fn(spark, sf)
-            if args.parity and op.oracle:
-                from aced_etl_pod_spark.oracle import compare
-
-                problems = compare(
-                    sdf.toPandas(), con.execute(op.oracle).fetchdf()
-                )
-                if problems:
-                    raise AssertionError("; ".join(problems))
-                verdict = "parity"
-            else:
-                verdict = f"{sdf.count()} rows"
-            print(f"ok   {op_id}: {verdict} [{time.time() - t0:.1f}s]", flush=True)
-            n_ok += 1
-        except Exception:
-            tb = traceback.format_exc().strip().splitlines()
-            print(f"FAIL {op_id}: {tb[-1]}", flush=True)
-            failures.append((op_id, tb[-1]))
-            n_fail += 1
-
-    print(f"\n== null sweep (rate {args.rate}): {n_ok} ok / {n_fail} failed ==")
-    for op_id, msg in failures:
-        print(f"   {op_id}: {msg[:160]}")
-    return 1 if n_fail else 0
+    return run_ops(spark, sf, ids, con, f"null sweep (rate {args.rate})")
 
 
 if __name__ == "__main__":

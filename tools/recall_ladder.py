@@ -27,7 +27,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -81,15 +80,11 @@ def main() -> int:
         ivf_index_probe,
         ivf_index_probe_many,
     )
-    from aced_etl_pod_spark.session import get_spark, pin
+    from aced_etl_pod_spark import ladder
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR as SRC
     from aced_etl_pod_spark.tables import fixture, load
-    from tools.bench_ladder import SRC, build_scaled, ivf_index
 
-    spark = get_spark("recall-ladder", shuffle_partitions=32)
-    pin(spark, {
-        "spark.sql.files.maxPartitionBytes": "4m",
-        "spark.sql.leafNodeDefaultParallelism": "32",
-    })
+    spark = ladder.session("recall-ladder")
     if args.random_n:
 
         def build(out):
@@ -133,12 +128,12 @@ def main() -> int:
             f"embjit_x{args.scale}_{jit}", SRC, ("embeddings.parquet",), build
         )
     else:
-        sf = args.dir or build_scaled(args.scale)
+        sf = args.dir or ladder.tile(SRC, args.scale)
     emb_path = os.path.join(sf, "embeddings.parquet")
     emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
     tag = os.path.basename(sf.rstrip("/"))
 
-    idx, build_s = ivf_index(spark, sf)
+    idx, build_s = ladder.ivf_index(spark, sf)
     if build_s:
         print(f"index built in {build_s:.1f}s", flush=True)
     n_cent = spark.read.parquet(f"{idx}/centroids").count()
@@ -147,11 +142,6 @@ def main() -> int:
 
     step = max(1, n_vec // args.queries)
     qset = emb.filter(F.col("vec_id") % step == 0).limit(args.queries)
-
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
 
     def topk_map(df):
         out: dict[int, list[int]] = {}
@@ -188,13 +178,9 @@ def main() -> int:
         WHERE vec_id <> ? ORDER BY cos DESC, vec_id LIMIT {args.k}
     """
     params = [qvec, qvec, qvec, q0["vec_id"]]
-    con.execute(duck_sql, params).fetchall()
-    td = []
-    for _ in range(args.reps):
-        t0 = time.perf_counter()
-        con.execute(duck_sql, params).fetchall()
-        td.append(time.perf_counter() - t0)
-    duck_exact = statistics.median(td)
+    duck_exact = ladder.median_s(
+        lambda: con.execute(duck_sql, params).fetchall(), args.reps
+    )
 
     curve = []
     probe_list = [4, 8, 16, 32]
@@ -204,35 +190,23 @@ def main() -> int:
         batched = ivf_index_probe_many(
             spark, idx, qset, k=args.k, n_probe=n_probe, broadcast_queries=True
         )
-        got = topk_map(rerun(batched))
+        got = topk_map(ladder.fresh(batched))
         recalls = [
             len(set(got.get(q, [])) & set(ex)) / max(len(ex), 1)
             for q, ex in exact.items()
         ]
         recall = sum(recalls) / len(recalls)
-        walls = []
-        for _ in range(args.reps):
-            w = rerun(batched)
-            t0 = time.perf_counter()
-            w.collect()
-            walls.append(time.perf_counter() - t0)
-        qps = args.queries / statistics.median(walls)
-        single = ivf_index_probe(
-            spark, idx, qset.limit(1), k=args.k, n_probe=n_probe
+        qps = args.queries / ladder.median_s(batched, args.reps, warm=0)
+        single = ladder.median_s(
+            ivf_index_probe(spark, idx, qset.limit(1), k=args.k, n_probe=n_probe),
+            args.reps,
         )
-        rerun(single).collect()
-        sw = []
-        for _ in range(args.reps):
-            w = rerun(single)
-            t0 = time.perf_counter()
-            w.collect()
-            sw.append(time.perf_counter() - t0)
         row = {
             "n_probe": n_probe,
             "recall_at_k": round(recall, 4),
             "batched_qps": round(qps, 1),
-            "single_probe_sec": round(statistics.median(sw), 4),
-            "probe_exact_ratio": round(statistics.median(sw) / duck_exact, 3),
+            "single_probe_sec": round(single, 4),
+            "probe_exact_ratio": round(single / duck_exact, 3),
         }
         curve.append(row)
         print(row, flush=True)
@@ -248,22 +222,15 @@ def main() -> int:
         mp = ann_lsh_multiprobe_topk(
             emb, k=args.k, target_bucket=16, queries=qset
         ).select(F.col("vec_id").alias("q_id"), "nbr_id", "cos_sim")
-        got = topk_map(rerun(mp))
+        got = topk_map(ladder.fresh(mp))
         recalls = [
             len(set(got.get(q, [])) & set(ex)) / max(len(ex), 1)
             for q, ex in exact.items()
         ]
-        walls = []
-        for _ in range(args.reps):
-            w = rerun(mp)
-            t0 = time.perf_counter()
-            w.collect()
-            walls.append(time.perf_counter() - t0)
+        wall = ladder.median_s(mp, args.reps, warm=0)
         extra["lsh_multiprobe"] = {
             "recall_at_k": round(sum(recalls) / len(recalls), 4),
-            "batched_qps": round(
-                args.queries / statistics.median(walls), 1
-            ),
+            "batched_qps": round(args.queries / wall, 1),
         }
         print(f"lsh_multiprobe: {extra['lsh_multiprobe']}", flush=True)
 

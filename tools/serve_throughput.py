@@ -19,7 +19,7 @@ index (x``scale`` tiled embeddings), same ``--queries`` query vectors:
     serving shape for micro-batch inference.
 
 Timed region: plan(s) are built and warmed untimed (honest-protocol
-rerun wrapper per sample — a fresh QueryExecution per collect so no
+``ladder.fresh`` per sample — a fresh QueryExecution per collect so no
 shuffle stage is reused); each rep times the full workload wall and
 reports queries/sec. Medians over ``--reps``.
 """
@@ -51,31 +51,18 @@ def main() -> int:
         ivf_index_probe,
         ivf_index_probe_many,
     )
-    from aced_etl_pod_spark.session import get_spark, pin
-    from aced_etl_pod_spark.tables import load
-    from tools.bench_ladder import build_scaled, ivf_index
+    from aced_etl_pod_spark import ladder
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR, load
 
-    sf = build_scaled(args.scale)
-    spark = get_spark("serve-throughput", shuffle_partitions=32)
-    pin(
-        spark,
-        {
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.leafNodeDefaultParallelism": "32",
-        },
-    )
+    sf = ladder.tile(DEFAULT_SF_DIR, args.scale)
+    spark = ladder.session("serve-throughput")
     emb = load(spark, sf, "embeddings")
-    idx, build_s = ivf_index(spark, sf)
+    idx, build_s = ladder.ivf_index(spark, sf)
     if build_s:
         print(f"index built in {build_s:.1f}s", flush=True)
 
     qids = list(range(args.queries))
     qset = emb.filter(F.col("vec_id").isin(qids))
-
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
 
     # per-query plans (sequential + concurrent modes), built untimed
     probes = [
@@ -91,7 +78,7 @@ def main() -> int:
         spark, idx, qset, k=10, n_probe=16, broadcast_queries=True
     )
     for df in probes[:2] + [batched]:
-        rerun(df).collect()
+        ladder.clock(df)
 
     modes: dict[str, list[float]] = {
         "sequential": [],
@@ -103,22 +90,21 @@ def main() -> int:
         t0 = time.perf_counter()
         n = 0
         for df in probes:
-            n += len(rerun(df).collect())
+            n += len(ladder.fresh(df).collect())
         modes["sequential"].append(time.perf_counter() - t0)
         n_rows["sequential"] = n
 
-        wrapped = [rerun(df) for df in probes]
+        wrapped = [ladder.fresh(df) for df in probes]
         t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=args.threads) as ex:
             n = sum(len(r) for r in ex.map(lambda w: w.collect(), wrapped))
         modes["concurrent"].append(time.perf_counter() - t0)
         n_rows["concurrent"] = n
 
-        w = rerun(batched)
+        w = ladder.fresh(batched)
         t0 = time.perf_counter()
-        n = len(w.collect())
+        n_rows["batched"] = len(w.collect())
         modes["batched"].append(time.perf_counter() - t0)
-        n_rows["batched"] = n
 
     out = {}
     for mode, walls in modes.items():

@@ -38,14 +38,14 @@ from __future__ import annotations
 
 import argparse
 import json
-import statistics
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from aced_etl_pod_spark import ladder  # noqa: E402
 
 HOT_PCT = 40  # % of fact rows remapped onto the single hot key
 N_KEYS = 1000
@@ -74,11 +74,10 @@ def main() -> int:
         salted_join_small_skew,
         write_bucketed,
     )
-    from aced_etl_pod_spark.session import get_spark
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR
 
-    sf = build_scaled(args.scale)
-    spark = get_spark("skew-ladder", shuffle_partitions=32)
+    sf = ladder.tile(DEFAULT_SF_DIR, args.scale)
+    spark = ladder.session("skew-ladder", split=None)
     # broadcast off for every strategy except the explicit reference row
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
@@ -138,28 +137,16 @@ def main() -> int:
         ),
     )
 
-    # full-re-execution wrapper (r9 protocol correction, see bench.py):
-    # without it, re-collecting one DataFrame skips the shuffle map
-    # stages — exactly the work a skew measurement exists to time.
-    # Planning happens outside the timer.
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
-
+    # full re-execution per sample (ladder.fresh): re-collecting one
+    # DataFrame skips the shuffle map stages — exactly the work a skew
+    # measurement exists to time
     results, counts = {}, {}
     for name, (conf, build) in strategies.items():
         for k, v in conf.items():
             spark.conf.set(k, v)
         df = build()
         counts[name] = df.count()  # warmup + row-count cross-check
-        ts = []
-        for _ in range(args.reps):
-            w = rerun(df)
-            t0 = time.perf_counter()
-            w.collect()
-            ts.append(time.perf_counter() - t0)
-        results[name] = round(statistics.median(ts), 3)
+        results[name] = round(ladder.median_s(df, args.reps, warm=0), 3)
         print(f"{name:14s} {results[name]:7.3f} s  (rows {counts[name]})", flush=True)
         for k in conf:
             spark.conf.unset(k)

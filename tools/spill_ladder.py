@@ -24,7 +24,7 @@ Shapes chosen to cover the three spill paths:
   * sort-merge-join spill   — forced-SMJ lineitem ⋈ orders (broadcast
     disabled via merge hint; both sides sort)
 
-Protocol: honest full-re-execution wrapper (bench.py round-9), 1 warmup +
+Protocol: ``ladder``'s full re-execution per sample (round 9), 1 warmup +
 ``reps`` timed samples per query, medians. The claim being tested is NOT
 speed — it is that the constrained run COMPLETES with bounded memory and
 degrades smoothly (spill bytes > 0, wall within a small factor of the
@@ -34,7 +34,6 @@ unconstrained run).
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import statistics
@@ -62,14 +61,13 @@ def _child(sf: str, reps: int) -> None:
 
     from pyspark.sql import functions as F
 
+    from aced_etl_pod_spark import ladder
     from aced_etl_pod_spark.registry import registry
-    from aced_etl_pod_spark.session import get_spark, pin
     from aced_etl_pod_spark.tables import load
 
     evdir = tempfile.mkdtemp(prefix="spill_evlog_")
-    spark = get_spark(
+    spark = ladder.session(
         "spill-ladder",
-        shuffle_partitions=32,
         extra_confs={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{evdir}",
@@ -77,13 +75,6 @@ def _child(sf: str, reps: int) -> None:
             # plain single-file JSON keeps the parse dependency-free
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
-        },
-    )
-    pin(
-        spark,
-        {
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.leafNodeDefaultParallelism": "32",
         },
     )
     reg = registry()
@@ -126,23 +117,17 @@ def _child(sf: str, reps: int) -> None:
         "join_smj_fact_fact": smj(spark, sf),
     }
 
-    def rerun(df):
-        w = df.where(F.lit(True))
-        w._jdf.queryExecution().executedPlan()
-        return w
-
+    # each sample runs under its query's job group, so the event log
+    # attributes its stages' spill to that query
     sc = spark.sparkContext
     sc.setJobGroup("warmup", "warmup")
     for df in dfs.values():
-        rerun(df).collect()
+        ladder.clock(df)
     walls: dict[str, list[float]] = {n: [] for n in dfs}
     for _ in range(reps):
         for name, df in dfs.items():
-            w = rerun(df)
             sc.setJobGroup(name, name)
-            t0 = time.perf_counter()
-            w.collect()
-            walls[name].append(time.perf_counter() - t0)
+            walls[name].append(ladder.clock(df))
     sc.setJobGroup("done", "done")
     # flush the event log before parsing
     spark.stop()
@@ -215,9 +200,10 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.ladder import tile
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR
 
-    sf = build_scaled(args.scale)
+    sf = tile(DEFAULT_SF_DIR, args.scale)
     print(f"tiled dir: {sf} (x{args.scale})", flush=True)
     results: dict[str, dict] = {}
     for mem in args.mem.split(","):

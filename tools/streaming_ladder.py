@@ -99,21 +99,16 @@ def main() -> int:
 
     import duckdb
 
+    from aced_etl_pod_spark import ladder
     from aced_etl_pod_spark.registry import registry
-    from aced_etl_pod_spark.session import get_spark, pin
-    from aced_etl_pod_spark.tables import table_row_count
-    from tools.bench_ladder import build_scaled
+    from aced_etl_pod_spark.tables import DEFAULT_SF_DIR, table_row_count
 
-    spark = get_spark("streaming-ladder", shuffle_partitions=32)
-    pin(spark, {
-        "spark.sql.files.maxPartitionBytes": "4m",
-        "spark.sql.leafNodeDefaultParallelism": "32",
-    })
+    spark = ladder.session("streaming-ladder")
     reg = registry()
 
     results = {}
     for scale in args.scales:
-        sf = build_scaled(scale)
+        sf = ladder.tile(DEFAULT_SF_DIR, scale)
         n_events = table_row_count(sf, "events")
         con = duckdb.connect()
         con.execute(
