@@ -52,7 +52,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aced_etl_pod_spark import ladder
-from aced_etl_pod_spark.ladder import HEADLINE
 from aced_etl_pod_spark.registry import registry
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,7 +71,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Arrow-transfer-bound Python at ~3x DuckDB's fused native kernel on
 # every scale the ladder measured — a documented kernel-floor gap, not a
 # plan gap (both engines scale linearly; the IVF row is the scale path).
-BENCH_QUERIES = {n: q for n, q in HEADLINE.items() if n != "q8_cosine_topk"}
+BENCH_QUERIES = {n: q for n, q in ladder.HEADLINE.items() if n != "q8_cosine_topk"}
 EXACT_Q8_OP = "sim_cosine_topk_fast"
 
 # Knee-crossing second tier (round-13 verdict item 2): every sf0.1 median
@@ -100,7 +99,7 @@ def _tiled_tier(spark):
     try:
         reg = registry()
         sf = ladder.tile(SF_DIR, TILED_SCALE)
-        dfs = {name: reg[q].fn(spark, sf) for name, q in HEADLINE.items()}
+        dfs = {name: reg[q].fn(spark, sf) for name, q in ladder.HEADLINE.items()}
         spark.sparkContext.setJobDescription(f"bench tiled x{TILED_SCALE}")
         samples = ladder.sample(dfs, TILED_REPS, warm=1)
         spark.sparkContext.setJobDescription(None)
