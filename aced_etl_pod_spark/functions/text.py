@@ -37,7 +37,7 @@ def ws_token_count(col: Column | str) -> Column:
     sequence bounds; DuckDB's ``len(string_split(NULL))`` is NULL and
     drops out of aggregates. Every token-counting operator routes
     through this guard so null documents count toward row counts but
-    never toward token arithmetic (found by tools/null_sweep.py)."""
+    never toward token arithmetic (found by ``tools/sweep.py --kind null``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(c.isNotNull(), F.size(F.split(c, " ")))
 

@@ -9,6 +9,8 @@ copy of the test tables under the same protocol:
   replica's key collides with another's; the constant star dims
   (nation, region) are copied, not tiled. Built once per source
   fingerprint through :func:`tables.fixture`.
+* :func:`perturbed` — the same tiling with every replica's document text
+  made unique, for the ``QUADRATIC`` ops that verbatim replicas blow up.
 * :func:`fresh` / :func:`clock` / :func:`sample` — the round-9 timing
   protocol (PLANS.md round-9). Re-collecting ONE DataFrame lets Spark
   skip every completed shuffle map stage, so each sample wraps the
@@ -27,6 +29,7 @@ The at-scale money rule lives beside ``compare`` as
 
 from __future__ import annotations
 
+import os
 import statistics
 import time
 from collections.abc import Callable
@@ -68,6 +71,19 @@ HEADLINE = {
     "q9_rollup": "agg_rollup_partial_reagg",
     "q10_distinct": "agg_distinct_count",
 }
+
+# Ops whose candidate pairs grow quadratically on verbatim replicas: a
+# key-offset replica of a document is an exact near-dup of its original,
+# so minhash / line-dedup pairs form scale-sized cliques and the ladder
+# would time the clone artifact (the dedup_cluster_cc oracle's transitive
+# closure ran 40+ min on the plain x40 tiling). They run on
+# :func:`perturbed`, where pair counts scale linearly.
+QUADRATIC = (
+    "dedup_minhash_lsh",
+    "text_line_dedup_c4",
+    "dedup_incremental_minhash",
+    "dedup_cluster_cc",
+)
 
 SHUFFLE_PARTITIONS = 32
 # 4 MB splits: small enough that every scan of a one-file tiled table
@@ -115,6 +131,46 @@ def tile(src: str, scale: int) -> str:
     return fixture(f"benchladder_x{scale}", src, ("lineitem.parquet",), build)
 
 
+def perturbed(src: str, scale: int) -> str:
+    """The x``scale`` tiling with content-perturbed documents, published as
+    ``dedupladder_x{scale}_…``: every word of replica ``r`` gets the
+    suffix ``x<r>``, so replicas share no shingle or line across tiles
+    while each tile keeps the original's internal near-dup structure. The
+    other tables are links to :func:`tile`'s."""
+    import duckdb
+
+    from aced_etl_pod_spark.tables import TABLES, fixture
+
+    def build(out):
+        con = duckdb.connect()
+        span = con.execute(
+            f"SELECT coalesce(max(doc_id), 0) + 1 FROM '{src}/documents.parquet'"
+        ).fetchone()[0]
+        con.execute(
+            f"""COPY (
+                SELECT doc_id + r * {span} AS doc_id,
+                       regexp_replace(text, '(\\S+)',
+                                      '\\0x' || CAST(r AS VARCHAR), 'g') AS text,
+                       lang, source,
+                       CAST(length(regexp_replace(text, '(\\S+)',
+                            '\\0x' || CAST(r AS VARCHAR), 'g')) AS BIGINT)
+                           AS n_chars
+                FROM '{src}/documents.parquet', range({scale}) tt(r)
+            ) TO '{out}/documents.parquet' (FORMAT PARQUET)"""
+        )
+
+    out = fixture(f"dedupladder_x{scale}", src, ("documents.parquet",), build)
+    tiled = tile(src, scale)
+    for t in TABLES:
+        link, target = f"{out}/{t}.parquet", f"{tiled}/{t}.parquet"
+        if t == "documents" or (os.path.islink(link) and os.readlink(link) == target):
+            continue
+        if os.path.lexists(link):  # dangling or stale: the tiling was rebuilt
+            os.unlink(link)
+        os.symlink(target, link)
+    return out
+
+
 def ivf_index(spark: SparkSession, sf: str) -> tuple[str, float]:
     """The persisted IVF index over ``sf``'s embeddings, built once per
     source fingerprint, and the seconds this call spent building it
@@ -138,22 +194,17 @@ def session(
 ) -> SparkSession:
     """The harness session: ``SHUFFLE_PARTITIONS`` shuffle partitions and,
     unless ``split`` is None, scan splits of ``split`` bytes over 32 leaf
-    tasks, pinned so no operator's ``tune`` reverts them. AQE stays on:
-    it is the engine's posture, and under full re-execution it measured
+    tasks (no operator's ``tune`` touches either conf). AQE stays on: it
+    is the engine's posture, and under full re-execution it measured
     neutral to positive at every scale (PLANS.md round-9)."""
-    from aced_etl_pod_spark.session import get_spark, pin
+    from aced_etl_pod_spark.session import get_spark
 
     spark = get_spark(
         app, shuffle_partitions=SHUFFLE_PARTITIONS, extra_confs=extra_confs
     )
     if split is not None:
-        pin(
-            spark,
-            {
-                "spark.sql.files.maxPartitionBytes": split,
-                "spark.sql.leafNodeDefaultParallelism": "32",
-            },
-        )
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", "32")
     return spark
 
 

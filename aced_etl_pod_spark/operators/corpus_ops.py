@@ -45,6 +45,7 @@ from aced_etl_pod_spark.operators.util import (
     money_sql,
 )
 from aced_etl_pod_spark.registry import op
+from aced_etl_pod_spark.session import scoped_confs
 from aced_etl_pod_spark.tables import fixture, load, session_scratch_dir
 
 # Sliding-window chunking: CHUNK_TOKENS-token windows every CHUNK_STRIDE
@@ -1507,14 +1508,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in scoped.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, scoped):
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_quantity"
         )
@@ -1535,12 +1529,6 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = agg.collect()  # force planning + execution inside the scope
         BLOOM_LAST_PLAN["plan"] = agg._jdf.queryExecution().executedPlan().toString()
         return spark.createDataFrame(rows, agg.schema)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # -- Round-5: URL canonicalization dedup -----------------------------------

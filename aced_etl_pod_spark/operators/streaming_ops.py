@@ -29,6 +29,7 @@ from aced_etl_pod_spark.operators.util import (
 )
 from aced_etl_pod_spark.registry import op
 from aced_etl_pod_spark.streaming.replay import (
+    capped_partitions,
     materialize_batches,
     read_stream,
     run_foreach_batch,
@@ -958,14 +959,7 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("event_id") % 1000).cast("long")).alias("id_residue"),
         )
     )
-    # Same scoped shuffle-partition cap as replay.run_to_memory: the state
-    # store pins its partitioning at query start, and a foreign session's
-    # default of 200 would mean 200 state files per micro-batch here.
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        spark.conf.set(key, str(min(int(prev), max(cores, 8))))
+    with capped_partitions(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName("t_state_reader")
@@ -977,8 +971,6 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(key, prev)
 
     state = spark.read.format("statestore").load(chk)
     meta = (

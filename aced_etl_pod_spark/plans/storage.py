@@ -93,7 +93,8 @@ def scd2_merge(base: DataFrame, updates: DataFrame, key: str, ts_new: str) -> Da
     the three base scans parallelize. The op's 4.38× x40 ladder ratio is
     a COLLECT-transfer artifact (709 k result rows through the driver),
     not a plan gap: compute-vs-compute is at parity with DuckDB
-    (tools/longtail_ladder.py + the r13 noop A/B in OPTIMIZATION_r13.md).
+    (the x40 long-tail ladder row + the r13 noop A/B, both in
+    OPTIMIZATION_r13.md; re-run with tools/bench_ladder.py merge_scd2).
     """
     from pyspark.sql import functions as F
 

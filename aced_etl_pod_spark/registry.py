@@ -46,22 +46,8 @@ _REGISTRY: dict[str, Op] = {}
 # ahead of the oldest-first rotation (round-13 verdict item 2). Entry =
 # (op_id, round the change needs a row in); the entry is inert once a row
 # from that round (or later) lands, so the steady-state rotation resumes
-# untouched.
-#   * text_line_dedup_c4 / fn_json: r12 rewrites (regexp_extract_all spans,
-#     try_cast hardening) were verified by driver-run pytest only.
-#   * the three r13 quadratic-block hardenings (degenerate-block caps /
-#     degree orientation) change code the sweeps alone guard.
-_CHANGED_OPS_PENDING = (
-    ("text_line_dedup_c4", 13),
-    ("fn_json", 13),
-    ("dedup_levenshtein_pairs", 13),
-    ("sim_knn_all_pairs_topk", 13),
-    ("graph_triangle_count", 13),
-    # r13 session-2 longtail lever (plan rewrite, results proven equal
-    # to the old shape + oracle at sf0.001/0.01 before shipping; the
-    # merge_scd2 single-pass twin was measured NEGATIVE and reverted):
-    ("pipeline_corpus_curation", 13),
-)
+# untouched. Empty while every changed op has its row.
+_CHANGED_OPS_PENDING: tuple[tuple[str, int], ...] = ()
 
 # Operator-family modules; importing them runs the @op decorators.
 _MODULES = (

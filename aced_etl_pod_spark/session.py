@@ -10,6 +10,7 @@ and the ones that matter for oracle parity (UTC session timezone, Arrow).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -51,37 +52,34 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
-# Per-application conf pins: keys a harness (bench, a test) has explicitly
-# overridden on a session. ``tune`` must not clobber these — every operator
-# entry point calls ``tune``, so without pinning a bench-level
-# "adaptive.enabled=false" would silently revert inside the first query.
-_PINNED: dict[str, dict[str, str]] = {}
-
-
-def pin(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
-    """Set confs on ``spark`` and mark them immune to ``tune`` overwrites."""
-    app_id = spark.sparkContext.applicationId
-    pinned = _PINNED.setdefault(app_id, {})
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-        pinned[k] = v
-    return spark
-
-
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-mutable confs to an existing session (idempotent)."""
-    try:
-        pinned = _PINNED.get(spark.sparkContext.applicationId, {})
-    except Exception:
-        pinned = {}
+    """Set the ``RUNTIME_CONF`` keys on an existing session (idempotent).
+    No other conf is touched, so a harness's own settings survive every
+    operator entry point."""
     for k, v in RUNTIME_CONF.items():
-        if k in pinned:
-            continue
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in this deployment; builder-level conf covers it
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the body of the ``with`` only: on exit, even by an
+    exception, each key gets its previous value back, or is unset when it
+    had none."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _default_driver_mem() -> str:

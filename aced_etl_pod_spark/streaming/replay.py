@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aced_etl_pod_spark.session import scoped_confs
 from aced_etl_pod_spark.tables import load, session_scratch_dir
 
 EVENTS_STREAM_SCHEMA = T.StructType(
@@ -113,26 +114,30 @@ def read_stream(
     )
 
 
+def capped_partitions(spark: SparkSession):
+    """``spark.sql.shuffle.partitions`` capped at max(cores, 8) for the body
+    of the ``with`` only.
+
+    A stateful streaming query pins its state-store partitioning to that
+    conf AT START (AQE never applies to streaming), so a foreign session's
+    default of 200 means 200 state files per micro-batch on a laptop-sized
+    replay. On a real cluster the session owner's value (or a checkpoint's
+    existing partitioning) governs, as it should. Hold the cap until the
+    replay drains: the stream execution thread reads the conf when it
+    initializes, which races a restore right after ``start()``."""
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    cap = min(int(spark.conf.get(key)), max(cores, 8))
+    return scoped_confs(spark, {key: str(cap)})
+
+
 def run_to_memory(result: DataFrame, query_name: str, output_mode: str) -> DataFrame:
     """Run a streaming computation to completion against the memory sink and
     return the final table. ``processAllAvailable`` drains every pending
-    micro-batch synchronously — deterministic replay, then stop.
-
-    A stateful streaming query pins its state-store partitioning to
-    ``spark.sql.shuffle.partitions`` AT START (AQE never applies to
-    streaming), so a foreign session's default of 200 means 200 state files
-    per micro-batch on a laptop-sized replay. The conf is capped for the
-    duration of ``start()`` only and restored after — scoped, not a session
-    mutation. On a real cluster the session owner's value (or a checkpoint's
-    existing partitioning) governs, as it should."""
+    micro-batch synchronously — deterministic replay, then stop. Runs
+    under :func:`capped_partitions`."""
     spark = result.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        # Held until the replay drains: the stream execution thread reads the
-        # conf when it initializes, which races a restore-right-after-start.
-        spark.conf.set(key, str(min(int(prev), max(cores, 8))))
+    with capped_partitions(spark):
         q = (
             result.writeStream.outputMode(output_mode)
             .format("memory")
@@ -143,25 +148,16 @@ def run_to_memory(result: DataFrame, query_name: str, output_mode: str) -> DataF
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(key, prev)
     return spark.table(query_name)
 
 
 def run_foreach_batch(result: DataFrame, sink_fn) -> None:
     """Run a stream through foreachBatch to completion (exactly-once style
-    incremental sink, fhir_import_export.py:288 upsert generalized).
-    Same scoped shuffle-partition cap as :func:`run_to_memory`."""
-    spark = result.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        spark.conf.set(key, str(min(int(prev), max(cores, 8))))
+    incremental sink, fhir_import_export.py:288 upsert generalized), under
+    :func:`capped_partitions`."""
+    with capped_partitions(result.sparkSession):
         q = result.writeStream.foreachBatch(sink_fn).outputMode("update").start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(key, prev)

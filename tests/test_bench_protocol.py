@@ -164,3 +164,27 @@ def test_compare_at_scale_money_rule():
     assert compare_at_scale(spark().iloc[1:], duck)
     nulls = duck.assign(revenue=[1.234567e11, 9.87e10, None]).astype({"revenue": object})
     assert compare_at_scale(nulls, duck) == []
+
+
+def test_scoped_confs_restore_on_error_and_tune_keeps_harness_confs(spark):
+    """``session.scoped_confs`` puts every conf back when the body raises:
+    a key that had a value gets it back, a key that had none is unset
+    again. ``tune``, which every operator entry point calls, writes only
+    ``RUNTIME_CONF``, so the ladder's scan-split conf survives it."""
+    import pytest
+
+    from aced_etl_pod_spark.session import RUNTIME_CONF, scoped_confs, tune
+
+    held, fresh = "spark.sql.shuffle.partitions", "spark.graft.test.scoped"
+    split = "spark.sql.files.maxPartitionBytes"
+    assert split not in RUNTIME_CONF
+    before = spark.conf.get(held)
+    assert spark.conf.get(fresh, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_confs(spark, {held: "3", fresh: "on", split: "4m"}):
+            tune(spark)
+            assert spark.conf.get(split) == "4m"
+            assert (spark.conf.get(held), spark.conf.get(fresh)) == ("3", "on")
+            raise RuntimeError("the body failed")
+    assert spark.conf.get(held) == before
+    assert spark.conf.get(fresh, None) is None

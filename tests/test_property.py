@@ -1722,7 +1722,7 @@ def test_dispersion_estimator_divergence_pinned(events_env):
 
 def test_null_sweep_micro_divergences_pinned(events_env):
     """Sixteenth catalog class — the micro-divergences behind the
-    null-injection sweep's 104 failures (tools/null_sweep.py), pinned
+    null-injection sweep's 104 failures (tools/sweep.py --kind null), pinned
     independently of the operators that tripped over them:
       * size(split(NULL)) = -1 under non-ANSI Spark vs len(NULL) = NULL
         in DuckDB (and sequence() RAISES on the resulting bound);
@@ -1778,8 +1778,9 @@ def test_null_sweep_micro_divergences_pinned(events_env):
 
 def test_nonfinite_micro_divergences_pinned(events_env):
     """Seventeenth catalog class — the micro-divergences behind the
-    NaN/Infinity-injection sweep's 88 failures (tools/nonfinite_sweep.py),
-    pinned independently of the operators that tripped over them:
+    NaN/Infinity-injection sweep's 88 failures (tools/sweep.py --kind
+    nonfinite), pinned independently of the operators that tripped over
+    them:
       * CAST(NaN AS DECIMAL): DuckDB RAISES, non-ANSI Spark silently
         yields NULL — why every decimal sandwich carries the finite
         guard (operators/util.py::money / money_sql);
@@ -2145,7 +2146,7 @@ def test_ambiguous_fallback_wallclock_divergence_pinned(tz_env):
 
 def test_extreme_magnitude_micro_divergences_pinned(events_env):
     """Eighteenth-plus catalog class — the micro-divergences behind the
-    extreme-magnitude sweep's 42 failures (tools/extreme_sweep.py),
+    extreme-magnitude sweep's 42 failures (tools/sweep.py --kind extreme),
     pinned independently of the operators that tripped over them
     (docs/DIVERGENCES.md class 19):
 

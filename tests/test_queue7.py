@@ -2663,22 +2663,17 @@ def test_phash_exact_beside_a_quarantined_blob(spark):
 
     from aced_etl_pod_spark.functions.imagecodec import decode_ppm, phash64
     from aced_etl_pod_spark.operators import similarity as sim
+    from aced_etl_pod_spark.session import scoped_confs
     from aced_etl_pod_spark.sources.binary import generate_phash_fixture, read_binary
 
     packed = {
         "spark.sql.files.minPartitionNum": "1",
         "spark.sql.files.openCostInBytes": "0",
     }
-    saved = {k: spark.conf.get(k, None) for k in packed}
-    try:
-        for k, v in packed.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, packed):
         src = generate_phash_fixture()
         assert read_binary(spark, src, glob="*.ppm").rdd.getNumPartitions() == 1
         out = sim.dedup_image_phash(spark, SF_SMALL).toPandas()
-    finally:
-        for k, v in saved.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert out.decode_error.notnull().sum() == 1
     for f in glob.glob(os.path.join(src, "*.ppm")):
         bid = int(os.path.basename(f).split("_")[1])

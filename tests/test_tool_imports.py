@@ -102,22 +102,37 @@ def test_checkout_path_is_derived_not_literal():
     assert not literal, f"literal absolute checkout paths: {literal}"
 
 
+def _docstrings(tree: ast.AST) -> set[int]:
+    return {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+
+
 def _uses(names: set[str], allowed: set[str], tools: bool = True) -> list[str]:
-    """``file:line name`` for every import or reference of ``names`` in
-    the package (and tools/, unless ``tools`` is False) outside the
-    ``allowed`` files. A dotted name such as ``read.parquet`` matches an
-    attribute chain ending in it."""
+    """``file:line name`` for every import, reference or string literal
+    (docstrings aside) of ``names`` in the package (and tools/, unless
+    ``tools`` is False) outside the ``allowed`` files. A dotted name such
+    as ``read.parquet`` matches an attribute chain ending in it."""
     sites = []
     paths = PACKAGE + (glob.glob(os.path.join(TOOLS, "*.py")) if tools else [])
     for rel, tree in _parsed(paths):
         if rel in allowed:
             continue
+        docs = _docstrings(tree)
         for node in ast.walk(tree):
-            found = (
-                [a.name for a in node.names]
-                if isinstance(node, ast.ImportFrom)
-                else [getattr(node, "attr", getattr(node, "id", None))]
-            )
+            if isinstance(node, ast.Constant):
+                found = [node.value] if id(node) not in docs else []
+            elif isinstance(node, ast.ImportFrom):
+                found = [a.name for a in node.names]
+            else:
+                found = [getattr(node, "attr", getattr(node, "id", None))]
             if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Attribute):
                 found.append(f"{node.value.attr}.{node.attr}")
             sites += [f"{rel}:{node.lineno} {n}" for n in found if n in names]
@@ -163,3 +178,12 @@ def test_parquet_reads_go_through_read_parquet():
     }
     sites = _uses({"read.parquet"}, allowed, tools=False)
     assert not sites, f"parquet reads outside tables.read_parquet: {sites}"
+
+
+def test_only_session_sizes_the_driver_heap():
+    """``session.get_spark`` sizes the heap from ``SPARK_DRIVER_MEM``, else
+    half of RAM; a harness that sets ``spark.driver.memory`` itself can
+    ask a small machine for more memory than it has."""
+    session = os.path.join("aced_etl_pod_spark", "session.py")
+    sites = _uses({"spark.driver.memory"}, {session})
+    assert not sites, f"driver heap set outside session.py: {sites}"

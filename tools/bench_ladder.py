@@ -11,13 +11,24 @@ SAME parquet files, reporting warm medians and the ratio at a scale
 where compute dominates. Without op ids it runs the ten headline
 queries (``ladder.HEADLINE``) plus the q8 serving extra; with op ids it
 runs those registered ops instead, which is how two variants of one
-query are A/B'd on the ladder.
+query are A/B'd on the ladder. The dedup ops that verbatim replicas blow
+up (``ladder.QUADRATIC``) run on the content-perturbed tiling
+(``ladder.perturbed``) against DuckDB over that dir. For example:
+
+    python tools/bench_ladder.py --scale 40 --reps 3 text_tfidf_topk \\
+        decontaminate_ngram_overlap dedup_cluster_cc \\
+        pipeline_corpus_curation merge_scd2          # the long tail
+    python tools/bench_ladder.py --scale 10 --reps 3 dedup_minhash_lsh \\
+        text_line_dedup_c4 dedup_incremental_minhash  # the dedup family
 
 Before any timing, each Spark result is checked once against its oracle
 with ``oracle.compare_at_scale`` (keys and counts exact, floats within
-1e-12 relative); a mismatch is reported in the op's row and the exit
-code is 1. Timing follows ``ladder``'s protocol (plan built once, fresh
-QueryExecution per sample, 2 warmups, round-robin samples, medians).
+1e-12 relative) and its row count and plan-construction time printed
+(an op that computes at construction, such as connected components'
+checkpointed label rounds, is timed below without that work); a mismatch
+is reported in the op's row and the exit code is 1. Timing follows ``ladder``'s protocol
+(plan built once, fresh QueryExecution per sample, 2 warmups,
+round-robin samples, medians).
 DuckDB gets the whole machine (its default all-core thread pool) and
 reads the identical files, so the ratio is engine-vs-engine on equal
 terms.
@@ -29,6 +40,7 @@ import argparse
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -67,30 +79,37 @@ def run(
         scale = 0
         print(f"tiled dir: {sf}", flush=True)
 
-    # 64 GB heap for the at-scale ladder (round-11): the default 32 GB
-    # GC-throttles the 10-query mix at x800 — q1/q6's allocation
-    # pressure raises old-gen occupancy until the bucketed scans' big
-    # tasks absorb mixed-GC pauses, inflating q2/q4 2-4x IN THE MIX
-    # while their isolated A/Bs stay fast (diagnosed via per-rep sample
-    # growth: 3.0 -> 6.0 -> 6.6 s). DuckDB's default budget on this box
-    # is ~100 GB (80% of RAM), so 64 GB keeps the comparison on equal
-    # terms rather than handicapping one engine. Env-overridable.
-    spark = ladder.session(
-        "bench-ladder",
-        extra_confs={
-            "spark.driver.memory": os.environ.get("SPARK_LADDER_MEM", "64g")
-        },
-    )
+    # heap: SPARK_DRIVER_MEM, else half of RAM (session.get_spark); the
+    # x800 mix wants 64g or GC pauses inflate it (PLANS.md round-11)
+    spark = ladder.session("bench-ladder")
     reg = registry()
-    con = duck_con(sf)
     queries = dict(ladder.HEADLINE) if not ops else {o: o for o in ops}
-    dfs = {name: reg[op_id].fn(spark, sf) for name, op_id in queries.items()}
+    sfs = {
+        name: ladder.perturbed(DEFAULT_SF_DIR, scale)
+        if scale and op_id in ladder.QUADRATIC
+        else sf
+        for name, op_id in queries.items()
+    }
+    cons = {d: duck_con(d) for d in set(sfs.values())}
+    dfs, built = {}, {}
+    for name, op_id in queries.items():
+        t0 = time.perf_counter()
+        dfs[name] = reg[op_id].fn(spark, sfs[name])
+        built[name] = time.perf_counter() - t0
     sqls = {name: reg[op_id].oracle for name, op_id in queries.items()}
-    duck = {name: (lambda q=q: con.execute(q).fetchall()) for name, q in sqls.items()}
+    duck = {
+        name: (lambda q=q, c=cons[sfs[name]]: c.execute(q).fetchall())
+        for name, q in sqls.items()
+    }
 
     mismatch = {}
     for name, df in dfs.items():
-        errs = compare_at_scale(df.toPandas(), con.execute(sqls[name]).df())
+        got = df.toPandas()
+        errs = compare_at_scale(got, cons[sfs[name]].execute(sqls[name]).df())
+        print(
+            f"checked {name}: {len(got)} rows, plan built in {built[name]:.2f} s",
+            flush=True,
+        )
         if errs:
             print(f"MISMATCH {name}: {'; '.join(errs)}", flush=True)
             mismatch[name] = errs
@@ -151,7 +170,7 @@ def run(
         # q8 SERVING extra (not in the totals): the persisted-IVF probe
         # vs DuckDB's exact scan of the same tiled embeddings. The index
         # is built once per tiled dir (amortized cost printed).
-        out["extra"] = _serve_extra(spark, con, sf, reg, reps)
+        out["extra"] = _serve_extra(spark, cons[sf], sf, reg, reps)
     print(json.dumps(out))
     return 1 if mismatch else 0
 
