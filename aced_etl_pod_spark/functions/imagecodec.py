@@ -202,7 +202,3 @@ def phash64(img: np.ndarray) -> int:
         if v > med:
             bits |= 1 << j
     return bits
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")

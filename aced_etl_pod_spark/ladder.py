@@ -52,13 +52,15 @@ KEY_OFFSETS = {
 CONST_DIMS = ["nation", "region"]  # 25/5 rows at EVERY scale factor
 
 # The ten headline queries (BASELINE.md B1-B10) and the op each runs.
-# Several ops dispatch on table size, so the ladder times a different
-# plan than sf0.1 does: q4 reads the bucketed custkey layout past 1 M
-# orders (r11), q7 switches to the Arrow token kernel past 100 k docs
-# (r10), q8 to the Arrow cosine kernel at scale (r12), q10 to the bitmask
-# plan past 1 M events (r11). q6 takes the anchored-regex fast path for
-# single-key envelopes (r11) and q9 is the no-EXPAND rollup (r10, 1.6x at
-# x200). PLANS.md has each round's numbers.
+# Most ops dispatch on a footer row count, so the ladder times a
+# different plan than sf0.1 does: past their knees q1, q2, q5 and q9 read
+# ingest-time summaries and q6 the shredded column (r12), q4 the bucketed
+# custkey layout (r11), q7 the Arrow token kernel and then its ingest
+# layout (r10, r12), q8 the packed float32 layout (r12), and q10 the
+# bitmask plan and then the per-user mask table (r11, r12). q6 takes the
+# anchored-regex fast path for single-key envelopes (r11) and q9 is the
+# no-EXPAND rollup (r10). docs/SCALE.md §27 lists every knee and the
+# ladder row behind it.
 HEADLINE = {
     "q1_pricing_summary": "agg_group_sums",
     "q2_star_join": "join_multiway_star",
@@ -249,6 +251,23 @@ def sample(
         for name, leg in legs.items():
             out.setdefault(name, []).append(clock(leg))
     return out
+
+
+def jobs_in_group(spark: SparkSession, group: str, fn: Callable[[], object]):
+    """Run ``fn`` under job group ``group``; return the ids of the jobs in
+    that group and of the jobs it started with no group, read once the
+    listener bus has delivered every event they posted."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return tracker.getJobIdsForGroup(group), set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
 def medians(samples: dict[str, list[float]]) -> dict[str, float]:

@@ -76,23 +76,18 @@ def agg_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residue was pure hash-agg kernel constants over 480 M rows).
     Below the knee the plain scan is at the job floor and the one-time
     summary build doesn't amortize. Same oracle either way; row count
-    from parquet footers; a degenerate summary (group count comparable
-    to row count — e.g. near-unique timestamps) disables the dispatch
-    via the fixture's _DEGENERATE marker."""
-    import os
-
+    from parquet footers."""
     from aced_etl_pod_spark.tables import table_row_count
 
     if table_row_count(sf_dir, "lineitem") >= 4_000_000:
-        path = _q1_summary_fixture(spark, sf_dir)
-        if not os.path.exists(os.path.join(path, "_DEGENERATE")):
-            return agg_group_sums_summary_ingest(spark, sf_dir)
+        return agg_group_sums_summary_ingest(spark, sf_dir)
     return _q1_plain_scan(spark, sf_dir)
 
 
 def _q1_plain_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The undispatched q1 scan plan (one exchange, 8 guarded measures) —
-    kept callable for the A/B tool and the below-knee regime."""
+    the below-knee regime, and the reference the summary path is tested
+    against."""
     li = load(spark, sf_dir, "lineitem")
     disc_price = finite(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     charge = finite(
@@ -135,26 +130,21 @@ def _q1_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     columns filters summary rows precisely (no boundary-day residual
     scan), and the group count is bounded by the date-span × 6 flag
     combos (~15 k here), independent of row count: re-aggregating the
-    summary is metadata-priced at any corpus size.
-
-    Degenerate guard: if the group count is more than half the base row
-    count (near-unique timestamps — the regime where a summary is just
-    a copy), a _DEGENERATE marker is published and the dispatcher keeps
-    the plain scan. Published through :func:`tables.fixture`."""
-    from aced_etl_pod_spark.tables import fixture, table_row_count
+    summary is metadata-priced at any corpus size. With near-unique
+    timestamps the summary is at most a copy of the scan's input, and
+    still answers exactly. Published through :func:`tables.fixture`."""
+    from aced_etl_pod_spark.tables import fixture
 
     def build(tmp):
-        summary = (
+        (
             _q1_partials(load(spark, sf_dir, "lineitem"))
             # one small file, sorted on the hot predicate column so the
             # footer min/max enable row-group pruning on date filters
             .coalesce(1)
             .sortWithinPartitions("l_shipdate")
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/summary")
         )
-        summary.write.mode("overwrite").parquet(f"{tmp}/summary")
-        n_groups = read_parquet(spark, f"{tmp}/summary").count()
-        if n_groups * 2 >= max(table_row_count(sf_dir, "lineitem"), 1):
-            open(f"{tmp}/_DEGENERATE", "w").close()
 
     return fixture("q1sum_lineitem", sf_dir, ("lineitem.parquet",), build)
 
@@ -214,7 +204,7 @@ def agg_group_sums_summary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def q1_summary_answer(spark: SparkSession, path: str) -> DataFrame:
     """The q1 re-aggregation over a pricing-summary fixture at ``path`` —
-    shared by the ingest op and the delta-merge A/B (any fixture whose
+    shared by the ingest op and the delta-merge tests (any fixture whose
     partials re-sum to the same totals answers identically)."""
     s = read_parquet(spark, f"{path}/summary")
     f = s.filter(
@@ -293,11 +283,16 @@ def agg_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_events = table_row_count(sf_dir, "events")
     if n_events >= 4_000_000:
-        if _user_mask_fixture(spark, sf_dir) is not None:
-            return agg_distinct_count_mask_ingest(spark, sf_dir)
-        return agg_distinct_count_bitmask(spark, sf_dir)  # >62 types
+        return agg_distinct_count_mask_ingest(spark, sf_dir)
     if n_events >= 1_000_000:
         return agg_distinct_count_bitmask(spark, sf_dir)
+    return _q10_pair_plan(spark, sf_dir)
+
+
+def _q10_pair_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undispatched q10 plan: dedup the (user_id, event_type) pairs,
+    then count over them — the below-knee regime, and the exact fallback
+    of both mask plans when the type domain exceeds 62."""
     e = load(spark, sf_dir, "events")
     pairs = e.groupBy("user_id", "event_type").agg(F.lit(1).alias("_one"))
     return pairs.agg(
@@ -370,15 +365,15 @@ def agg_distinct_count_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB 3.16x -> 1.49x at x800. The in-plan dictionary variant
     (distinct+broadcast join, no cache) measured SLOWER than the pair
     plan both scales — the dictionary must be metadata, not a per-query
-    subquery. Falls back to agg_distinct_count when the type domain
-    exceeds 62 (bitmask width)."""
+    subquery. Falls back to the pair plan (:func:`_q10_pair_plan`) when
+    the type domain exceeds 62 (bitmask width)."""
     from aced_etl_pod_spark.tables import fixture_name
 
     types = _event_type_dictionary(
         sf_dir, fixture_name("types", sf_dir, "events.parquet")
     )
     if len(types) > 62:
-        return agg_distinct_count(spark, sf_dir)
+        return _q10_pair_plan(spark, sf_dir)
     return mask_table_counts(_user_masks(load(spark, sf_dir, "events"), types))
 
 
@@ -446,18 +441,18 @@ def agg_distinct_count_mask_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     agg_distinct_count_bitmask's final stage; only the mask derivation
     moved to ingest. The oracle recomputes from BASE events, so the
     hash check proves the persisted masks round-trip the distincts.
-    Falls back to the exact pair plan when the type domain exceeds the
-    62-bit mask width (fixture returns None)."""
+    Falls back to the exact pair plan (:func:`_q10_pair_plan`) when the
+    type domain exceeds the 62-bit mask width (fixture returns None)."""
     path = _user_mask_fixture(spark, sf_dir)
     if path is None:
-        return agg_distinct_count(spark, sf_dir)
+        return _q10_pair_plan(spark, sf_dir)
     return mask_table_counts(read_parquet(spark, f"{path}/masks"))
 
 
 def mask_table_counts(per_user: DataFrame) -> DataFrame:
     """The three exact distinct counts from a per-user mask table — the
     final stage shared by the mask-ingest op, the bitmask plan's algebra
-    and the delta-merge A/B (any two mask tables whose bit_counts agree
+    and the delta-merge tests (any two mask tables whose bit_counts agree
     per user produce identical counts, whatever their bit assignment)."""
     return per_user.agg(
         F.sum(

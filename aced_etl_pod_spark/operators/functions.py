@@ -380,9 +380,11 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     same footer-count dispatch q1/q7 ship. The r10/r11 rounds kept
     fn_json on the parse path to keep the parse kernel measurable; that
     role now belongs to the explicitly-pinned kernel ops
-    (fn_json_variant and the A/B tool's pure/regex/integer tiers),
-    while the PUBLIC op serves queries the way a 100 TB deployment
-    actually would — columnar, parsed once at landing. Below the knee
+    (fn_json_variant, and json_key_double_fastpath's regex/integer
+    tiers, measured in PLANS.md "Round-11 (post-verdict session): q6
+    kernel" and "q6 tier 2"), while the PUBLIC op serves queries the
+    way a 100 TB deployment actually would — columnar, parsed once at
+    landing. Below the knee
     the one-time shred doesn't amortize and the kernel plan stays."""
     from aced_etl_pod_spark.tables import table_row_count
 

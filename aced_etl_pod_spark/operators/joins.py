@@ -49,54 +49,28 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately: same result, one broadcast build + one BHJ fewer per run
     (measured 72 → 48 ms at sf0.1).
 
-    customer scales with the fact table, and its join strategy is
-    SIZE-DISPATCHED (round 10, the q7-kernel idiom): past ~100 k
-    customers the plan hints SHUFFLE_HASH on the customer side — under
-    the 10 MB threshold Catalyst still picks BHJ there (the pruned
-    2-column customer compresses under it), but building a multi-
-    million-key HashedRelation on the driver per execution loses to a
-    32-way shuffled build (measured: SHJ 0.42 s vs BHJ 0.58 s at x10,
-    1.78 vs 2.60 s at x200 — 31%; BHJ keeps winning below the knee,
-    0.21 vs 0.23 s at sf0.1). The hinted side is a construction
-    invariant — customer is the 1 side of a 1:N fact join, always the
-    smaller input — and at real scale AQE would have to abandon the
-    broadcast anyway; the dispatch just stops the driver-side build
-    from growing with the corpus. The dispatch count comes from parquet
-    FOOTERS read driver-side (tables.table_row_count, cached per file
-    mtime and size) — a df.count() here would be a real scan job at plan time,
-    not metadata (round-11 advice; aggregatePushdown is off).
-
     SUMMARY-LAYOUT dispatch since round 12 (optimization session 2):
     past ~1 M orders the op answers from the ingest-time per-nationkey
     partial-aggregate summary (join_multiway_star_summary_ingest — the
     q1 storage-layer idiom; the query groups to <= 25 nation rows, so
-    it is summary-shaped). The r11 bucketed-layout plan stays as the
-    fallback for a degenerate summary (near-unique nationkey domain),
-    and the shuffle_hash size dispatch remains the mid-scale posture
-    (100 k..1 M customers, no layout yet). Same oracle on every path."""
-    import os
-
+    it is summary-shaped). Below the knee the plain star join runs.
+    The dispatch count comes from parquet FOOTERS read driver-side
+    (tables.table_row_count) — a df.count() here would be a real scan
+    job at plan time. Same oracle on both paths."""
     from aced_etl_pod_spark.operators.scale_ops import (
-        _q2_summary_fixture,
-        join_multiway_star_bucketed,
         join_multiway_star_summary_ingest,
     )
     from aced_etl_pod_spark.tables import table_row_count
 
     if table_row_count(sf_dir, "orders") >= 1_000_000:
-        path = _q2_summary_fixture(spark, sf_dir)
-        if not os.path.exists(os.path.join(path, "_DEGENERATE")):
-            return join_multiway_star_summary_ingest(spark, sf_dir)
-        return join_multiway_star_bucketed(spark, sf_dir)
+        return join_multiway_star_summary_ingest(spark, sf_dir)
     return _q2_plain_star(spark, sf_dir)
 
 
 def _q2_plain_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The undispatched q2 star-join plan (broadcast dims + size-
-    dispatched customer join) — kept callable for the A/B tools and the
-    below-knee regime."""
-    from aced_etl_pod_spark.tables import table_row_count
-
+    """The undispatched q2 star-join plan (broadcast dims, Catalyst's
+    choice of customer join) — the below-knee regime, and the reference
+    the summary path is tested against."""
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -104,13 +78,8 @@ def _q2_plain_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     nr = nation.join(region, nation.n_regionkey == region.r_regionkey).select(
         "n_nationkey", "n_name", "r_name"
     )
-    cust_side = (
-        customer.hint("shuffle_hash")
-        if table_row_count(sf_dir, "customer") >= 100_000
-        else customer
-    )
     return (
-        orders.join(cust_side, orders.o_custkey == customer.c_custkey)
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nr), customer.c_nationkey == nr.n_nationkey)
         .groupBy("r_name", "n_name")
         .agg(
@@ -249,8 +218,13 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB 6.8x -> 1.71x, one-time layout write 16 s at x200,
     fingerprint-cached). Below the knee the plain Catalyst plan wins —
     at the sf0.1 job floor the 32-bucket scan + catalog round-trip cost
-    more than the exchange they remove. Same oracle either way; the
-    dispatch count is a parquet-footer read (no hidden scan)."""
+    more than the exchange they remove. Re-measured on 4 cores
+    (tools/bench_ladder.py, isolated medians, plain vs bucketed): x10
+    (1.5 M orders) 0.635 vs 0.299 s, x40 (6 M) 1.221 vs 0.383 s; the
+    cold layout build made the first construction 8.1 s at x10 and
+    12.0 s at x40, against 2.2-2.3 s for the plain plan. Same oracle
+    either way; the dispatch count is a parquet-footer read (no hidden
+    scan)."""
     from aced_etl_pod_spark.operators.scale_ops import join_left_semi_bucketed
     from aced_etl_pod_spark.tables import table_row_count
 

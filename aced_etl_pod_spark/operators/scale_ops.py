@@ -278,19 +278,12 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
     size; the dim join stays at QUERY time (dims are the mutable side
     of a star — the summary never bakes in n_name/r_name text).
 
-    Degenerate guard (r12 ADVICE, both items closed r13): the bound is
-    min(orders, CUSTOMER) rows — the nationkey domain lives on customer,
-    so comparing group count to orders alone never fires when
-    orders >> customers and a ~|customer|-row summary would slip
-    through. And the guard now runs as a cheap PROBE (distinct nationkey
-    over the 2-column customer projection) BEFORE the orders⋈customer
-    summary join, so the degenerate regime never pays a full aggregation
-    job just to discard it: a probe-flagged fixture publishes the
-    _DEGENERATE marker with no summary files and the dispatcher keeps
-    the bucketed join (the summary op itself falls back the same way).
+    Whatever the key domain, the summary has at most one row per
+    distinct nationkey, so re-aggregating it never reads more rows than
+    the orders⋈customer join it replaces, and it answers exactly.
     Published through :func:`tables.fixture`."""
     from aced_etl_pod_spark.operators.util import finite
-    from aced_etl_pod_spark.tables import fixture, table_row_count
+    from aced_etl_pod_spark.tables import fixture
 
     def build(tmp):
         orders = load(spark, sf_dir, "orders").select(
@@ -299,33 +292,17 @@ def _q2_summary_fixture(spark: SparkSession, sf_dir: str) -> str:
         customer = load(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey"
         )
-        # the summary size is bounded by the nationkey domain, which lives
-        # on CUSTOMER — bound against min(orders, customer), and probe the
-        # domain before paying the summary join (r12 ADVICE)
-        bound = max(
-            min(
-                table_row_count(sf_dir, "orders"),
-                table_row_count(sf_dir, "customer"),
-            ),
-            1,
-        )
-        n_keys = customer.select("c_nationkey").distinct().count()
-        if n_keys * 2 >= bound:
-            open(f"{tmp}/_DEGENERATE", "w").close()
-        else:
-            summary = (
-                orders.join(customer, orders.o_custkey == customer.c_custkey)
-                .groupBy("c_nationkey")
-                .agg(
-                    F.sum(finite(F.col("o_totalprice"))).alias("s"),
-                    F.count("*").alias("n"),
-                )
-                .coalesce(1)
+        (
+            orders.join(customer, orders.o_custkey == customer.c_custkey)
+            .groupBy("c_nationkey")
+            .agg(
+                F.sum(finite(F.col("o_totalprice"))).alias("s"),
+                F.count("*").alias("n"),
             )
-            summary.write.mode("overwrite").parquet(f"{tmp}/summary")
-            n_groups = read_parquet(spark, f"{tmp}/summary").count()
-            if n_groups * 2 >= bound:
-                open(f"{tmp}/_DEGENERATE", "w").close()
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/summary")
+        )
 
     return fixture(
         "q2sum_star", sf_dir, ("orders.parquet", "customer.parquet"), build
@@ -365,14 +342,8 @@ def join_multiway_star_summary_ingest(
     rows, so a dim edit never invalidates the layout. The oracle
     recomputes everything from the BASE tables, so the driver hash
     check proves the layout round-trips the full star — NULL custkeys,
-    finite-guard exclusions and all. A probe-flagged degenerate fixture
-    (r13: _DEGENERATE published without summary files) answers via the
-    bucketed plan — same query, same oracle."""
-    import os
-
+    finite-guard exclusions and all."""
     path = _q2_summary_fixture(spark, sf_dir)
-    if not os.path.isdir(os.path.join(path, "summary")):
-        return join_multiway_star_bucketed(spark, sf_dir)
     s = read_parquet(spark, f"{path}/summary")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")

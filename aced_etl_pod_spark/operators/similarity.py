@@ -325,8 +325,8 @@ def sim_knn_all_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_all_pairs_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The undispatched per-label all-pairs plan (kept callable for the
-    A/B tools and the below-knee regime)."""
+    """The undispatched per-label all-pairs plan (the below-knee
+    regime)."""
     emb = load(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("vec_id"), F.col("label"), F.col("embedding").alias("emb_a")

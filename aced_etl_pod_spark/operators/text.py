@@ -279,8 +279,9 @@ def _tokenize_ntok_arrow(batches):
     """Arrow token-count kernel: ``count_substring(text, ' ') + 1`` ==
     ``size(split(text, ' '))`` for every non-null string (a single-char
     delimiter yields separators+1 fields, empties included); null text
-    propagates to a null count. Shared by text_tokenize_stats' big-corpus
-    branch and the explicit text_tokenize_stats_arrow op."""
+    propagates to a null count. Used by the explicit
+    text_tokenize_stats_arrow op; text_tokenize_stats' big-corpus branch
+    runs :func:`_tokenize_partial_arrow` instead."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -9,7 +9,7 @@ security: a broadcast set of permitted project_ids applied as a filter.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -56,7 +56,3 @@ def readable_projects_filter(user: dict, all_project_ids: list[str]) -> Column:
     filter predicate (broadcast-small by construction)."""
     allowed = [p for p in all_project_ids if can_read(user, p)]
     return F.col("project_id").isin(allowed) if allowed else F.lit(False)
-
-
-def apply_row_security(df: DataFrame, user: dict, all_project_ids: list[str]) -> DataFrame:
-    return df.filter(readable_projects_filter(user, all_project_ids))

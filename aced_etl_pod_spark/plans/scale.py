@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aced_etl_pod_spark.session import tune
-from aced_etl_pod_spark.tables import scratch_dir
 
 
 def salted_group_count(
@@ -76,7 +75,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def bucketed_warehouse(spark: SparkSession) -> str:
-    return spark.conf.get("spark.sql.warehouse.dir", os.path.join(scratch_dir(), "wh"))

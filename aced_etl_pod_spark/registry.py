@@ -47,7 +47,17 @@ _REGISTRY: dict[str, Op] = {}
 # (op_id, round the change needs a row in); the entry is inert once a row
 # from that round (or later) lands, so the steady-state rotation resumes
 # untouched. Empty while every changed op has its row.
-_CHANGED_OPS_PENDING: tuple[tuple[str, int], ...] = ()
+#
+# Round 14: the size-dispatched q1/q2/q10 ops lost their degenerate-summary
+# probes and fallbacks, and q10's mask plans fall back to the pair plan.
+_CHANGED_OPS_PENDING: tuple[tuple[str, int], ...] = (
+    ("join_multiway_star", 14),
+    ("join_multiway_star_summary_ingest", 14),
+    ("agg_group_sums", 14),
+    ("agg_distinct_count", 14),
+    ("agg_distinct_count_bitmask", 14),
+    ("agg_distinct_count_mask_ingest", 14),
+)
 
 # Operator-family modules; importing them runs the @op decorators.
 _MODULES = (

@@ -11,6 +11,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from aced_etl_pod_spark.ladder import jobs_in_group  # noqa: F401  (tests import it from here)
 from aced_etl_pod_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -28,23 +29,6 @@ def assert_gated(*pairs):
     for fn, oracle in pairs:
         assert fn in ops, f"{fn.__name__} is not registered"
         assert ops[fn].oracle == oracle, f"{fn.__name__}: oracle differs"
-
-
-def jobs_in_group(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return the ids of the jobs in
-    that group and of the jobs it started with no group, read once the
-    listener bus has delivered every event they posted."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return tracker.getJobIdsForGroup(group), set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
 @pytest.fixture(scope="session")

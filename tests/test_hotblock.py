@@ -1,6 +1,6 @@
 """Round-13 quadratic-block hardenings (verdict item 1) + the q2
-degenerate-probe ADVICE fix: focused pins for the three ops whose skew
-discipline changed, each asserting result-equivalence (and, where the
+summary on a near-unique nationkey domain: focused pins for the ops
+whose skew discipline changed, each asserting result-equivalence (and, where the
 semantics gained a declared cap, Spark == DuckDB oracle in lockstep on
 an input that TRIGGERS the cap — the sf dirs never do)."""
 
@@ -133,12 +133,18 @@ def test_triangle_degree_orientation_bounds_hub_wedges(spark):
 
 
 def test_q2_degenerate_probe_short_circuits(spark, tmp_path):
-    """r12 ADVICE both items: a near-unique nationkey domain is flagged
-    _DEGENERATE by the cheap customer-projection probe BEFORE any
-    summary join runs (no summary files exist), the guard bounds against
-    min(orders, customer) rather than orders alone, and the summary op
-    falls back to the bucketed plan with identical results."""
-    from aced_etl_pod_spark.operators.joins import _q2_plain_star
+    """A near-unique nationkey domain no longer needs a probe: the
+    summary holds at most one row per distinct nationkey, so it is never
+    larger than the orders-customer join it replaces and still answers
+    exactly. The fixture always writes its summary (no degenerate
+    marker, no distinct-key job), and both the summary op and the
+    dispatched op above the 1 M-order knee equal the plain star join."""
+    from unittest import mock
+
+    from aced_etl_pod_spark.operators.joins import (
+        _q2_plain_star,
+        join_multiway_star,
+    )
     from aced_etl_pod_spark.operators.scale_ops import (
         _q2_summary_fixture,
         join_multiway_star_summary_ingest,
@@ -147,9 +153,9 @@ def test_q2_degenerate_probe_short_circuits(spark, tmp_path):
     sf = _sf_dir_with(
         tmp_path,
         {
-            # orders >> customers so the OLD orders-count bound would
-            # never fire; the nationkey domain is near-unique per
-            # customer (25 joinable keys + a long synthetic tail)
+            # orders >> customers, and the nationkey domain is near-
+            # unique per customer (25 joinable keys + a long synthetic
+            # tail)
             "orders": """
             SELECT i AS o_orderkey, (i % 400) AS o_custkey,
                    'O' AS o_orderstatus, 100.0 + i AS o_totalprice,
@@ -165,11 +171,11 @@ def test_q2_degenerate_probe_short_circuits(spark, tmp_path):
             """,
         },
     )
+    plain = _srt(_q2_plain_star(spark, sf))
+    assert _srt(join_multiway_star_summary_ingest(spark, sf)) == plain
+    with mock.patch(
+        "aced_etl_pod_spark.tables.table_row_count", return_value=1_000_000
+    ):
+        assert _srt(join_multiway_star(spark, sf)) == plain
     path = _q2_summary_fixture(spark, sf)
-    assert os.path.exists(os.path.join(path, "_DEGENERATE"))
-    assert not os.path.isdir(os.path.join(path, "summary")), (
-        "probe must short-circuit before the summary join is paid"
-    )
-    assert _srt(join_multiway_star_summary_ingest(spark, sf)) == _srt(
-        _q2_plain_star(spark, sf)
-    )
+    assert sorted(os.listdir(path)) == ["_DONE", "summary"]

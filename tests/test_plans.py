@@ -632,6 +632,74 @@ def test_q2_summary_layout_round_trips_and_prunes(spark):
     assert "q2sum_star" not in dispatched
 
 
+def _srt(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_q1_q2_above_the_knee_read_their_summaries(spark, tmp_path, monkeypatch):
+    """Past the row-count knee (footer count patched) the public q1 and
+    q2 ops plan straight onto their summary layouts, and each answers
+    exactly as its plain plan does. The fixtures are built first, fresh
+    in a private scratch and at the true row count: SF_SMALL's q1
+    summary has more groups than half its lineitem rows, the case the
+    removed probe flagged, and no degenerate marker is written."""
+    import os
+    from unittest import mock
+
+    from aced_etl_pod_spark.operators.aggs import (
+        _q1_plain_scan,
+        _q1_summary_fixture,
+        agg_group_sums,
+    )
+    from aced_etl_pod_spark.operators.joins import _q2_plain_star
+    from aced_etl_pod_spark.operators.scale_ops import _q2_summary_fixture
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    for path in (
+        _q1_summary_fixture(spark, SF_SMALL),
+        _q2_summary_fixture(spark, SF_SMALL),
+    ):
+        assert sorted(os.listdir(path)) == ["_DONE", "summary"]
+    with mock.patch(
+        "aced_etl_pod_spark.tables.table_row_count", return_value=4_000_000
+    ):
+        q1 = agg_group_sums(spark, SF_SMALL)
+        q2 = join_multiway_star(spark, SF_SMALL)
+    assert "q1sum_lineitem" in _plan(q1) and "lineitem.parquet" not in _plan(q1)
+    assert "q2sum_star" in _plan(q2) and "orders.parquet" not in _plan(q2)
+    assert _srt(q1) == _srt(_q1_plain_scan(spark, SF_SMALL))
+    assert _srt(q2) == _srt(_q2_plain_star(spark, SF_SMALL))
+
+
+def test_q10_wide_type_domain_falls_back_to_the_pair_plan(spark):
+    """With more than 62 event types (the mask width) every q10 path
+    answers through the pair plan: above both knees the dispatcher and
+    the two mask ops each equal the unpatched op, and none re-enters
+    the dispatcher (which recursed without end before)."""
+    from unittest import mock
+
+    from aced_etl_pod_spark.operators import aggs
+
+    want = _srt(aggs.agg_distinct_count(spark, SF_SMALL))
+    wide = tuple(f"type{i:02d}" for i in range(63))
+    for n_events in (1_000_000, 4_000_000):
+        with (
+            mock.patch(
+                "aced_etl_pod_spark.tables.table_row_count",
+                return_value=n_events,
+            ),
+            mock.patch.object(aggs, "_event_type_dictionary", return_value=wide),
+        ):
+            dfs = [
+                aggs.agg_distinct_count(spark, SF_SMALL),
+                aggs.agg_distinct_count_bitmask(spark, SF_SMALL),
+                aggs.agg_distinct_count_mask_ingest(spark, SF_SMALL),
+            ]
+        for df in dfs:
+            assert "events.parquet" in _plan(df)
+            assert _srt(df) == want
+
+
 def test_q8_packed_layout_round_trips_and_prunes(spark):
     """Round-12 (optimization session 2) q8 packed-layout pins: the
     packed-kernel result is bit-identical to the list-column kernels at
