@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_WS = b" \t\r\n"
-
 
 def _read_token(data: bytes, pos: int) -> tuple[bytes, int]:
     """Read one whitespace-delimited PPM header token starting at ``pos``,

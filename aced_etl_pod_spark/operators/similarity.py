@@ -313,14 +313,11 @@ def sim_knn_all_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k). Below the knee the plain plan is unchanged; results are
     identical on every path (asserted across plain/salted + oracle in
     tools/hotblock_ladder.py)."""
-    import math
-
     from aced_etl_pod_spark.tables import table_row_count
 
     n = table_row_count(sf_dir, "embeddings")
     if n >= _KNN_SALT_MIN_VECS:
-        k_salt = min(32, max(2, math.ceil(math.sqrt(n / 10_000))))
-        return _knn_all_pairs_salted(spark, sf_dir, k_salt)
+        return _knn_all_pairs_salted(spark, sf_dir, _knn_salt_width(n))
     return _knn_all_pairs_plain(spark, sf_dir)
 
 
@@ -359,6 +356,14 @@ def _knn_all_pairs_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cell at a replication cost of k_salt× on ONE side (§2.5: salt the key,
 # explode one side k ways).
 _KNN_SALT_MIN_VECS = 50_000
+
+
+def _knn_salt_width(n: int) -> int:
+    """Salt-grid width k_salt for n vectors: ceil(sqrt(n / 10k)), kept
+    in [2, 32]."""
+    import math
+
+    return min(32, max(2, math.ceil(math.sqrt(n / 10_000))))
 
 
 def _knn_all_pairs_salted(

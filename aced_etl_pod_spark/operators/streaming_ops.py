@@ -992,18 +992,19 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # PLAN TWINS for the streaming-ONLY APIs (r8 verdict item 7).
 #
-# tools/plan_audit.py and tools/shuffle_budget.py audit stream_* ops
-# through batch twins. Most ops twin automatically (the replay harness is
-# patched: read_stream → spark.read, run_to_memory → identity). Six ops
-# use APIs with no mechanical batch substitution — raw writeStream,
-# applyInPandasWithState, a custom streaming source, the state-store
-# reader — so each declares an EXPLICIT twin here: the same transformation
-# chain, built with the batch API whose physical planning (exchanges,
-# aggregate modes, broadcast sides) Catalyst treats identically to the
-# per-micro-batch plan. Keeping the twins in this module (beside the ops
-# they mirror) keeps a future edit to an op's chain and its twin's chain
-# in one diff. Twins are PLAN-ONLY artifacts: never registered, never
-# executed by the audits (plans are built, not run).
+# tools/plan_audit.py plans stream_* ops through batch twins. Most ops
+# twin automatically (the replay harness is patched: read_stream →
+# spark.read, run_to_memory → identity). Six ops use APIs with no
+# mechanical batch substitution — raw writeStream, applyInPandasWithState,
+# a custom streaming source, the state-store reader — so each declares an
+# EXPLICIT twin here: the same transformation chain, built with the batch
+# API whose physical planning (exchanges, aggregate modes, broadcast
+# sides) Catalyst treats identically to the per-micro-batch plan. Keeping
+# the twins in this module (beside the ops they mirror) keeps a future
+# edit to an op's chain and its twin's chain in one diff. Twins are
+# PLAN-ONLY artifacts: never registered, never executed by the census
+# (plans are built, not run). A stream op that fails to plan is an error
+# of the census, never a skip.
 # ---------------------------------------------------------------------------
 
 
@@ -1131,8 +1132,8 @@ def _twin_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.crossJoin(F.broadcast(meta))
 
 
-# op_id → batch-plan builder, consumed by tools/plan_audit.py and
-# tools/shuffle_budget.py BEFORE the generic replay-patch path.
+# op_id → batch-plan builder, consumed by tools/plan_audit.py's
+# build_plan BEFORE the generic replay-patch path.
 PLAN_TWINS = {
     "stream_custom_stateful": _twin_custom_stateful,
     "stream_checked_ingest_dlq": _twin_checked_ingest_dlq,

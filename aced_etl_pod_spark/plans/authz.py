@@ -3,14 +3,10 @@
 The reference gates jobs on a user profile: resource-path membership plus a
 method/service grant (``_can_create`` etl-job/fhir_import_export.py:62-102,
 ``_can_read`` :105-145; docs/project-access.txt). In a Spark engine that
-reduces to (a) a pure predicate on the job parameters, and (b) row-level
-security: a broadcast set of permitted project_ids applied as a filter.
+reduces to a pure predicate on the job parameters.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def split_project_id(project_id: str) -> tuple[str, str]:
@@ -49,10 +45,3 @@ def can_create(user: dict, project_id: str) -> bool:
 def can_read(user: dict, project_id: str) -> bool:
     """Mirror of ``_can_read`` (fhir_import_export.py:105-145)."""
     return _check(user, project_id, "read-storage")
-
-
-def readable_projects_filter(user: dict, all_project_ids: list[str]) -> Column:
-    """Row-level security: the set of project_ids the user may read, as a
-    filter predicate (broadcast-small by construction)."""
-    allowed = [p for p in all_project_ids if can_read(user, p)]
-    return F.col("project_id").isin(allowed) if allowed else F.lit(False)

@@ -21,10 +21,12 @@ from tests.conftest import SF_SMALL
 REG = registry()
 
 
-def _sf_dir_with(tmp_path, table_sql: dict[str, str]) -> str:
+def _sf_dir_with(tmp_path, monkeypatch, table_sql: dict[str, str]) -> str:
     """A miniature sf dir: the given tables materialized as single
     parquet FILES via DuckDB (the oracle harness globs single files),
-    everything else symlinked from SF_SMALL."""
+    everything else symlinked from SF_SMALL. Fixtures built for the
+    test go to a scratch under ``tmp_path`` and are removed with it."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
     out = str(tmp_path / "sf")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
@@ -41,7 +43,7 @@ def _srt(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_levenshtein_block_cap_drops_degenerate_block(spark, tmp_path):
+def test_levenshtein_block_cap_drops_degenerate_block(spark, tmp_path, monkeypatch):
     """One (lang, length-bucket) block past LEV_BLOCK_CAP is dropped by
     BOTH engines (the cap is declared in the oracle too); the normal
     blocks' pairs are untouched."""
@@ -50,6 +52,7 @@ def test_levenshtein_block_cap_drops_degenerate_block(spark, tmp_path):
     hot_n = LEV_BLOCK_CAP + 4
     sf = _sf_dir_with(
         tmp_path,
+        monkeypatch,
         {
             "documents": f"""
             SELECT 1000 + i AS doc_id,
@@ -132,7 +135,7 @@ def test_triangle_degree_orientation_bounds_hub_wedges(spark):
     )
 
 
-def test_q2_degenerate_probe_short_circuits(spark, tmp_path):
+def test_q2_degenerate_probe_short_circuits(spark, tmp_path, monkeypatch):
     """A near-unique nationkey domain no longer needs a probe: the
     summary holds at most one row per distinct nationkey, so it is never
     larger than the orders-customer join it replaces and still answers
@@ -152,6 +155,7 @@ def test_q2_degenerate_probe_short_circuits(spark, tmp_path):
 
     sf = _sf_dir_with(
         tmp_path,
+        monkeypatch,
         {
             # orders >> customers, and the nationkey domain is near-
             # unique per customer (25 joinable keys + a long synthetic

@@ -22,10 +22,15 @@ from tests.conftest import SF_SMALL
 REG = registry()
 
 
-def _combined_dir(tmp_path, table: str, delta_sql: str | None) -> str:
+def _combined_dir(
+    tmp_path, monkeypatch, table: str, delta_sql: str | None
+) -> str:
     """A sf dir whose ``table`` = SF_SMALL's rows ⧺ delta rows (single
     parquet file), everything else symlinked — the input a FULL rebuild
-    sees, and the oracle's ground truth for the merged fixture."""
+    sees, and the oracle's ground truth for the merged fixture. Fixtures
+    built for the test go to a scratch under ``tmp_path`` and are
+    removed with it."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
     out = str(tmp_path / "combined")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
@@ -55,7 +60,7 @@ EVENTS_DELTA_SQL = """
 """
 
 
-def test_mask_delta_merge_equals_full_rebuild(spark, tmp_path):
+def test_mask_delta_merge_equals_full_rebuild(spark, tmp_path, monkeypatch):
     from aced_etl_pod_spark.operators.aggs import (
         _user_mask_fixture,
         mask_table_counts,
@@ -63,7 +68,7 @@ def test_mask_delta_merge_equals_full_rebuild(spark, tmp_path):
     )
     from aced_etl_pod_spark.tables import load
 
-    combined = _combined_dir(tmp_path, "events", EVENTS_DELTA_SQL)
+    combined = _combined_dir(tmp_path, monkeypatch, "events", EVENTS_DELTA_SQL)
     base_fix = _user_mask_fixture(spark, SF_SMALL)
     assert base_fix is not None
 
@@ -154,7 +159,9 @@ def test_mask_delta_degenerate_sweeps(spark, tmp_path):
     )
 
 
-def test_q1_summary_delta_merge_equals_full_rebuild(spark, tmp_path):
+def test_q1_summary_delta_merge_equals_full_rebuild(
+    spark, tmp_path, monkeypatch
+):
     from aced_etl_pod_spark.operators.aggs import (
         _q1_summary_fixture,
         merge_q1_summary_delta,
@@ -174,7 +181,7 @@ def test_q1_summary_delta_merge_equals_full_rebuild(spark, tmp_path):
         SELECT {', '.join(c if c != 'l_orderkey' else 'l_orderkey + 900000 AS l_orderkey' for c in cols)}
         FROM '{SF_SMALL}/lineitem.parquet' USING SAMPLE 20% (reservoir, 7)
     """
-    combined = _combined_dir(tmp_path, "lineitem", delta_sql)
+    combined = _combined_dir(tmp_path, monkeypatch, "lineitem", delta_sql)
 
     base_fix = _q1_summary_fixture(spark, SF_SMALL)
     delta = load(spark, combined, "lineitem").filter(

@@ -328,14 +328,12 @@ def test_semdedup_assignment_sweep_is_shuffle_free(spark):
 
 def test_shuffle_budget_subset(spark):
     """The committed shuffle budget (docs/SHUFFLE_BUDGET.json, regenerated
-    by tools/shuffle_budget.py) matches the live plans of a representative
-    op slice — a refactor that adds an exchange to a core op fails here
-    before the full per-round tool run would catch it."""
+    by ``tools/plan_audit.py --write``) matches the live plans of a
+    representative op slice — a refactor that adds an exchange to a core
+    op fails here before the full census would catch it."""
     import json
-    import os
 
-    from aced_etl_pod_spark.registry import registry
-    from tools.shuffle_budget import BUDGET_PATH, build_plan, count_exchanges
+    from tools.plan_audit import BUDGET_PATH, build_plan, count_exchanges
 
     subset = [
         "agg_group_sums",          # bench q1: scan + 1 hash agg exchange
@@ -351,9 +349,8 @@ def test_shuffle_budget_subset(spark):
     ]
     with open(BUDGET_PATH) as f:
         budget = json.load(f)
-    reg = registry()
     for op_id in subset:
-        live = count_exchanges(build_plan(spark, op_id, reg[op_id].fn))
+        live = count_exchanges(build_plan(spark, op_id))
         assert live["shuffle"] <= budget[op_id]["shuffle"], (
             f"{op_id}: {live['shuffle']} shuffle exchanges vs budget "
             f"{budget[op_id]['shuffle']}"
@@ -361,25 +358,64 @@ def test_shuffle_budget_subset(spark):
 
 
 def test_shuffle_budget_covers_census():
-    """Every registered op has a recorded budget, except the 4 streaming
-    ops with no batch twin (streaming-only APIs)."""
+    """Every registered op has a recorded budget and every budget entry
+    is a registered op (the streaming-only ops are planned through their
+    batch twins, streaming_ops.PLAN_TWINS)."""
     import json
 
     from aced_etl_pod_spark.registry import registry
-    from tools.shuffle_budget import BUDGET_PATH
+    from tools.plan_audit import BUDGET_PATH
 
-    no_twin = {
-        "stream_custom_stateful",
-        "stream_checked_ingest_dlq",
-        "stream_python_datasource",
-        "stream_checkpoint_restart",
-        "stream_dedup_within_watermark",  # dropDuplicatesWithinWatermark is streaming-only
-        "stream_state_store_reader",  # statestore read needs a real checkpoint
-    }
     with open(BUDGET_PATH) as f:
         budget = json.load(f)
-    missing = set(registry()) - set(budget) - no_twin
-    assert not missing, f"ops missing from shuffle budget: {sorted(missing)}"
+    assert set(registry()) == set(budget)
+
+
+def _census(spark, monkeypatch, ops: dict, budget: dict, tmp_path, argv):
+    """Run tools/plan_audit.py's census in this session over the registry
+    ``ops`` against the budget file ``budget``."""
+    import json
+
+    from tools import plan_audit
+
+    path = tmp_path / "budget.json"
+    path.write_text(json.dumps(budget))
+    monkeypatch.setattr(plan_audit, "BUDGET_PATH", str(path))
+    monkeypatch.setattr(plan_audit, "registry", lambda: ops)
+    monkeypatch.setattr(plan_audit, "get_spark", lambda app: spark)
+    return plan_audit.main(argv)
+
+
+def test_plan_census_reports_stream_op_that_fails_to_plan(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """A stream_* op that raises while planning is an ERR line and exit 1,
+    not a silent skip."""
+    from aced_etl_pod_spark.registry import Op
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("no plan")
+
+    ops = {"stream_boom": Op("stream_boom", boom, None)}
+    rc = _census(spark, monkeypatch, ops, {}, tmp_path, ["stream_boom"])
+    assert rc == 1
+    assert "ERR  stream_boom: RuntimeError: no plan" in capsys.readouterr().out
+
+
+def test_plan_census_fails_on_budgeted_op_it_did_not_check(
+    spark, monkeypatch, tmp_path, capsys
+):
+    """A full census exits 1 when the budget names an op it did not plan;
+    the same census without that entry passes."""
+    from aced_etl_pod_spark.registry import registry
+
+    ops = {"agg_group_sums": registry()["agg_group_sums"]}
+    counts = {"agg_group_sums": {"broadcast": 0, "shuffle": 1}}
+    gone = {"gone_op": {"broadcast": 0, "shuffle": 0}}
+    assert _census(spark, monkeypatch, ops, counts, tmp_path, []) == 0
+    rc = _census(spark, monkeypatch, ops, {**counts, **gone}, tmp_path, [])
+    assert rc == 1
+    assert "MISSING   gone_op" in capsys.readouterr().out
 
 
 def test_bench_ladder_fixture_preserves_join_integrity(tmp_path, monkeypatch):

@@ -1,6 +1,7 @@
 """The injection of ``tools/sweep.py``, checked on the written tables alone
 (pyarrow, no Spark): every kind is deterministic, poisons only the
-columns it names, and the row kinds keep every table's schema."""
+columns it names, and the row kinds keep every table's schema. One run
+through Spark checks that a kind's fixtures go with its tables."""
 
 from __future__ import annotations
 
@@ -75,3 +76,21 @@ def test_row_kinds_keep_every_schema(kind, tmp_path):
         assert got.num_rows == sweep.ROWS[kind]
         want = _source(t).schema.remove_metadata()
         assert got.schema.remove_metadata().equals(want), t
+
+
+def test_sweep_leaves_no_fixture_in_shared_scratch(spark, tmp_path, monkeypatch):
+    """Fixtures an op builds on a kind's injected tables are published in
+    that kind's own scratch and removed with it: the shared scratch gains
+    no ``q1sum_lineitem_sweep_*`` dir."""
+    shared = tmp_path / "shared"
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(shared))
+    monkeypatch.setattr(
+        "aced_etl_pod_spark.session.get_spark", lambda app: spark
+    )
+    monkeypatch.setattr(
+        "sys.argv",
+        ["sweep.py", "agg_group_sums_summary_ingest", "--kind", "empty"],
+    )
+    assert sweep.main() == 0
+    assert os.environ["SPARK_GRAFT_SCRATCH"] == str(shared)
+    assert not list(shared.glob("q1sum_lineitem_sweep_*"))

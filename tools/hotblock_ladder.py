@@ -231,15 +231,17 @@ def run_knn(spark, scale: int, reps: int, with_plain: bool) -> dict:
     import math
 
     from aced_etl_pod_spark.operators.similarity import (
+        _KNN_SALT_MIN_VECS,
         _knn_all_pairs_plain,
         _knn_all_pairs_salted,
+        _knn_salt_width,
         sim_knn_all_pairs_topk,
     )
     from aced_etl_pod_spark.tables import table_row_count
 
     sf = build_embeddings_hot(scale)
     n = table_row_count(sf, "embeddings")
-    k_salt = min(32, max(2, math.ceil(math.sqrt(n / 10_000))))
+    k_salt = _knn_salt_width(n)
     con = duckdb.connect()
     hot = con.execute(
         f"""SELECT max(c) FROM (SELECT count(*) AS c
@@ -257,7 +259,7 @@ def run_knn(spark, scale: int, reps: int, with_plain: bool) -> dict:
         "n_vectors": n,
         "hot_label_rows": int(hot),
         "k_salt": k_salt,
-        "dispatches_salted": n >= 50_000,
+        "dispatches_salted": n >= _KNN_SALT_MIN_VECS,
         # per-cell candidate pairs: the query side replicates into EVERY
         # cell, so a cell enumerates hot × ceil(hot/k_salt) pairs — the
         # salt spreads the hot label's total pair work over k_salt tasks
@@ -285,7 +287,7 @@ def run_knn(spark, scale: int, reps: int, with_plain: bool) -> dict:
         assert p_rows == s_rows, (
             "salted plan diverged from plain all-pairs plan"
         )
-    if n >= 50_000:
+    if n >= _KNN_SALT_MIN_VECS:
         # the public op must dispatch to the salted plan on this input
         assert srt(sim_knn_all_pairs_topk(spark, sf)) == s_rows
     return out

@@ -27,14 +27,13 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
+from aced_etl_pod_spark import ladder  # noqa: E402
 from aced_etl_pod_spark.session import get_spark  # noqa: E402
 from aced_etl_pod_spark.sources.binary import sample_ppm_frames  # noqa: E402
 from aced_etl_pod_spark.tables import session_scratch_dir  # noqa: E402
@@ -89,15 +88,6 @@ def gen_wav(n: int, sub: str) -> tuple[str, int]:
         with open(os.path.join(out, f"clip_{i:04d}.wav"), "wb") as f:
             f.write(blob)
     return out, total
-
-
-def timed(fn, reps: int) -> float:
-    times = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times)
 
 
 def main() -> int:
@@ -163,7 +153,9 @@ def main() -> int:
             src, nbytes = gen(n, f"mmladder_{kernel}_{scale}")
             glob = "*.ppm" if kernel.startswith("ppm") else "*.wav"
             df = read_binary(spark, src, glob=glob).select("path", "content")
-            med = timed(lambda: stage(df).agg(F.count("*")).collect(), args.reps)
+            med = ladder.median_s(
+                lambda: stage(df).agg(F.count("*")).collect(), args.reps, warm=0
+            )
             pts.append((nbytes, med))
             print(f"{kernel} {scale}: {nbytes / 1e6:.1f} MB in {med * 1e3:.0f} ms "
                   f"({nbytes / med / 1e6:.0f} MB/s incl. floor)", flush=True)

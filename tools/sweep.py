@@ -4,7 +4,8 @@
                           [--count 40] [--key N] [--list] [op_id ...]
 
 Each kind rewrites the sf0.001 tables into a temporary sf dir, then every
-checked operator runs against it in ONE Spark session:
+checked operator runs against it in ONE Spark session (fixtures the ops
+build on it go to a scratch removed with it):
 
   null       10% NULLs in every non-identity column (foreign keys at half
              rate; primary identities stay intact — nulling them is row
@@ -46,6 +47,7 @@ import re
 import sys
 import tempfile
 import zlib
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -248,11 +250,17 @@ def main() -> int:
     failed = []
     for kind in args.kind:
         print(f"\n== {kind} sweep ==", flush=True)
-        with tempfile.TemporaryDirectory(prefix=f"sweep_{kind}_") as sf:
+        with tempfile.TemporaryDirectory(prefix=f"sweep_{kind}_") as tmp:
+            sf = os.path.join(tmp, f"sweep_{kind}")
+            os.makedirs(sf)
             build(kind, sf)
             con = duck_con(sf) if kind in PARITY else None
-            if run_ops(spark, sf, ops, con, f"{kind} sweep"):
-                failed.append(kind)
+            # fixtures built on the kind's tables go with them, not into
+            # the shared scratch, where no later build would evict them
+            scratch = {"SPARK_GRAFT_SCRATCH": os.path.join(tmp, "scratch")}
+            with mock.patch.dict(os.environ, scratch):
+                if run_ops(spark, sf, ops, con, f"{kind} sweep"):
+                    failed.append(kind)
     if failed:
         print(f"\nSWEEP RED: {', '.join(failed)}")
         return 1
